@@ -431,7 +431,7 @@ object Bench {
       graft.sink.OntologyWriter.write(spark, src,
         graft.model.OntologyJob("W", None, outFile, loadOnCuis = false),
         graft.sink.UmlsExportConfig(umlsVersion = "2026AA",
-          includeSemanticTypes = false, distributedWrite = true),
+          includeSemanticTypes = false),
         outFile, Map.empty, "")
       def rm(f: java.io.File): Unit = {
         val kids = f.listFiles(); if (kids != null) kids.foreach(rm)

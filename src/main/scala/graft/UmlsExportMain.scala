@@ -15,7 +15,13 @@ import graft.sources.{ConfManifest, UmlsSource}
   * Usage:
   *   runMain graft.UmlsExportMain <sourceDir> <umls.conf> <outDir> <umlsVersion>
   *       [--strict] [--only-current] [--no-dedupe] [--parallel N]
-  *       [--distributed-write] [--shared-scan] [--master local[*]]
+  *       [--shared-scan] [--master M]
+  *
+  * `--strict` fails on empty CODEs, ambiguous AUIs and unmapped languages;
+  * `--only-current` skips ontologies whose MRSAB record is not the
+  * current version; `--no-dedupe` keeps duplicate triples; `--parallel N`
+  * exports N ontologies at once; `--master M` sets the Spark master
+  * (default `local[*]`).
   *
   * `--shared-scan` reads each fat table once for the whole manifest
   * ([[graft.sources.UmlsSource.sharedScan]]) — the win for
@@ -32,7 +38,8 @@ object UmlsExportMain {
     if (args.length < 4) {
       System.err.println(
         "usage: UmlsExportMain <sourceDir> <umls.conf> <outDir> <umlsVersion>" +
-          " [--strict] [--only-current] [--no-dedupe] [--master M]")
+          " [--strict] [--only-current] [--no-dedupe] [--parallel N]" +
+          " [--shared-scan] [--master M]")
       sys.exit(2)
     }
     val Array(sourceDir, confPath, outDir, version) = args.take(4)
@@ -67,8 +74,7 @@ object UmlsExportMain {
           umlsVersion = version,
           dedupeTriples = !flags.contains("--no-dedupe"),
           processOnlyCurrentVersion = flags.contains("--only-current"),
-          strict = flags.contains("--strict"),
-          distributedWrite = flags.contains("--distributed-write")),
+          strict = flags.contains("--strict")),
         parallelism = parallel,
         sharedScan = flags.contains("--shared-scan"))
       val reports = new UmlsPipeline(spark, source, jobs, config).run()

@@ -1,22 +1,11 @@
 package graft.assemble
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.model._
 import graft.sources.UmlsSource
-
-/** Intermediate grouped shape before prefLabel selection. */
-final case class AssembledRaw(
-    code: String,
-    atoms: Seq[AtomRow],
-    rels: Seq[RelOut],
-    defs: Seq[String],
-    atts: Seq[AttOut],
-    tuis: Seq[String],
-    isRoot: Boolean,
-    treeParents: Seq[String])
 
 /** Assembles per-code concept rows from the UMLS tables for one SAB —
   * the Spark-first re-expression of `UmlsOntology.load_tables` + `terms()`
@@ -107,7 +96,7 @@ class ConceptAssembler(
     * which must be non-empty (Python falsiness — '' raises too; the
     * reference raises AttributeError). Such atoms become NULL here and are
     * dropped by the filter in [[atoms]]; strict mode surfaces them via
-    * [[invalidCodeAtoms]] (see [[concepts]]). */
+    * [[invalidCodeAtoms]] (see [[assembled]]). */
   private def codeExpr =
     if (loadOnCuis) col("CUI")
     else when(length(col("CODE")) > 0, col("CODE"))
@@ -283,71 +272,46 @@ class ConceptAssembler(
     * to more than one distinct code. The reference raises
     * "more than one or none codes" (`umls2rdf.py:715-716`) when a rel
     * endpoint resolves ambiguously; here the same condition is a queryable
-    * validation relation, enforced by `concepts(strict = true)`. */
+    * validation relation, enforced by `assembled(strict = true)`. */
   def auiCardinalityViolations: DataFrame =
     atomIdCode.groupBy("atom_id")
       .agg(countDistinct("atom_code").as("n_codes"))
       .filter(col("n_codes") > 1)
 
-  /** The assembled concepts: one row per code (A1), all child collections
-    * joined in.
-    *
-    * @param strict reproduce the reference's hard asserts: fail if any atom
-    *   has an empty CODE (`umls2rdf.py:142-147`) or any AUI resolves to >1
-    *   code (`umls2rdf.py:715-716`) instead of silently dropping.
-    */
-  def concepts(strict: Boolean = false): Dataset[UmlsConceptRow] = {
-    val rankMap = rankByTty
-    val onCuis = loadOnCuis
-    import org.apache.spark.sql.Encoders
-    assembled(strict).map(raw => ConceptAssembler.finish(raw, rankMap, onCuis))(
-      Encoders.product[UmlsConceptRow])
-  }
-
-  /** Column-algebra finishing — the codegen twin of
-    * [[ConceptAssembler.finish]]: canonical atom order, prefLabel
-    * selection (A7/A8/A9 branch-for-branch), distinct sorted
-    * altLabels/CUIs/TUIs — as array expressions over the grouped shape,
-    * so the scale path (q25s, any whole-corpus pre-pass) stays inside
-    * whole-stage codegen instead of round-tripping every class through
-    * the product encoder (the encoder map measured ~2× the whole
-    * assembly's cost at 600k atoms). The typed [[concepts]] remains the
-    * per-term unit the sink's `Try` wraps (S6); equality of the two
-    * paths is spec-pinned (`ConceptAssemblerSpec`).
-    *
-    * Output columns match [[UmlsConceptRow]] field-for-field. */
-  def conceptsColumns(strict: Boolean = false): DataFrame = {
-    // The raising twin of [[conceptsColumnsTry]]: any per-term finishing
-    // failure (err non-null) raises with the SAME message the typed
-    // path's IllegalStateException carries.
+  /** The finished concepts, raising on the first per-term finishing
+    * failure — a thin view over [[conceptsColumnsTry]] that raises with
+    * its `__finish_err` text. Output columns match [[UmlsConceptRow]]
+    * field-for-field. */
+  def conceptsColumns(strict: Boolean = false): DataFrame =
     conceptsColumnsTry(strict)
       .withColumn("prefLabel",
         when(col("__finish_err").isNotNull,
           raise_error(col("__finish_err")).cast("string"))
           .otherwise(col("prefLabel")))
       .drop("__finish_err")
-  }
 
-  /** [[conceptsColumns]] with per-term error TOLERANCE (r20): instead
-    * of raising, finishing failures surface as a `__finish_err` string
-    * column (NULL on success; `prefLabel` NULL on failure) carrying
-    * exactly the typed path's exception message. This is what lets the
-    * SINK consume the whole-stage-codegen finishing plan while keeping
-    * the S6 per-term error contract (`umls2rdf.py:764-771`) — the
-    * typed route decoded ~30 atom structs per class through the
-    * product encoder just so a Scala `Try` could wrap `finish`
-    * (ProfileExport measured the decode+finish map at ~2× the assembly
-    * cost at 600k atoms). Equality with the typed path — values AND
-    * error messages — is spec-pinned (`ConceptAssemblerSpec`). */
+  /** Per-class finishing, the export's only finishing code: canonical
+    * atom order, prefLabel selection (A7/A8/A9 branch-for-branch),
+    * distinct sorted altLabels/CUIs/TUIs — as array expressions over the
+    * grouped shape, so finishing stays inside whole-stage codegen (a
+    * typed decode of ~30 atom structs per class through the product
+    * encoder measured ~2× the whole assembly's cost at 600k atoms).
+    *
+    * Per-term failures do not raise: they surface as a `__finish_err`
+    * string column (NULL on success; `prefLabel` NULL on failure) holding
+    * the full `<exception class>: <message>` text the sink logs — the S6
+    * per-term error contract (`umls2rdf.py:764-771`). Values and error
+    * texts are spec-pinned against a typed test oracle
+    * (`ConceptAssemblerSpec`). */
   def conceptsColumnsTry(strict: Boolean = false): DataFrame = {
     val rankMap = rankByTty
-    val raw = assembled(strict).toDF()
+    val raw = assembled(strict)
     val schema = raw.schema
     def emptyLike(c: String) =
       array().cast(schema(schema.fieldIndex(c)).dataType)
     // Canonical (aui, cui) order: the atom struct leads with those keys
-    // by construction (AtomRow field-order note), so the sort runs on the
-    // raw structs — no per-atom key rebuild, no unwrap transform.
+    // by construction (see [[groupCollectAtoms]]), so the sort runs on
+    // the raw structs — no per-atom key rebuild, no unwrap transform.
     val sortedAtoms = array_sort(col("atoms"))
     val withSorted = raw.withColumn("atoms_sorted", sortedAtoms)
     val atomsS = col("atoms_sorted")
@@ -371,19 +335,17 @@ class ConceptAssembler(
           .otherwise(first),
           lit(null).cast("string"))
       } else if (rankMap.nonEmpty) {
-        // A7 argmax; FIRST max in canonical order (the typed path's maxBy
+        // A7 argmax; FIRST max in canonical order (a stable maxBy's
         // tie-break) = array_position's first-occurrence pick. One rank
-        // lookup per atom (the old struct-accumulator aggregate evaluated
-        // it twice), no per-step struct rebuilds. A missing TTY fails the
-        // term like the reference's KeyError — message identical to the
-        // typed path's throw, keyed on the FIRST missing atom in
-        // canonical order (= the typed map's first-thrown atom).
+        // lookup per atom, no per-step struct rebuilds. A missing TTY
+        // fails the term like the reference's KeyError, keyed on the
+        // FIRST missing atom in canonical order.
         val rankLit = typedLit(rankMap)
         val missing = filter(atomsS,
           a => element_at(rankLit, a.getField("tty")).isNull)
         val err = when(size(missing) > 0,
-          concat(lit("TTY "), element_at(missing, 1).getField("tty"),
-            lit(" not in MRRANK")))
+          concat(lit(s"${ConceptAssembler.FinishError}TTY "),
+            element_at(missing, 1).getField("tty"), lit(" not in MRRANK")))
         val ranks = transform(atomsS,
           a => element_at(rankLit, a.getField("tty")))
         val pref = element_at(atomsS,
@@ -394,7 +356,7 @@ class ConceptAssembler(
         // A9: empty MRRANK requires exactly one 'P'-TTY atom.
         val prefAtoms = filter(atomsS, a => a.getField("tty").contains("P"))
         val err = when(size(prefAtoms) =!= 1,
-          lit("Unable to select pref label"))
+          lit(s"${ConceptAssembler.FinishError}Unable to select pref label"))
         (when(err.isNull, element_at(prefAtoms, 1).getField("str")), err)
       }
     withSorted
@@ -426,12 +388,18 @@ class ConceptAssembler(
     * hot code's atoms build partial arrays on `saltBuckets` parallel
     * tasks; stage two concatenates those pre-built arrays — the hot
     * reducer now receives `saltBuckets` rows instead of one row per atom.
-    * Value-identical to the unsalted path because every consumer
-    * canonically re-sorts the atom array ([[conceptsColumns]] /
-    * [[ConceptAssembler.finish]]); equality is spec-pinned. */
+    * Value-identical to the unsalted path because finishing canonically
+    * re-sorts the atom array ([[conceptsColumnsTry]]); equality is
+    * spec-pinned.
+    *
+    * The atom struct carries only the fields finishing reads (prefLabel
+    * keys ispref/stt/tty, canonical-order keys aui/cui, the label); the
+    * grouping code rides the group key, not each atom. Field ORDER is
+    * load-bearing: `(aui, cui)` lead, so the canonical intra-class sort
+    * is a plain `array_sort` over the raw structs (struct comparison is
+    * field-by-field, and AUI is MRCONSO's primary key, so the prefix is
+    * already a total order). */
   private def groupCollectAtoms(a: DataFrame): DataFrame = {
-    // (aui, cui) lead the struct so array_sort over the raw structs IS the
-    // canonical order — see the AtomRow field-order note.
     val atomStruct = struct(
       col("AUI").as("aui"), col("CUI").as("cui"),
       col("STT").as("stt"), col("ISPREF").as("ispref"),
@@ -447,10 +415,15 @@ class ConceptAssembler(
         .agg(flatten(collect_list(col("partial"))).as("atoms"))
   }
 
-  /** The grouped-and-joined shape BEFORE per-class finishing — exposed so
-    * the sink can wrap finish+render in a per-term Try (S6 error
-    * tolerance, `umls2rdf.py:764-771`). */
-  def assembled(strict: Boolean = false): Dataset[AssembledRaw] = {
+  /** The grouped-and-joined shape BEFORE per-class finishing: one row per
+    * code (A1) — `code`, `atoms`, `rels`, `defs`, `atts`, `tuis`,
+    * `isRoot`, `treeParents`, with every child collection joined in.
+    *
+    * @param strict reproduce the reference's hard asserts: fail if any atom
+    *   has an empty CODE (`umls2rdf.py:142-147`) or any AUI resolves to >1
+    *   code (`umls2rdf.py:715-716`) instead of silently dropping.
+    */
+  def assembled(strict: Boolean = false): DataFrame = {
     if (strict && !loadOnCuis) {
       val badCodes = invalidCodeAtoms.count()
       if (badCodes > 0) throw new IllegalStateException(
@@ -460,8 +433,6 @@ class ConceptAssembler(
         s"$badAuis atom ids resolve to more than one code in SAB $sab")
     }
     val relsGrouped = relsGroupedWithRoots
-    // Only the finishing-step fields enter the collected struct (see
-    // [[AtomRow]]); the grouping code rides the group key, not each atom.
     val atomsGrouped = groupCollectAtoms(atomsShared)
     val tree =
       if (sab == "MSH") meshTree
@@ -477,8 +448,8 @@ class ConceptAssembler(
       .join(tuisByCode, col("code") === col("tcode"), "left")
       .join(tree, col("code") === col("child"), "left")
 
-    // Left joins leave absent child collections NULL; finish() treats NULL
-    // arrays as empty (cheaper than type-spelled coalesce literals).
+    // Left joins leave absent child collections NULL; finishing treats
+    // NULL arrays as empty.
     joined.select(
       col("code"),
       col("atoms"),
@@ -488,89 +459,15 @@ class ConceptAssembler(
       col("tuis"),
       coalesce(col("is_root"), lit(false)).as("isRoot"),
       col("parents").as("treeParents"))
-      .as[AssembledRaw]
   }
 }
 
 object ConceptAssembler {
 
-  /** Per-class finishing step: canonical atom order, prefLabel selection
-    * (A7/A8), distinct sorted altLabels (A3/F16), sorted distinct CUIs/TUIs
-    * (A5/A6). Pure function so the reference's class-level behavior tests
-    * can exercise it without a cluster.
-    */
-  def finish(raw: AssembledRaw, rankByTty: Map[String, Int],
-      loadOnCuis: Boolean): UmlsConceptRow = {
-    def orEmpty[T](xs: Seq[T]): Seq[T] = if (xs == null) Nil else xs
-    // Canonical intra-class order (determinism note in class doc).
-    // sortWith: same total order as sortBy((aui, cui)) without one key
-    // tuple per atom and boxed tuple compares (r20, guide §1.2; both
-    // sorts are stable TimSort, so ties — impossible anyway, AUI is the
-    // primary key — would order identically).
-    val atomsSorted = raw.atoms.sortWith { (x, y) =>
-      val c = x.aui.compareTo(y.aui)
-      (if (c != 0) c else x.cui.compareTo(y.cui)) < 0
-    }
-    val pref = PrefLabel.select(atomsSorted, rankByTty, loadOnCuis)
-    val alt = atomsSorted.map(_.str).distinct.filter(_ != pref).sorted
-    val cuis = atomsSorted.map(_.cui).distinct.sorted
-    UmlsConceptRow(
-      code = raw.code,
-      prefLabel = pref,
-      altLabels = alt,
-      defs = orEmpty(raw.defs),
-      cuis = cuis,
-      tuis = orEmpty(raw.tuis).sorted,
-      atts = orEmpty(raw.atts),
-      rels = orEmpty(raw.rels),
-      isRoot = raw.isRoot,
-      treeParents = orEmpty(raw.treeParents).sorted)
-  }
+  /** The class prefix of every `__finish_err` text. Columnar finishing
+    * throws nothing it could name, so its failures (the reference's
+    * KeyError / pref-label raise, `umls2rdf.py:320-332`) read as an
+    * `IllegalStateException`. */
+  private val FinishError = "IllegalStateException: "
 }
 
-/** `UmlsClass.getPrefLabel` (`umls2rdf.py:295-332`), ported branch-for-
-  * branch. "First atom" means first in the canonical (AUI-sorted) order.
-  */
-object PrefLabel {
-
-  def select(atoms: Seq[AtomRow], rankByTty: Map[String, Int],
-      loadOnCuis: Boolean): String =
-    if (loadOnCuis) cuisCascade(atoms) else codesRank(atoms, rankByTty)
-
-  /** Codes mode: MRRANK argmax (A7); stable on canonical order for rank
-    * ties. Empty MRRANK → require exactly one atom with 'P' in TTY (A9);
-    * otherwise fail like the reference ("Unable to select pref label"). */
-  private def codesRank(atoms: Seq[AtomRow],
-      rankByTty: Map[String, Int]): String = {
-    if (rankByTty.nonEmpty) {
-      // Missing TTY in MRRANK raised KeyError in the reference; surface
-      // the same condition as an explicit error.
-      val ranked = atoms.map { a =>
-        val r = rankByTty.getOrElse(a.tty,
-          throw new IllegalStateException(s"TTY ${a.tty} not in MRRANK"))
-        (r, a)
-      }
-      ranked.maxBy(_._1)(Ordering.Int)._2.str match { case s => s }
-    } else {
-      val prefAtoms = atoms.filter(_.tty.contains("P"))
-      if (prefAtoms.size == 1) prefAtoms.head.str
-      else throw new IllegalStateException("Unable to select pref label")
-    }
-  }
-
-  /** Cuis mode cascade (A8, `umls2rdf.py:296-319`). */
-  private def cuisCascade(atoms: Seq[AtomRow]): String = {
-    if (atoms.size == 1) return atoms.head.str
-    val labels = atoms.map(_.str).distinct
-    if (labels.size == 1) return labels.head
-    val isPref = atoms.filter(_.ispref == "Y")
-    if (isPref.isEmpty) return atoms.head.str
-    if (isPref.size == 1) return isPref.head.str
-    val prefPf = isPref.filter(_.stt == "PF")
-    if (prefPf.isEmpty) return atoms.head.str
-    if (prefPf.size == 1) return prefPf.head.str
-    val ttyP = atoms.filter(a => a.tty.nonEmpty && a.tty.head == 'P')
-    if (ttyP.size == 1) ttyP.head.str
-    else atoms.head.str
-  }
-}

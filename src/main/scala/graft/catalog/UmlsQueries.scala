@@ -31,7 +31,7 @@ object UmlsQueries {
     * strings — shared by the parquet-sourced (q25) and JDBC-sourced
     * (q189) entries so both verify against the SAME oracle SQL. */
   private def flatConcepts(asm: ConceptAssembler): DataFrame =
-    asm.concepts().toDF()
+    asm.conceptsColumns()
       .select(
         col("code"),
         col("prefLabel").as("pref_label"),
@@ -335,7 +335,7 @@ object UmlsQueries {
       (s, _) => {
         val asm = new ConceptAssembler(s, UmlsSource.parquet(s, FixtureDir),
           "CFX", loadOnCuis = true)
-        asm.concepts().toDF()
+        asm.conceptsColumns()
           .select(col("code"),
             col("prefLabel").as("pref_label"),
             array_join(col("altLabels"), "|").as("alt_labels"))
@@ -485,8 +485,6 @@ object UmlsQueries {
     Q("q25s_assembly_scale",
       (s, d) => {
         val asm = new ConceptAssembler(s, scaleSource(s, d), "BIG")
-        // Columnar finishing: the whole spine stays in whole-stage
-        // codegen (equality with the typed path is spec-pinned).
         // Materialize.cut before the display orderBy (r20, guide §1.2):
         // the global sort's range partitioner SAMPLES its child, so the
         // live join+finish subtree executed twice per run; the cut
@@ -531,9 +529,9 @@ object UmlsQueries {
     // thread) covers assemble → toRDF render → single-file write
     // (umls2rdf.py:586-789), so the bench needs an entry timing exactly
     // that S5/§3.1 composition, not assembly alone (q25s). Runs
-    // ConceptAssembler → ConceptRenderer → OntologyWriter in the
-    // distributed-write configuration (executors write sorted text parts,
-    // the driver concatenates bytes) over the q25s BIG source to a temp
+    // ConceptAssembler → ConceptRenderer → OntologyWriter (executors
+    // write sorted text parts, the driver concatenates bytes) over the
+    // q25s BIG source to a temp
     // dir, and returns the WriteReport as one row (rows-only by design:
     // the fixture e2e goldens pin the VALUES; this entry times the
     // dataflow at volume).
@@ -552,7 +550,7 @@ object UmlsQueries {
         val report = OntologyWriter.write(
           s, scaleSource(s, d), OntologyJob("BIG", None, outFile, false),
           UmlsExportConfig(umlsVersion = "2026AA",
-            includeSemanticTypes = false, distributedWrite = true),
+            includeSemanticTypes = false),
           outFile, docs, "")
         val bytes = new java.io.File(outFile).length()
         // The export ran eagerly above; nothing later reads the file, so
@@ -603,8 +601,7 @@ object UmlsQueries {
       None))
 
   /** The q25m dataflow, factored so UmlsPipelineSpec can drive it with a
-    * counting source: shared scan over `inner`, one distributed-write
-    * export per SAB on a fixed thread pool, reports returned in
+    * counting source: shared scan over `inner`, one export per SAB on a fixed thread pool, reports returned in
     * completion-independent (input) order. */
   private[graft] def multiSabExport(s: SparkSession,
       inner: UmlsSource, sabs: Seq[String], outDir: java.io.File,
@@ -630,7 +627,7 @@ object UmlsQueries {
           OntologyWriter.write(s, shared,
             OntologyJob(sab, None, outFile, loadOnCuis = false),
             UmlsExportConfig(umlsVersion = "2026AA",
-              includeSemanticTypes = false, distributedWrite = true),
+              includeSemanticTypes = false),
             outFile, docs, "")
         }
       }

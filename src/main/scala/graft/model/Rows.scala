@@ -7,24 +7,6 @@ package graft.model
   * fields, so one row = one fully-assembled concept.
   */
 
-/** One MRCONSO atom after SAB/LAT/SUPPRESS filtering — only the fields
-  * the finishing step reads (prefLabel selection keys ispref/stt/tty,
-  * canonical-order keys aui/cui, the label). The grouping code (CODE or
-  * CUI per load mode, `umls2rdf.py:142-147`) lives on [[AssembledRaw]]'s
-  * `code`, not per atom — carrying it per atom would shuffle the same
-  * string once per atom for nothing.
-  *
-  * Field ORDER is load-bearing: `(aui, cui)` lead so the canonical
-  * intra-class sort is a plain `array_sort` over the raw structs
-  * (struct comparison is field-by-field, and AUI is MRCONSO's primary
-  * key, so the prefix is already a total order) — no per-atom key-struct
-  * rebuild in the columnar finish. Encoders resolve nested fields by
-  * name, so the typed path is order-agnostic.
-  */
-final case class AtomRow(
-    aui: String, cui: String, stt: String, ispref: String,
-    tty: String, str: String)
-
 /** One MRREL relation after AUI→code resolution (J3, `umls2rdf.py:699-727`):
   * `codeSource`/`codeTarget` are the resolved endpoint codes. */
 final case class RelOut(

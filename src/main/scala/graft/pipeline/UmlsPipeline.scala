@@ -145,18 +145,19 @@ final class UmlsPipeline(
     step("validate_source")(validateSource())
 
     // Semantic-types prelude (`umls2rdf.py:844-852`): standalone file with
-    // roots; rootless variant appended to each ontology file.
-    val mrsty = effSource.table("MRSTY")
+    // roots; rootless variant appended to each ontology file. Both blocks
+    // render from one collect of MRSTY's graph, made only if one is needed.
+    lazy val sty = SemanticTypes.collect(effSource.table("MRSTY"))
     val styUrl = config.exportConf.baseUri + "STY/"
     val styFile = s"${config.outputDir}/umls_semantictypes.ttl"
     step("semantic_types") {
-      val withRoots = SemanticTypes.generate(mrsty, styUrl, withRoots = true)
+      val withRoots = SemanticTypes.render(sty, styUrl, withRoots = true)
       Files.write(Paths.get(styFile),
         (OntologyRender.Prefixes + withRoots).getBytes(StandardCharsets.UTF_8))
     }
     val semTypes =
       if (config.exportConf.includeSemanticTypes)
-        SemanticTypes.generate(mrsty, styUrl, withRoots = false)
+        SemanticTypes.render(sty, styUrl, withRoots = false)
       else ""
 
     // MRDOC pivot, shared across ontologies (`umls2rdf.py:853-864`).

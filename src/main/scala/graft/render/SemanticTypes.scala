@@ -46,16 +46,30 @@ object SemanticTypes {
       .distinct()
   }
 
-  /** Render the full STY Turtle block (`umls2rdf.py:161-189`). */
-  def generate(mrsty: DataFrame, styUrl: String, withRoots: Boolean): String = {
+  /** The semantic-type graph on the driver: `(TUI, STY)` per node in
+    * canonical (TUI, STN, STY) order, and each TUI's sorted parent TUIs. */
+  final case class Graph(
+      nodes: Seq[(String, String)], parents: Map[String, Seq[String]])
+
+  /** Collect the nodes and edges of MRSTY once; [[render]] builds both the
+    * with-roots and the rootless block from the result. */
+  def collect(mrsty: DataFrame): Graph = {
     val ns = nodes(mrsty).orderBy("TUI", "STN", "STY").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .map(r => (r.getString(0), r.getString(2))).toSeq
     val es = edges(mrsty).collect()
       .map(r => (r.getString(0), r.getString(1)))
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted.toSeq }
+    Graph(ns, es)
+  }
 
+  /** [[collect]] then [[render]], for a caller that needs one block. */
+  def generate(mrsty: DataFrame, styUrl: String, withRoots: Boolean): String =
+    render(collect(mrsty), styUrl, withRoots)
+
+  /** Render the full STY Turtle block (`umls2rdf.py:161-189`). */
+  def render(g: Graph, styUrl: String, withRoots: Boolean): String = {
     val out = Seq.newBuilder[String]
-    ns.foreach { case (tui, _, sty) =>
+    g.nodes.foreach { case (tui, sty) =>
       // DELIBERATE deviation (same rationale as OntologyRender.property):
       // the reference interpolates STY raw (`umls2rdf.py:180-184`) and
       // leaves corruption to the downstream rapper pass; real STY names
@@ -69,8 +83,8 @@ object SemanticTypes {
         lang = Some("en"))} .
 """
     }
-    ns.foreach { case (tui, _, _) =>
-      val parents = es.getOrElse(tui, Nil)
+    g.nodes.foreach { case (tui, _) =>
+      val parents = g.parents.getOrElse(tui, Nil)
       if (parents.isEmpty) {
         if (withRoots)
           out += s"<$styUrl$tui> rdfs:subClassOf owl:Thing ."

@@ -1,12 +1,13 @@
 package graft.sink
 
-import java.io.{BufferedWriter, File, FileOutputStream, OutputStreamWriter}
+import java.io.{File, FileOutputStream}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
 
 import graft.assemble.{ConceptAssembler, Mrsab, PropertyDoc}
 import graft.functions.TurtleFunctions.mapLang
@@ -22,10 +23,7 @@ final case class UmlsExportConfig(
     dedupeTriples: Boolean = true,
     includeSemanticTypes: Boolean = true,
     processOnlyCurrentVersion: Boolean = false,
-    strict: Boolean = false,
-    /** Executors write sorted text parts, the driver concatenates bytes —
-      * the multi-GB-per-file scale path (vs row-streaming the driver). */
-    distributedWrite: Boolean = false)
+    strict: Boolean = false)
 
 /** Per-ontology write outcome: term/error counts (S6) and the duplicate-
   * triple counters (A11, `umls2rdf.py:763-787`). `skipped` alone means the
@@ -40,17 +38,14 @@ final case class WriteReport(
 
 /** One rendered-or-failed term (S6, `umls2rdf.py:764-771`): exactly one of
   * `text`/`error` is set. */
-private[sink] final case class RenderResult(
+private[graft] final case class RenderResult(
     code: String, text: String, dupLiteral: Long, dupObject: Long,
     dupSubclass: Long, properties: Seq[TermProperty], error: String)
 
-/** The columnar-finished concept row the sink consumes (r20): the
+/** The columnar-finished concept row the sink consumes: the
   * [[graft.assemble.ConceptAssembler.conceptsColumnsTry]] output —
   * [[graft.model.UmlsConceptRow]] fields plus the per-term finishing
-  * error (`__finish_err`, NULL on success). Decoding this instead of
-  * the grouped [[graft.assemble.AssembledRaw]] keeps prefLabel
-  * selection and the distinct/sort passes inside whole-stage codegen
-  * and skips materializing ~30 atom structs per class. */
+  * error (`__finish_err`, NULL on success). */
 private[sink] final case class FinishedRow(
     code: String, prefLabel: String,
     altLabels: Seq[String], defs: Seq[String], cuis: Seq[String],
@@ -66,17 +61,17 @@ private[sink] final case class FinishedRow(
   * UTF-8 file per ontology — prefixes, MRSAB-fed header, class terms,
   * property block, semantic types.
   *
-  * Spark-first shape: assembly+render run distributed (narrow map over the
-  * assembled concepts); the driver streams the ordered result through
-  * `toLocalIterator` into a single file, which is the output contract (one
-  * `.ttl` per SAB). Term order is `orderBy(code)` — the reference emits
-  * dict-insertion order, unreproducible distributed (SURVEY.md §7.1.6);
-  * intra-term bytes are reference-equal.
+  * Spark-first shape: assembly, finishing and render run distributed;
+  * executors write the code-sorted term text as parts and the driver
+  * concatenates their bytes into the single file that is the output
+  * contract (one `.ttl` per SAB). Term order is `orderBy(code)` — the
+  * reference emits dict-insertion order, unreproducible distributed
+  * (SURVEY.md §7.1.6); intra-term bytes are reference-equal.
   */
 object OntologyWriter {
 
-  /** Max (code, error) pairs the distributed writer ships to the driver
-    * for the S6 error log; the total error COUNT stays exact past it. */
+  /** Max (code, error) pairs the writer ships to the driver for the S6
+    * error log; the total error COUNT stays exact past it. */
   private[sink] val ErrorLogCap = 1000
 
   def write(
@@ -122,18 +117,34 @@ object OntologyWriter {
       dedupe = conf.dedupeTriples,
       styUrl = conf.baseUri + "STY/")
 
-    // S6 per-term error tolerance (r20 shape): finishing failures ride
-    // the columnar plan as `__finish_err` (exactly the typed path's
-    // exception message); render stays under Try so one bad term
-    // cannot sink the file. Consuming conceptsColumnsTry instead of
-    // the grouped AssembledRaw keeps prefLabel selection and every
-    // distinct/sort inside whole-stage codegen — the typed decode
-    // (~30 atom structs per class) + Scala finish was the export's
-    // single largest per-row cost (ProfileExport, OPTIMIZATION_r20.md).
+    val parent = new File(outFile).getParentFile
+    if (parent != null) parent.mkdirs()
+    try writeParts(spark, rendered(assembler, cfg, conf.strict), job, rec, ns,
+      conf, outFile, propertyDocs, semanticTypes)
+    finally assembler.unpersistShared()
+  }
+
+  /** The export's rendered terms, in code order. S6 per-term error
+    * tolerance: finishing failures arrive as `__finish_err` texts, and
+    * render runs under `Try`, so one bad term cannot sink the file.
+    *
+    * Render ONCE: the global orderBy is a range exchange whose
+    * partitioner SAMPLES its child — with render as a live subtree below
+    * the sort, the whole assemble+finish+render map executed twice per
+    * export (40k render calls for a 20k-term export). Cutting lineage on
+    * the RENDERED rows materializes the per-term path exactly once; the
+    * sampling pass and the shuffle then re-scan flat (code, text) blocks.
+    * (The dual — sorting the finished rows and rendering above the
+    * exchange — measured worse: the nested atom/rel struct rows cost
+    * more to shuffle, sort and re-decode than the render pass saved.)
+    * Blocks are output-sized, MEMORY_AND_DISK, and freed by the
+    * ContextCleaner when the export returns; on elastic clusters the
+    * reliable-checkpoint knob applies (see Materialize). */
+  private[graft] def rendered(assembler: ConceptAssembler, cfg: RenderConfig,
+      strict: Boolean): Dataset[RenderResult] = {
     val renderOne: FinishedRow => RenderResult = { f =>
       if (f.__finish_err != null)
-        RenderResult(f.code, null, 0, 0, 0, Nil,
-          s"IllegalStateException: ${f.__finish_err}")
+        RenderResult(f.code, null, 0, 0, 0, Nil, f.__finish_err)
       else Try(ConceptRenderer.render(f.toConceptRow, cfg)) match {
         case Success(t) =>
           RenderResult(t.code, t.text, t.dupLiteral, t.dupObject,
@@ -143,106 +154,41 @@ object OntologyWriter {
             s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
-    // Render ONCE (r20, guide §1.2): the global orderBy is a range
-    // exchange whose partitioner SAMPLES its child — with render as a
-    // live subtree below the sort, the whole assemble+finish+render
-    // map executed twice per export (once for the sampling job, once
-    // for the real shuffle; 40k render calls for a 20k-term export).
-    // Cutting lineage on the RENDERED rows materializes the per-term
-    // path exactly once; the sampling pass and the shuffle then
-    // re-scan flat (code, text) blocks. (The dual — sorting the
-    // assembled rows and rendering above the exchange — measured
-    // WORSE: the nested atom/rel struct rows cost more to shuffle,
-    // sort and re-decode than the render pass saved; ProfileExport
-    // A/B in OPTIMIZATION_r20.md.) Blocks are output-sized,
-    // MEMORY_AND_DISK, and freed by the ContextCleaner when the
-    // export returns; on elastic clusters the reliable-checkpoint
-    // knob applies (see Materialize).
-    val rendered = Materialize.cut(
-      assembler.conceptsColumnsTry(conf.strict)
+    Materialize.cut(
+      assembler.conceptsColumnsTry(strict)
         .as(Encoders.product[FinishedRow])
         .map(renderOne)(Encoders.product[RenderResult]).toDF())
       .as(Encoders.product[RenderResult])
       .orderBy("code")
-
-    val parent = new File(outFile).getParentFile
-    if (parent != null) parent.mkdirs()
-    try {
-      if (conf.distributedWrite)
-        writeDistributed(spark, rendered, job, rec, ns, conf,
-          outFile, propertyDocs, semanticTypes)
-      else
-        writeStreamed(rendered, job, rec, ns, conf, outFile,
-          propertyDocs, semanticTypes)
-    } finally assembler.unpersistShared()
   }
 
-  /** Driver-streamed write: `toLocalIterator` over the ordered terms.
-    * Simple, but the driver touches every ROW — fine up to millions of
-    * terms, a bottleneck for a multi-GB single-SAB file. */
-  private def writeStreamed(
-      rendered: org.apache.spark.sql.Dataset[RenderResult],
-      job: OntologyJob, rec: graft.assemble.MrsabRecord, ns: String,
-      conf: UmlsExportConfig, outFile: String,
-      propertyDocs: Map[String, PropertyDoc],
-      semanticTypes: String): WriteReport = {
-    val out = new BufferedWriter(new OutputStreamWriter(
-      new FileOutputStream(outFile), StandardCharsets.UTF_8), 1 << 20)
-    var terms = 0L; var errors = 0L
-    var dupL = 0L; var dupO = 0L; var dupS = 0L
-    val props = mutable.LinkedHashMap.empty[String, String]
-    try {
-      out.write(OntologyRender.Prefixes)
-      out.write(OntologyRender.header(ns, job.sab, rec, conf.umlsVersion))
-      val it = rendered.toLocalIterator()
-      while (it.hasNext) {
-        val r = it.next()
-        if (r.error != null) {
-          errors += 1
-          System.err.println(s"ERROR dumping term ${r.code}: ${r.error}")
-        } else {
-          out.write(r.text)
-          terms += 1
-          dupL += r.dupLiteral; dupO += r.dupObject; dupS += r.dupSubclass
-          r.properties.foreach(p =>
-            if (!props.contains(p.uri)) props(p.uri) = p.att)
-        }
-      }
-      out.write(OntologyRender.propertyBlock(
-        props.iterator.map { case (u, a) => TermProperty(u, a) }.toSeq,
-        propertyDocs))
-      if (conf.includeSemanticTypes) {
-        out.write(semanticTypes)
-        out.write("\n")
-      }
-    } finally out.close()
-    WriteReport(job.sab, outFile, terms, errors, dupL, dupO, dupS)
-  }
-
-  /** Distributed write — the 100 TB shape: executors write the globally
-    * `orderBy(code)`-sorted term text as parts (a global sort yields
-    * range-partitioned parts whose name order IS the code order); the
-    * driver never iterates rows — counters, error log lines and the
-    * property set ride ACCUMULATORS on the write job itself, so the
-    * whole export is ONE pass over the rendered terms (no persist of
-    * the full text, no second/third aggregation action) — and the
-    * driver then CONCATENATES part bytes into the single-file contract.
-    * Byte-identical to [[writeStreamed]] (RrfSourceSpec/
-    * OntologyWriterSpec pin this).
+  /** The write: executors write the globally `orderBy(code)`-sorted term
+    * text as parts (a global sort yields range-partitioned parts whose
+    * name order IS the code order); the driver never iterates rows —
+    * counters, error log lines and the property set ride ACCUMULATORS on
+    * the write job itself, so the whole export is ONE pass over the
+    * rendered terms — and the driver then CONCATENATES part bytes into
+    * the single-file contract. The driver never holds a partition of
+    * rendered text, so a multi-GB single-SAB file costs it no memory.
+    *
+    * Crash-safe publish: the file is assembled at `<out>.tmp` and renamed
+    * onto `<out>` atomically once complete, and `<out>.parts` and the temp
+    * file are removed whatever happens — a failed write leaves neither a
+    * partial final file nor stale parts (a previous complete `<out>`
+    * survives it untouched).
     *
     * Exactly-once counters: the accumulator updates run in the map
     * AFTER the global sort, i.e. inside the write job's RESULT stage —
     * Spark applies a result task's accumulator updates once regardless
     * of retries/speculation. (The same map placed before the sort would
     * live in a shuffle-map stage, where stage retries double-count.) */
-  private def writeDistributed(
+  private def writeParts(
       spark: SparkSession,
-      rendered: org.apache.spark.sql.Dataset[RenderResult],
+      rendered: Dataset[RenderResult],
       job: OntologyJob, rec: graft.assemble.MrsabRecord, ns: String,
       conf: UmlsExportConfig, outFile: String,
       propertyDocs: Map[String, PropertyDoc],
       semanticTypes: String): WriteReport = {
-    import org.apache.spark.sql.functions._
     val sc = spark.sparkContext
     val terms = sc.longAccumulator("graft.terms")
     val errors = sc.longAccumulator("graft.errors")
@@ -255,59 +201,63 @@ object OntologyWriter {
     sc.register(propAcc, "graft.properties")
 
     // The text sink appends one '\n' per row; term text already ends
-    // with '\n', so strip one to keep bytes identical to the streamed
-    // writer. Error rows survive the sort so the result-stage map can
-    // count them, then drop out before the text projection.
+    // with '\n', so strip one to write each term's bytes exactly. Error
+    // rows survive the sort so the result-stage map can count them, then
+    // drop out before the text projection.
     val partsDir = outFile + ".parts"
-    rendered
-      .map { r =>
-        if (r.error != null) {
-          errors.add(1L); errRows.add((r.code, r.error))
-        } else {
-          terms.add(1L)
-          dupL.add(r.dupLiteral); dupO.add(r.dupObject)
-          dupS.add(r.dupSubclass)
-          r.properties.foreach(p => propAcc.add((p.uri, p.att)))
-        }
-        r
-      }(Encoders.product[RenderResult])
-      .filter(col("error").isNull)
-      .select(expr("substring(text, 1, length(text) - 1)").as("value"))
-      .write.mode("overwrite").text(partsDir)
-
-    val (errKept, errTotal) = errRows.value
-    errKept.foreach { t =>
-      System.err.println(s"ERROR dumping term ${t._1}: ${t._2}")
-    }
-    if (errTotal > errKept.size)
-      System.err.println(s"... and ${errTotal - errKept.size} more term " +
-        s"errors (log capped at ${errKept.size}; full count in the report)")
-    // The property block sorts by URI, so first-seen order is
-    // irrelevant; the min(att) merge makes the pick deterministic (att
-    // and uri are 1:1 — the uri is built FROM the fragment).
-    val props = propAcc.value
-      .map { case (uri, att) => TermProperty(uri, att) }.toSeq
-
-    val out = new java.io.FileOutputStream(outFile)
+    val tmpFile = Paths.get(outFile + ".tmp")
     try {
-      def w(s: String): Unit =
-        out.write(s.getBytes(StandardCharsets.UTF_8))
-      w(OntologyRender.Prefixes)
-      w(OntologyRender.header(ns, job.sab, rec, conf.umlsVersion))
-      val parts = new File(partsDir).listFiles()
-        .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-      parts.foreach { f =>
-        java.nio.file.Files.copy(f.toPath, out)
+      rendered
+        .map { r =>
+          if (r.error != null) {
+            errors.add(1L); errRows.add((r.code, r.error))
+          } else {
+            terms.add(1L)
+            dupL.add(r.dupLiteral); dupO.add(r.dupObject)
+            dupS.add(r.dupSubclass)
+            r.properties.foreach(p => propAcc.add((p.uri, p.att)))
+          }
+          r
+        }(Encoders.product[RenderResult])
+        .filter(col("error").isNull)
+        .select(expr("substring(text, 1, length(text) - 1)").as("value"))
+        .write.mode("overwrite").text(partsDir)
+
+      val (errKept, errTotal) = errRows.value
+      errKept.foreach { t =>
+        System.err.println(s"ERROR dumping term ${t._1}: ${t._2}")
       }
-      w(OntologyRender.propertyBlock(props, propertyDocs))
-      if (conf.includeSemanticTypes) { w(semanticTypes); w("\n") }
-    } finally out.close()
-    // Clean the intermediate parts (best-effort).
-    def rm(f: File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-      f.delete(); ()
+      if (errTotal > errKept.size)
+        System.err.println(s"... and ${errTotal - errKept.size} more term " +
+          s"errors (log capped at ${errKept.size}; full count in the report)")
+      // The property block sorts by URI, so first-seen order is
+      // irrelevant; the min(att) merge makes the pick deterministic (att
+      // and uri are 1:1 — the uri is built FROM the fragment).
+      val props = propAcc.value
+        .map { case (uri, att) => TermProperty(uri, att) }.toSeq
+
+      val out = new FileOutputStream(tmpFile.toFile)
+      try {
+        def w(s: String): Unit =
+          out.write(s.getBytes(StandardCharsets.UTF_8))
+        w(OntologyRender.Prefixes)
+        w(OntologyRender.header(ns, job.sab, rec, conf.umlsVersion))
+        new File(partsDir).listFiles()
+          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+          .foreach(f => Files.copy(f.toPath, out))
+        w(OntologyRender.propertyBlock(props, propertyDocs))
+        if (conf.includeSemanticTypes) { w(semanticTypes); w("\n") }
+      } finally out.close()
+      Files.move(tmpFile, Paths.get(outFile),
+        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    } finally {
+      def rm(f: File): Unit = {
+        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
+        f.delete(); ()
+      }
+      rm(new File(partsDir))
+      Files.deleteIfExists(tmpFile)
     }
-    rm(new File(partsDir))
     WriteReport(job.sab, outFile, terms.value, errors.value,
       dupL.value, dupO.value, dupS.value)
   }

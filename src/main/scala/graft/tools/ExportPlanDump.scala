@@ -1,17 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import scala.util.{Failure, Success, Try}
-
-/** Dump `.explain("formatted")` of the q25e distributed-export WRITE
-  * frame — the dataflow `OntologyWriter.writeDistributed` executes.
+/** Dump `.explain("formatted")` of the q25e export WRITE frame — the
+  * dataflow `OntologyWriter` executes.
   * The catalog-level PlanDump only sees q25e's one-row REPORT frame
   * (the export runs eagerly inside the entry), so the writer's real
   * plan needs its own dump for the plans/r20 evidence pair.
   *
-  * Mirrors the HEAD writer composition: columnar finishing
+  * Uses the writer's own composition: columnar finishing
   * (conceptsColumnsTry — prefLabel selection inside whole-stage
   * codegen, per-term errors as a column) → render map → Materialize
   * .cut (the one materialization of the rendered terms) → global
@@ -26,18 +24,6 @@ import scala.util.{Failure, Success, Try}
   *   sbt 'runMain graft.tools.ExportPlanDump <outFile>'
   */
 object ExportPlanDump {
-
-  /** Local mirror of the sink's private RenderResult row shape. */
-  final case class RR(code: String, text: String, dupLiteral: Long,
-      dupObject: Long, dupSubclass: Long,
-      properties: Seq[graft.model.TermProperty], error: String)
-
-  /** Local mirror of the sink's private FinishedRow shape. */
-  final case class FR(code: String, prefLabel: String,
-      altLabels: Seq[String], defs: Seq[String], cuis: Seq[String],
-      tuis: Seq[String], atts: Seq[graft.model.AttOut],
-      rels: Seq[graft.model.RelOut], isRoot: Boolean,
-      treeParents: Seq[String], __finish_err: String)
 
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: ExportPlanDump <outFile>")
@@ -56,27 +42,9 @@ object ExportPlanDump {
     val cfg = graft.render.RenderConfig(ns = "http://x/", lang = "en",
       hierarchy = true, hasTree = false, dedupe = true,
       styUrl = "http://x/STY/")
-    val renderOne: FR => RR = { f =>
-      if (f.__finish_err != null)
-        RR(f.code, null, 0, 0, 0, Nil,
-          s"IllegalStateException: ${f.__finish_err}")
-      else Try(graft.render.ConceptRenderer.render(
-          graft.model.UmlsConceptRow(f.code, f.prefLabel, f.altLabels,
-            f.defs, f.cuis, f.tuis, f.atts, f.rels, f.isRoot,
-            f.treeParents), cfg)) match {
-        case Success(t) => RR(t.code, t.text, t.dupLiteral, t.dupObject,
-          t.dupSubclass, t.properties, null)
-        case Failure(e) => RR(f.code, null, 0, 0, 0, Nil,
-          s"${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-    }
-    // HEAD composition: columnar finish → render → eager cut → sort.
-    val frame = graft.operators.Materialize.cut(
-        asm.conceptsColumnsTry()
-          .as(Encoders.product[FR])
-          .map(renderOne)(Encoders.product[RR]).toDF())
-      .as(Encoders.product[RR])
-      .orderBy("code")
+    // The writer's composition: columnar finish → render → eager cut →
+    // sort.
+    val frame = graft.sink.OntologyWriter.rendered(asm, cfg, strict = false)
       .filter(col("error").isNull)
       .select(expr("substring(text, 1, length(text) - 1)").as("value"))
     val plan = frame.queryExecution.explainString(

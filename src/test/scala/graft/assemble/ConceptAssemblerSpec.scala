@@ -2,13 +2,16 @@ package graft.assemble
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.{Dataset, Encoders}
+
 import graft.TestSpark
-import graft.model.RelOut
+import graft.model.{RelOut, UmlsConceptRow}
 import graft.render.{ConceptRenderer, RenderConfig}
 
 /** End-to-end assembly over an in-memory fixture source — ports of
   * `tests/test_umls2rdf.py:322-350` (rel rewrite + self-map filtering) plus
-  * the distributed-determinism contract and the strict-mode asserts.
+  * the distributed-determinism contract and the strict-mode asserts. The
+  * columnar finish is checked against the typed oracle ([[TypedFinish]]).
   */
 class ConceptAssemblerSpec extends AnyFunSuite {
 
@@ -39,13 +42,20 @@ class ConceptAssemblerSpec extends AnyFunSuite {
     Map("CUI" -> "CUI_TARGET", "TUI" -> "T002"))
 
   private def assembler(atomRows: Seq[Map[String, String]] = atoms,
-      relRows: Seq[Map[String, String]] = rels): ConceptAssembler = {
+      relRows: Seq[Map[String, String]] = rels,
+      rankRows: Seq[Map[String, String]] = Nil): ConceptAssembler = {
     val src = TestSpark.fixedSource(Map(
       "MRCONSO" -> TestSpark.mkTable("MRCONSO", atomRows),
       "MRREL" -> TestSpark.mkTable("MRREL", relRows),
-      "MRSTY" -> TestSpark.mkTable("MRSTY", sty)))
+      "MRSTY" -> TestSpark.mkTable("MRSTY", sty),
+      "MRRANK" -> TestSpark.mkTable("MRRANK", rankRows)))
     new ConceptAssembler(spark, src, "TEST")
   }
+
+  /** The production finish, decoded. */
+  private def concepts(asm: ConceptAssembler,
+      strict: Boolean = false): Dataset[UmlsConceptRow] =
+    asm.conceptsColumns(strict).as(Encoders.product[UmlsConceptRow])
 
   // Flatten with per-array sorts: collect_list element order is
   // execution-dependent on BOTH paths, and finish() deliberately leaves
@@ -74,22 +84,24 @@ class ConceptAssemblerSpec extends AnyFunSuite {
     val fixtureDir = "/root/repo/fixtures/umls"
     val modes = Seq(
       // codes mode with MRRANK (A7 argmax + tie-break)
-      new ConceptAssembler(spark, UmlsSource.parquet(spark, fixtureDir), "FIX"),
+      new ConceptAssembler(spark, UmlsSource.parquet(spark, fixtureDir),
+        "FIX") -> false,
       // cuis mode (A8 cascade, one fixture CUI per branch)
       new ConceptAssembler(spark, UmlsSource.parquet(spark, fixtureDir),
-        "CFX", loadOnCuis = true),
+        "CFX", loadOnCuis = true) -> true,
       // MeSH (tree parents populated)
-      new ConceptAssembler(spark, UmlsSource.parquet(spark, fixtureDir), "MSH"),
+      new ConceptAssembler(spark, UmlsSource.parquet(spark, fixtureDir),
+        "MSH") -> false,
       // empty-MRRANK A9 branch (in-memory fixture has no MRRANK rows)
-      assembler())
-    modes.foreach { asm =>
-      assert(flat(asm.concepts().toDF()) === flat(asm.conceptsColumns()),
-        asm.toString)
+      assembler() -> false)
+    modes.foreach { case (asm, onCuis) =>
+      assert(flat(TypedFinish.concepts(asm, onCuis).toDF()) ===
+        flat(asm.conceptsColumns()), asm.toString)
     }
   }
 
   test("terms rewrite code-mode relations and filter self-maps") {
-    val terms = assembler().concepts().collect().map(t => t.code -> t).toMap
+    val terms = concepts(assembler()).collect().map(t => t.code -> t).toMap
     assert(terms.keySet == Set("CODE1", "CODE2"))
     assert(terms("CODE1").rels ==
       Seq(RelOut("RO", "mappedTo", "CUI_TARGET", "CODE2", "CODE1")))
@@ -102,9 +114,9 @@ class ConceptAssemblerSpec extends AnyFunSuite {
   }
 
   test("identical concepts and rendered bytes under permuted, repartitioned input") {
-    val a = assembler().concepts().collect().sortBy(_.code)
+    val a = concepts(assembler()).collect().sortBy(_.code)
     val permuted = assembler(atomRows = atoms.reverse, relRows = rels.reverse)
-    val b = permuted.concepts().repartition(5).collect().sortBy(_.code)
+    val b = concepts(permuted).repartition(5).collect().sortBy(_.code)
     assert(a.toSeq == b.toSeq)
     val cfg = RenderConfig("http://example.org/test")
     val ttlA = a.map(ConceptRenderer.render(_, cfg).text).mkString
@@ -115,16 +127,16 @@ class ConceptAssemblerSpec extends AnyFunSuite {
   test("empty-CODE atoms are dropped by default and fail strict mode") {
     val withBad = atoms :+ conso("CUI_BAD", "AUI_BAD", "", "No code", "PT")
     val asm = assembler(atomRows = withBad)
-    val codes = asm.concepts().collect().map(_.code).toSet
+    val codes = concepts(asm).collect().map(_.code).toSet
     assert(codes == Set("CODE1", "CODE2")) // no phantom NULL-code concept
-    val ex = intercept[IllegalStateException](asm.concepts(strict = true))
+    val ex = intercept[IllegalStateException](concepts(asm, strict = true))
     assert(ex.getMessage.contains("empty CODE"))
   }
 
   test("strict mode flags an AUI resolving to two codes") {
     val withDup = atoms :+ conso("CUI_X", "AUI_SOURCE", "CODE9", "Dup aui", "PT")
     val asm = assembler(atomRows = withDup)
-    val ex = intercept[IllegalStateException](asm.concepts(strict = true))
+    val ex = intercept[IllegalStateException](concepts(asm, strict = true))
     assert(ex.getMessage.contains("more than one code"))
   }
 
@@ -135,7 +147,7 @@ class ConceptAssemblerSpec extends AnyFunSuite {
     // (umls2rdf.py:717) but still drives is_root (computed pre-resolution).
     val rootRel = mrrel("CROOT", "AUI_NOWHERE", "CUI_SOURCE", "AUI_SOURCE", "CHD")
     val asm = assembler(atomRows = withRoot, relRows = rels :+ rootRel)
-    val terms = asm.concepts().collect().map(t => t.code -> t).toMap
+    val terms = concepts(asm).collect().map(t => t.code -> t).toMap
     assert(terms("CODE1").isRoot)
     assert(!terms("CODE2").isRoot)
     assert(terms("CODE1").rels ==
@@ -168,7 +180,7 @@ class ConceptAssemblerSpec extends AnyFunSuite {
     val src = TestSpark.fixedSource(Map(
       "MRCONSO" -> TestSpark.mkTable("MRCONSO", icdAtoms),
       "MRREL" -> TestSpark.mkTable("MRREL", Seq(rel))))
-    val terms = new ConceptAssembler(spark, src, "ICD10CM").concepts()
+    val terms = concepts(new ConceptAssembler(spark, src, "ICD10CM"))
       .collect().map(t => t.code -> t.isRoot).toMap
     assert(terms("A00") === true) // patched root
     assert(terms("ICD") === false)
@@ -183,7 +195,8 @@ class ConceptAssemblerSpec extends AnyFunSuite {
     val salted = new ConceptAssembler(spark,
       UmlsSource.parquet(spark, fixtureDir), "FIX", saltBuckets = 4)
     assert(flat(salted.conceptsColumns()) === flat(plain.conceptsColumns()))
-    assert(flat(salted.concepts().toDF()) === flat(plain.concepts().toDF()))
+    assert(flat(TypedFinish.concepts(salted, loadOnCuis = false).toDF()) ===
+      flat(plain.conceptsColumns()))
     // The skew mitigation is real in the physical plan: stage one groups
     // by (code, __graft_salt), stage two concatenates partial arrays.
     val saltedPlan = salted.conceptsColumns()
@@ -199,6 +212,46 @@ class ConceptAssemblerSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plainPlan.contains("__graft_salt"))
     plain.unpersistShared(); salted.unpersistShared()
+  }
+
+  test("A7/A9 finishing errors: __finish_err holds the typed oracle's " +
+    "text, and the raising view raises with it") {
+    def rank(tty: String) =
+      Map("RANK" -> "0400", "SAB" -> "TEST", "TTY" -> tty, "SUPPRESS" -> "N")
+    val cases = Seq(
+      // A7: CODE1's SY and XX atoms have no MRRANK row; the text names the
+      // first of them in canonical (AUI) order.
+      ("TTY XX not in MRRANK", assembler(
+        atomRows = Seq(
+          conso("C1", "A2", "CODE1", "Ranked", "PT"),
+          conso("C1", "A3", "CODE1", "Unranked", "SY"),
+          conso("C1", "A1", "CODE1", "Also unranked", "XX"),
+          conso("C2", "A4", "CODE2", "Fine", "PT")),
+        relRows = Nil, rankRows = Seq(rank("PT")))),
+      // A9, empty MRRANK: zero 'P' atoms.
+      ("Unable to select pref label", assembler(
+        atomRows = Seq(
+          conso("C1", "A1", "CODE1", "Synonym only", "SY"),
+          conso("C2", "A2", "CODE2", "Fine", "PT")),
+        relRows = Nil)),
+      // A9, empty MRRANK: two 'P' atoms.
+      ("Unable to select pref label", assembler(
+        atomRows = Seq(
+          conso("C1", "A1", "CODE1", "First P", "PT"),
+          conso("C1", "A2", "CODE1", "Second P", "PN"),
+          conso("C2", "A3", "CODE2", "Fine", "PT")),
+        relRows = Nil)))
+    cases.foreach { case (message, asm) =>
+      val expected = s"IllegalStateException: $message"
+      val oracle = TypedFinish.errors(asm, loadOnCuis = false)
+      assert(oracle === Map("CODE1" -> Some(expected), "CODE2" -> None))
+      val columnar = asm.conceptsColumnsTry()
+        .select("code", "__finish_err").collect()
+        .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+      assert(columnar === oracle)
+      val raised = intercept[Exception](asm.conceptsColumns().collect())
+      assert(raised.getMessage.contains(expected), raised.getMessage)
+    }
   }
 
   test("O5 row limit bounds the MRCONSO scan") {

@@ -2,8 +2,8 @@ package graft.render
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.assemble.{AssembledRaw, ConceptAssembler}
-import graft.model.{AtomRow, AttOut, RelOut, UmlsConceptRow}
+import graft.assemble.{AssembledRaw, AtomRow, TypedFinish}
+import graft.model.{AttOut, RelOut, UmlsConceptRow}
 
 /** Ports of the reference's class-level behavior tests
   * (`tests/test_umls2rdf.py:95-319`): triple dedup on/off per kind,
@@ -36,7 +36,7 @@ class ConceptRendererSpec extends AnyFunSuite {
   private def cuisTerm(atoms: Seq[AtomRow], rels: Seq[RelOut] = Nil,
       atts: Seq[AttOut] = Nil, tuis: Seq[String] = Seq("T001"),
       isRoot: Boolean = false): UmlsConceptRow =
-    ConceptAssembler.finish(
+    TypedFinish.finish(
       AssembledRaw(atoms.head.cui, atoms, rels, Nil, atts, tuis, isRoot, Nil),
       rankByTty = Map.empty, loadOnCuis = true)
 
@@ -49,7 +49,7 @@ class ConceptRendererSpec extends AnyFunSuite {
     haystack.sliding(needle.length).count(_ == needle)
 
   test("dedupes duplicate literal triples in load_on_codes mode") {
-    val term = ConceptAssembler.finish(
+    val term = TypedFinish.finish(
       AssembledRaw("CODE1",
         Seq(codeAtom("C0001", "A001", "Preferred label", tty = "PT")),
         Nil, Nil,
@@ -163,7 +163,7 @@ class ConceptRendererSpec extends AnyFunSuite {
       Seq(RelOut("CHD", "", "D009", "D009", "D001")), Nil,
       Seq(AttOut("MN", "D01")), Seq("T001"), isRoot = false,
       treeParents = Seq("D002", "D000"))
-    val term = ConceptAssembler.finish(raw, Map.empty, loadOnCuis = true)
+    val term = TypedFinish.finish(raw, Map.empty, loadOnCuis = true)
     val rdf = render(term, dedupe = true, hasTree = true)
     val i2 = rdf.indexOf("rdfs:subClassOf <http://example.org/test/D000> ;")
     val i3 = rdf.indexOf("rdfs:subClassOf <http://example.org/test/D002> ;")

@@ -233,7 +233,7 @@ class OntologyWriterSpec extends AnyFunSuite {
     // ONE materialization of the rendered terms (Materialize.cut —
     // before r20 the write's range-sort sampled its LIVE child, so the
     // assemble+finish+render subtree executed TWICE inside the write
-    // execution; ProfileExport counted 40k render calls for 20k terms),
+    // execution — 40k render calls for 20k terms),
     // and the write action over the checkpointed flat rows (AQE may
     // split an execution into several jobs; they share an execution
     // id). A regression that re-renders per action would count 6+.
@@ -260,13 +260,13 @@ class OntologyWriterSpec extends AnyFunSuite {
       val dir = Files.createTempDirectory("graft-ttl-pin").toString
       val rep = OntologyWriter.write(spark, TestSpark.fixedSource(fixture),
         OntologyJob("TEST", None, "TEST.ttl", loadOnCuis = false),
-        UmlsExportConfig(umlsVersion = "2025AB", distributedWrite = true),
+        UmlsExportConfig(umlsVersion = "2025AB"),
         s"$dir/TEST.ttl", docs, "")
       assert(rep.terms === 2L)
       // listener events are posted asynchronously; give them a beat
       Thread.sleep(1500)
       assert(execIds.size === 5,
-        s"distributed export issued ${execIds.size} SQL executions " +
+        s"export issued ${execIds.size} SQL executions " +
           s"(expected 5: MRSAB + cui_roots + MRRANK metadata collects " +
           s"+ the one render materialization + the write pass): $execIds")
     } finally {
@@ -302,6 +302,31 @@ class OntologyWriterSpec extends AnyFunSuite {
     assert(jobAcc.value._2 === 5000L)
   }
 
+  test("a write that fails mid-way publishes nothing and leaves no " +
+    "temp file or parts behind") {
+    // MRDOC documents no predicate, so the property block raises (J10)
+    // after the parts are written and while <out>.tmp is half-assembled.
+    val dir = Files.createTempDirectory("graft-ttl-fail").toString
+    val out = s"$dir/TEST.ttl"
+    def failingWrite(): Unit = {
+      val ex = intercept[IllegalStateException](
+        OntologyWriter.write(spark, TestSpark.fixedSource(fixture),
+          OntologyJob("TEST", None, "TEST.ttl", loadOnCuis = false),
+          UmlsExportConfig(umlsVersion = "2025AB"), out, Map.empty, ""))
+      assert(ex.getMessage.contains("no MRDOC documentation"))
+      assert(!Files.exists(Paths.get(s"$out.tmp")))
+      assert(!Files.exists(Paths.get(s"$out.parts")))
+    }
+    failingWrite()
+    assert(!Files.exists(Paths.get(out)))
+    // A complete file from an earlier run survives a failed rewrite.
+    Files.write(Paths.get(out), "earlier".getBytes(StandardCharsets.UTF_8))
+    failingWrite()
+    assert(new String(Files.readAllBytes(Paths.get(out)),
+      StandardCharsets.UTF_8) === "earlier")
+    assert(new java.io.File(dir).list().toSeq === Seq("TEST.ttl"))
+  }
+
   test("mass render failure: errors past the log cap stay exactly " +
     "counted and the export still writes (distributed S6)") {
     // 1200 single-atom SY-only codes -> every one raises in prefLabel
@@ -317,7 +342,7 @@ class OntologyWriterSpec extends AnyFunSuite {
     val rep = OntologyWriter.write(spark,
       TestSpark.fixedSource(massFixture),
       OntologyJob("TEST", None, "TEST.ttl", loadOnCuis = false),
-      UmlsExportConfig(umlsVersion = "2025AB", distributedWrite = true),
+      UmlsExportConfig(umlsVersion = "2025AB"),
       s"$dir/TEST.ttl", Map.empty, "")
     assert(rep.errors === 1200L)
     assert(rep.terms === 1L)

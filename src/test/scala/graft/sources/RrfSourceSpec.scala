@@ -34,15 +34,13 @@ class RrfSourceSpec extends AnyFunSuite {
     }
   }
 
-  private def runPipeline(source: UmlsSource, outDir: String,
-      distributed: Boolean = false): Unit = {
+  private def runPipeline(source: UmlsSource, outDir: String): Unit = {
     val jobs = Seq(
       OntologyJob("FIX", None, "fix.ttl", loadOnCuis = false),
       OntologyJob("CFX", None, "cfx.ttl", loadOnCuis = true),
       OntologyJob("MSH", None, "msh.ttl", loadOnCuis = false))
     val config = PipelineConfig(outDir, s"$outDir/.state",
-      UmlsExportConfig(umlsVersion = "2025AA",
-        distributedWrite = distributed))
+      UmlsExportConfig(umlsVersion = "2025AA"))
     new UmlsPipeline(spark, source, jobs, config).run()
   }
 
@@ -90,18 +88,6 @@ class RrfSourceSpec extends AnyFunSuite {
       read(s"$outPq/umls_semantictypes.ttl"))
   }
 
-  test("distributed (part-concat) write is byte-identical to the streamed write") {
-    val outStream = Files.createTempDirectory("graft-out-stream").toString
-    val outDist = Files.createTempDirectory("graft-out-dist").toString
-    runPipeline(UmlsSource.parquet(spark, "fixtures/umls"), outStream)
-    runPipeline(UmlsSource.parquet(spark, "fixtures/umls"), outDist,
-      distributed = true)
-    def read(p: String) = new String(
-      Files.readAllBytes(Paths.get(p)), StandardCharsets.UTF_8)
-    assert(read(s"$outDist/fix.ttl") === read(s"$outStream/fix.ttl"))
-    assert(!Files.exists(Paths.get(s"$outDist/fix.ttl.parts")))
-  }
-
   test("parallel per-SAB export is byte-identical to sequential") {
     val outSeq = Files.createTempDirectory("graft-out-seq").toString
     val outPar = Files.createTempDirectory("graft-out-par").toString
@@ -144,5 +130,10 @@ class RrfSourceSpec extends AnyFunSuite {
       golden("umls_semantictypes.ttl"))
     Seq("fix.ttl", "cfx.ttl", "msh.ttl", "umls_semantictypes.ttl")
       .foreach(f => assertWellFormedTtl(read(s"$out/$f")))
+    // The writer's intermediates are gone once the files are published.
+    Seq("fix", "cfx", "msh").foreach { f =>
+      assert(!Files.exists(Paths.get(s"$out/$f.ttl.parts")))
+      assert(!Files.exists(Paths.get(s"$out/$f.ttl.tmp")))
+    }
   }
 }
