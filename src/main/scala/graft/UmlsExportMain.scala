@@ -58,6 +58,11 @@ object UmlsExportMain {
         math.max(Runtime.getRuntime.availableProcessors(), 4))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // Generated classes are cached per (code, class loader), and local
+      // mode runs driver and executor code under different loaders, so
+      // one export needs ~120 entries: at the default of 100 every export
+      // recompiled its plans.
+      .config("spark.sql.codegen.cache.maxEntries", 1000)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -38,6 +38,9 @@ import graft.sources.UmlsSource
   * engine can reproduce; we canonicalize by sorting each class's atoms by
   * AUI (codes mode) / (CUI, AUI) and breaking rank ties on that order.
   * Intra-class output bytes are otherwise reference-equal.
+  *
+  * @param lookups the run's [[ReleaseLookups]] (MRRANK map, root CUIs);
+  *   without one, this SAB's are read on first use.
   */
 class ConceptAssembler(
     spark: SparkSession,
@@ -46,11 +49,13 @@ class ConceptAssembler(
     loadOnCuis: Boolean = false,
     lang: String = "ENG",
     limit: Option[Int] = None,
-    saltBuckets: Int = 1) {
-
-  import spark.implicits._
+    saltBuckets: Int = 1,
+    lookups: Option[ReleaseLookups] = None) {
 
   private val langUpper = lang.toUpperCase
+
+  private lazy val release =
+    lookups.getOrElse(ReleaseLookups.forSab(source, sab))
 
   /** O5 row limit: the reference wires an optional LIMIT into the MRCONSO
     * and MRREL scans (`umls2rdf.py:586,600,613,623`) for sampled runs. */
@@ -108,11 +113,8 @@ class ConceptAssembler(
       .filter(col("CODE").isNull || length(col("CODE")) === 0)
 
   /** F2 root CUIs: the SRC `V-<sab>` atoms (`umls2rdf.py:612-614`);
-    * tiny — broadcast as a literal set via collect. */
-  def cuiRoots: Set[String] =
-    source.table("MRCONSO")
-      .filter(col("SAB") === "SRC" && col("CODE") === s"V-$sab")
-      .select("CUI").distinct().as[String].collect().toSet
+    * tiny — entered into the plan as a literal set. */
+  def cuiRoots: Set[String] = release.cuiRoots(sab)
 
   /** F3-filtered relations (`umls2rdf.py:621-623`). */
   def rels: DataFrame =
@@ -261,12 +263,9 @@ class ConceptAssembler(
       .groupBy("tcode")
       .agg(collect_set("TUI").as("tuis"))
 
-  /** MRRANK rank-by-TTY for this SAB (tiny; collected + broadcast into the
-    * prefLabel map). Reference: `umls2rdf.py:654-658,320-326`. */
-  def rankByTty: Map[String, Int] =
-    source.table("MRRANK").filter(col("SAB") === sab)
-      .select(col("TTY"), col("RANK").cast("int").as("rank"))
-      .as[(String, Int)].collect().toMap
+  /** MRRANK rank-by-TTY for this SAB (tiny; entered into the prefLabel
+    * map as a literal). Reference: `umls2rdf.py:654-658,320-326`. */
+  def rankByTty: Map[String, Int] = release.rankByTty(sab)
 
   /** J3 cardinality violations: atom ids (AUIs in codes mode) that resolve
     * to more than one distinct code. The reference raises

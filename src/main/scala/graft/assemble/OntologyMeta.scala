@@ -1,6 +1,6 @@
 package graft.assemble
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.UmlsSource
@@ -11,8 +11,9 @@ import graft.sources.UmlsSource
   * One row per ontology: filter `RSAB = sab`, prefer `CURVER = 'Y'`, else
   * "the first row" — the reference takes MySQL scan order, which is
   * unreproducible; we canonicalize the tie-break by VSAB so the pick is
-  * deterministic. Driver-side collect of a 1-row lookup (the reference's
-  * J11 is exactly this shape).
+  * deterministic. The pick runs on the driver over the collected MRSAB
+  * rows ([[ReleaseLookups.mrsab]]; the reference's J11 is exactly this
+  * shape).
   */
 final case class MrsabRecord(fields: Map[String, String]) {
 
@@ -35,19 +36,10 @@ final case class MrsabRecord(fields: Map[String, String]) {
 
 object Mrsab {
 
-  /** `get_mrsab_record` (`umls2rdf.py:115-122`). */
-  def record(source: UmlsSource, sab: String): Option[MrsabRecord] = {
-    val rows = source.table("MRSAB")
-      .filter(col("RSAB") === sab)
-      .orderBy((col("CURVER") =!= "Y").asc, col("VSAB").asc)
-      .limit(1)
-      .collect()
-    rows.headOption.map { r =>
-      MrsabRecord(r.schema.fieldNames.iterator.zipWithIndex.map {
-        case (n, i) => n -> (if (r.isNullAt(i)) "" else r.getString(i))
-      }.toMap)
-    }
-  }
+  /** `get_mrsab_record` (`umls2rdf.py:115-122`) for one SAB — a view over
+    * its [[ReleaseLookups]], which holds the pick. */
+  def record(source: UmlsSource, sab: String): Option[MrsabRecord] =
+    ReleaseLookups.forSab(source, sab).mrsab(sab)
 
   /** Defaults used when no MRSAB row exists (`umls2rdf.py:563-584`
     * coalescers all fall through to conf values). */

@@ -13,6 +13,14 @@ object SqlFns {
     UTF8String.fromString(TurtleFunctions.escape(s.toString))
   def stnParentUTF8(s: UTF8String): UTF8String =
     UTF8String.fromString(TurtleFunctions.stnParent(s.toString))
+
+  /** Spark's ascending string sort order on the driver: NULL first, then
+    * the UTF-8 binary comparison `orderBy` uses (code-point order, which
+    * differs from `String.compareTo` past the BMP). */
+  val sparkStringOrder: Ordering[String] = (a, b) =>
+    if (a == null) (if (b == null) 0 else -1)
+    else if (b == null) 1
+    else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 }
 
 /** C1 `escape` as a codegen'd expression (`umls2rdf.py:103-104`). */

@@ -3,12 +3,15 @@ package graft.pipeline
 import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.Executors
 
 import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 
 import org.apache.spark.sql.SparkSession
 
-import graft.assemble.PropertyDocs
+import graft.assemble.{PropertyDoc, PropertyDocs, ReleaseLookups}
 import graft.model.OntologyJob
 import graft.render.{OntologyRender, SemanticTypes}
 import graft.sink.{OntologyWriter, UmlsExportConfig, WriteReport}
@@ -65,10 +68,11 @@ final case class PipelineConfig(
     sharedScan: Boolean = false)
 
 /** The run-once export pipeline (`umls2rdf.py:828-896` +
-  * `run_umls_pipeline.py`): validate source → semantic types → one
-  * ontology file per manifest entry → validate output. Each step is
-  * recorded in [[PipelineState]]; completed steps are skipped on re-run
-  * (R1). Validation probes are R2 (`run_umls_pipeline.py:256-290`);
+  * `run_umls_pipeline.py`): validate source → the run's small lookups
+  * (read once, concurrently) → semantic types → one ontology file per
+  * manifest entry → validate output. Each step is recorded in
+  * [[PipelineState]]; completed steps are skipped on re-run (R1); the
+  * lookups are re-read by every run, so a rewritten lake is seen. Validation probes are R2 (`run_umls_pipeline.py:256-290`);
   * config checks are R4 (`:298-308`).
   */
 final class UmlsPipeline(
@@ -119,7 +123,7 @@ final class UmlsPipeline(
     val required = Seq("MRCONSO", "MRREL", "MRDEF", "MRSAT", "MRRANK",
       "MRSTY", "MRSAB", "MRDOC")
     required.foreach(t => source.table(t).schema) // resolvable
-    require(source.table("MRCONSO").limit(1).count() > 0,
+    require(!source.table("MRCONSO").isEmpty,
       "MRCONSO is empty — source not loaded")
   }
 
@@ -141,33 +145,62 @@ final class UmlsPipeline(
       case _ => ()
     }
 
+  /** The run's small lookups, read once and shared by every SAB's
+    * export: the manifest's [[ReleaseLookups]], MRSTY's semantic-type
+    * graph (only if a block of it is rendered) and the MRDOC pivot
+    * (`umls2rdf.py:844-864`). They are independent, so each runs on its
+    * own thread with its jobs labelled `graft:run:<lookup>`; a failed
+    * lookup fails the run with its own exception. The wait is bounded:
+    * the lookups finish in seconds on a healthy run, so a wedged one
+    * fails the run instead of hanging it. */
+  private def readLookups(needSty: Boolean)
+      : (ReleaseLookups, Option[SemanticTypes.Graph], Map[String, PropertyDoc]) = {
+    val pool = Executors.newFixedThreadPool(3)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val sc = spark.sparkContext
+    def lookup[T](name: String)(body: => T): Future[T] = Future {
+      sc.setJobDescription(s"graft:run:$name")
+      body
+    }
+    try {
+      val release = lookup("release_lookups")(
+        ReleaseLookups.load(effSource, jobs.map(_.sab)))
+      val sty =
+        if (needSty) lookup("semantic_types")(
+          Some(SemanticTypes.collect(effSource.table("MRSTY"))))
+        else Future.successful(None)
+      val docs = lookup("property_docs")(
+        PropertyDocs.collectMap(effSource.table("MRDOC")))
+      Await.result(
+        for (r <- release; s <- sty; d <- docs) yield (r, s, d), 30.minutes)
+    } finally pool.shutdown()
+  }
+
   private def runSteps(): Seq[WriteReport] = {
     step("validate_source")(validateSource())
 
     // Semantic-types prelude (`umls2rdf.py:844-852`): standalone file with
     // roots; rootless variant appended to each ontology file. Both blocks
     // render from one collect of MRSTY's graph, made only if one is needed.
-    lazy val sty = SemanticTypes.collect(effSource.table("MRSTY"))
+    val includeSty = config.exportConf.includeSemanticTypes
+    val (release, sty, docs) =
+      readLookups(includeSty || !synchronized(state.isDone("semantic_types")))
     val styUrl = config.exportConf.baseUri + "STY/"
     val styFile = s"${config.outputDir}/umls_semantictypes.ttl"
     step("semantic_types") {
-      val withRoots = SemanticTypes.render(sty, styUrl, withRoots = true)
+      val withRoots = SemanticTypes.render(sty.get, styUrl, withRoots = true)
       Files.write(Paths.get(styFile),
         (OntologyRender.Prefixes + withRoots).getBytes(StandardCharsets.UTF_8))
     }
     val semTypes =
-      if (config.exportConf.includeSemanticTypes)
-        SemanticTypes.render(sty, styUrl, withRoots = false)
+      if (includeSty) SemanticTypes.render(sty.get, styUrl, withRoots = false)
       else ""
-
-    // MRDOC pivot, shared across ontologies (`umls2rdf.py:853-864`).
-    val docs = PropertyDocs.collectMap(effSource.table("MRDOC"))
 
     def exportOne(job: OntologyJob): WriteReport = {
       val outFile = s"${config.outputDir}/${job.outFile}"
       step(s"ontology:${job.sab}") {
         OntologyWriter.write(spark, effSource, job, config.exportConf, outFile,
-          docs, semTypes)
+          docs, semTypes, release)
       }.getOrElse(WriteReport(job.sab, outFile, 0, 0, 0, 0, 0,
         skipped = true, resumed = true)) // already produced in a previous run
     }
@@ -176,10 +209,7 @@ final class UmlsPipeline(
       else {
         // Per-SAB jobs are independent; a bounded pool submits them so
         // Spark's scheduler interleaves their stages.
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(config.parallelism)
+        val pool = Executors.newFixedThreadPool(config.parallelism)
         implicit val ec: ExecutionContext =
           ExecutionContext.fromExecutorService(pool)
         try Await.result(

@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * get `owl:Thing` when `withRoots`.
   *
   * The node/edge relations are DataFrames (the J13 self-join is the
-  * oracle-checked q26 entry); the final string render collects them —
-  * MRSTY-distinct is ~130 rows at full UMLS, a driver-side lookup by
-  * design, like the reference.
+  * oracle-checked q26 entry). The export's render does not run them: it
+  * collects one distinct projection (MRSTY-distinct is ~130 rows at full
+  * UMLS, a driver-side lookup by design, like the reference) and derives
+  * the same order and edges on the driver ([[collect]]).
   *
   * Determinism: the reference emits nodes in MySQL scan order; we
   * canonicalize by (TUI, STN, STY) — intra-line bytes are reference-equal.
@@ -51,14 +52,32 @@ object SemanticTypes {
   final case class Graph(
       nodes: Seq[(String, String)], parents: Map[String, Seq[String]])
 
-  /** Collect the nodes and edges of MRSTY once; [[render]] builds both the
-    * with-roots and the rootless block from the result. */
+  /** The graph of MRSTY in one query, [[nodes]] plus each node's C11
+    * parent STN under one `distinct` (the parent is a function of STN,
+    * so the rows are the nodes). The parent comes from Spark's own
+    * expression, keeping its code-point `substr` and regex semantics. On
+    * the driver, nodes sort as `orderBy("TUI", "STN", "STY")` does and
+    * the J13 join of [[edges]] is string equality with the same NULL
+    * rules: a NULL key joins nothing, a self-edge is dropped. [[render]]
+    * builds both the with-roots and the rootless block from the result. */
   def collect(mrsty: DataFrame): Graph = {
-    val ns = nodes(mrsty).orderBy("TUI", "STN", "STY").collect()
-      .map(r => (r.getString(0), r.getString(2))).toSeq
-    val es = edges(mrsty).collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted.toSeq }
+    val rows = mrsty
+      .select(col("TUI"), col("STN"), col("STY"), stnParentCol(col("STN")))
+      .distinct().collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3)))
+    val order = graft.functions.SqlFns.sparkStringOrder
+    val ns = rows.sortBy(r => (r._1, r._2, r._3))(
+      Ordering.Tuple3(order, order, order))
+      .map(r => (r._1, r._3)).toSeq
+    val tuisByStn = rows.filter(r => r._1 != null && r._2 != null)
+      .groupBy(_._2).map { case (stn, v) => stn -> v.map(_._1) }
+    val es = rows.iterator.filter(r => r._1 != null && r._4 != null)
+      .flatMap { case (tui, _, _, parentStn) =>
+        tuisByStn.getOrElse(parentStn, Array.empty[String])
+          .filter(_ != tui).map(tui -> _)
+      }.toSeq.distinct
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }
     Graph(ns, es)
   }
 

@@ -9,7 +9,7 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 
-import graft.assemble.{ConceptAssembler, Mrsab, PropertyDoc}
+import graft.assemble.{ConceptAssembler, Mrsab, PropertyDoc, ReleaseLookups}
 import graft.functions.TurtleFunctions.mapLang
 import graft.model.{OntologyJob, TermProperty}
 import graft.operators.Materialize
@@ -74,6 +74,8 @@ object OntologyWriter {
     * error log; the total error COUNT stays exact past it. */
   private[sink] val ErrorLogCap = 1000
 
+  /** Export one ontology, reading its MRSAB record, MRRANK map and root
+    * CUIs on their own ([[ReleaseLookups.forSab]]). */
   def write(
       spark: SparkSession,
       source: UmlsSource,
@@ -81,10 +83,24 @@ object OntologyWriter {
       conf: UmlsExportConfig,
       outFile: String,
       propertyDocs: Map[String, PropertyDoc],
-      semanticTypes: String): WriteReport = {
+      semanticTypes: String): WriteReport =
+    write(spark, source, job, conf, outFile, propertyDocs, semanticTypes,
+      ReleaseLookups.forSab(source, job.sab))
+
+  /** Export one ontology with its small lookups taken from `lookups`, the
+    * run's snapshot: the only Spark work left is the export itself. */
+  def write(
+      spark: SparkSession,
+      source: UmlsSource,
+      job: OntologyJob,
+      conf: UmlsExportConfig,
+      outFile: String,
+      propertyDocs: Map[String, PropertyDoc],
+      semanticTypes: String,
+      lookups: ReleaseLookups): WriteReport = {
 
     val ns = conf.baseUri + job.altUri.getOrElse(job.sab) + "/"
-    val rec = Mrsab.orEmpty(Mrsab.record(source, job.sab))
+    val rec = Mrsab.orEmpty(lookups.mrsab(job.sab))
 
     // F18 version gate (`umls2rdf.py:881-887`).
     if (conf.processOnlyCurrentVersion && !rec.isCurrentVersion(conf.umlsVersion))
@@ -95,7 +111,7 @@ object OntologyWriter {
       s"No LAT found in MRSAB for ontology ${job.sab}")).toLowerCase
 
     val assembler = new ConceptAssembler(spark, source, job.sab,
-      loadOnCuis = job.loadOnCuis, lang = lat)
+      loadOnCuis = job.loadOnCuis, lang = lat, lookups = Some(lookups))
     // The reference's tree checks are TRUTHINESS tests (`if tree:`,
     // `umls2rdf.py:411,422,437`) — an MSH export whose D-tree query
     // returns zero edges renders tree-less (no MN-root rule). One

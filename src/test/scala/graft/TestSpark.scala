@@ -26,6 +26,26 @@ object TestSpark {
       schema)
   }
 
+  /** The same fixture rows through the two source paths the export
+    * reads: RRF files, where an absent value reads as "", and in-memory
+    * tables, where it is NULL. Each table is one partition, so scan order
+    * is row order. */
+  def bothPaths(tables: Map[String, Seq[Map[String, String]]])
+      : Seq[(String, UmlsSource)] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rrf").toString
+    val nulls = tables.map { case (name, rows) =>
+      val fields = UmlsSource.schemaOf(name).fieldNames.toSeq
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$name.RRF"),
+        rows.map(m => fields.map(f => Option(m.getOrElse(f, "")).getOrElse(""))
+          .mkString("", "|", "|\n"))
+          .mkString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      name -> spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.map(m => Row.fromSeq(fields.map(f => m.getOrElse(f, null)))), 1),
+        UmlsSource.schemaOf(name))
+    }
+    Seq("rrf" -> UmlsSource.rrf(spark, dir), "nulls" -> UmlsSource.fixed(nulls))
+  }
+
   /** Fixture source where unspecified tables are empty. */
   def fixedSource(tables: Map[String, DataFrame]): UmlsSource =
     new UmlsSource {

@@ -94,6 +94,59 @@ class UmlsPipelineSpec extends AnyFunSuite {
         s"$t scan count grew with the manifest: $one vs $two")
   }
 
+  test("run-level lookups: MRSAB, MRRANK and MRDOC reads do not grow with " +
+    "the manifest, and every lookup job is labelled graft:run:<lookup>") {
+    import graft.sources.UmlsSource
+    import scala.collection.mutable
+    val group = "graft-run-lookups-pin"
+    val descs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = js.properties
+        if (props != null &&
+            group == props.getProperty("spark.jobGroup.id")) {
+          descs.add(String.valueOf(
+            props.getProperty("spark.job.description")))
+          ()
+        }
+      }
+    }
+    def run(sabs: Seq[String]): Map[String, Int] = {
+      val counts = mutable.Map.empty[String, Int]
+      val inner = TestSpark.fixedSource(fixture)
+      val counting = new UmlsSource {
+        def table(name: String) = {
+          counts.synchronized { counts(name) = counts.getOrElse(name, 0) + 1 }
+          inner.table(name)
+        }
+      }
+      val out = Files.createTempDirectory("pipe-lookups-out").toString
+      new UmlsPipeline(spark, counting,
+        sabs.map(s => OntologyJob(s, None, s"$s.ttl", loadOnCuis = false)),
+        PipelineConfig(out, s"$out/.state",
+          UmlsExportConfig(umlsVersion = "2025AB"), parallelism = 2)).run()
+      counts.toMap
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (one, two) =
+      try {
+        spark.sparkContext.setJobGroup(group, "run lookups pin")
+        (run(Seq("SABA")), run(Seq("SABA", "SABB")))
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        Thread.sleep(1500) // listener events are posted asynchronously
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    for (t <- Seq("MRSAB", "MRRANK", "MRDOC"))
+      assert(two.getOrElse(t, 0) === one.getOrElse(t, 0),
+        s"$t read count grew with the manifest: $one vs $two")
+    import scala.jdk.CollectionConverters._
+    val runLabels = descs.asScala.filter(_.startsWith("graft:run:")).toSet
+    assert(runLabels === Set("graft:run:release_lookups",
+      "graft:run:semantic_types", "graft:run:property_docs"), descs)
+  }
+
   test("q25m dataflow (multiSabExport): parallel shared-scan exports " +
     "keep inner fat-table reads job-count-independent and write every " +
     "SAB's file") {

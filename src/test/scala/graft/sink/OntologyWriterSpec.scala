@@ -222,23 +222,11 @@ class OntologyWriterSpec extends AnyFunSuite {
     assert(countOf(" .\n\n") >= 2) // each concept term closes the block
   }
 
-  test("single-render distributed export: the render map materializes " +
-    "in ONE execution and the write pass re-reads the checkpoint " +
-    "(metadata collects aside) — r10 pin, updated r20") {
-    // The r9 single-pass rewrite's claim, now CI-asserted: counters /
-    // errors / properties ride accumulators on the write job — no
-    // extra aggregation actions over the rendered terms. Since r20 the
-    // export issues exactly FIVE SQL executions: three bounded
-    // metadata collects (MRSAB record, SRC cui_roots, MRRANK map), the
-    // ONE materialization of the rendered terms (Materialize.cut —
-    // before r20 the write's range-sort sampled its LIVE child, so the
-    // assemble+finish+render subtree executed TWICE inside the write
-    // execution — 40k render calls for 20k terms),
-    // and the write action over the checkpointed flat rows (AQE may
-    // split an execution into several jobs; they share an execution
-    // id). A regression that re-renders per action would count 6+.
-    // Jobs are filtered by a dedicated job group so concurrently-
-    // running suites can't pollute the count.
+  /** The SQL execution ids of the jobs `body` launches. Jobs are
+    * filtered by a dedicated job group so concurrently-running suites
+    * can't pollute the count; AQE may split an execution into several
+    * jobs, which share an execution id. */
+  private def sqlExecutions(body: => Unit): java.util.Set[String] = {
     val group = "graft-export-pin"
     val execIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -253,26 +241,72 @@ class OntologyWriterSpec extends AnyFunSuite {
         }
       }
     }
-    val docs = graft.assemble.PropertyDocs.collectMap(fixture("MRDOC"))
     spark.sparkContext.addSparkListener(listener)
     try {
       spark.sparkContext.setJobGroup(group, "export single-pass pin")
-      val dir = Files.createTempDirectory("graft-ttl-pin").toString
-      val rep = OntologyWriter.write(spark, TestSpark.fixedSource(fixture),
-        OntologyJob("TEST", None, "TEST.ttl", loadOnCuis = false),
-        UmlsExportConfig(umlsVersion = "2025AB"),
-        s"$dir/TEST.ttl", docs, "")
-      assert(rep.terms === 2L)
+      body
       // listener events are posted asynchronously; give them a beat
       Thread.sleep(1500)
-      assert(execIds.size === 5,
-        s"export issued ${execIds.size} SQL executions " +
-          s"(expected 5: MRSAB + cui_roots + MRRANK metadata collects " +
-          s"+ the one render materialization + the write pass): $execIds")
+      execIds
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
     }
+  }
+
+  private val pinJob = OntologyJob("TEST", None, "TEST.ttl", loadOnCuis = false)
+
+  test("single-render distributed export: the render map materializes " +
+    "in ONE execution and the write pass re-reads the checkpoint " +
+    "(metadata collects aside) — r10 pin, updated r20") {
+    // The r9 single-pass rewrite's claim, now CI-asserted: counters /
+    // errors / properties ride accumulators on the write job — no
+    // extra aggregation actions over the rendered terms. Since r20 the
+    // export issues exactly FIVE SQL executions: three bounded
+    // metadata collects (MRSAB record, SRC cui_roots, MRRANK map), the
+    // ONE materialization of the rendered terms (Materialize.cut —
+    // before r20 the write's range-sort sampled its LIVE child, so the
+    // assemble+finish+render subtree executed TWICE inside the write
+    // execution — 40k render calls for 20k terms),
+    // and the write action over the checkpointed flat rows. A regression
+    // that re-renders per action would count 6+.
+    val docs = graft.assemble.PropertyDocs.collectMap(fixture("MRDOC"))
+    val execIds = sqlExecutions {
+      val dir = Files.createTempDirectory("graft-ttl-pin").toString
+      val rep = OntologyWriter.write(spark, TestSpark.fixedSource(fixture),
+        pinJob, UmlsExportConfig(umlsVersion = "2025AB"),
+        s"$dir/TEST.ttl", docs, "")
+      assert(rep.terms === 2L)
+    }
+    assert(execIds.size === 5,
+      s"export issued ${execIds.size} SQL executions " +
+        s"(expected 5: MRSAB + cui_roots + MRRANK metadata collects " +
+        s"+ the one render materialization + the write pass): $execIds")
+  }
+
+  test("an export given the run's lookup snapshot issues exactly two SQL " +
+    "executions: the render materialization and the write pass") {
+    val source = TestSpark.fixedSource(fixture)
+    val docs = graft.assemble.PropertyDocs.collectMap(fixture("MRDOC"))
+    val lookups = graft.assemble.ReleaseLookups.load(source, Seq("TEST"))
+    val dir = Files.createTempDirectory("graft-ttl-pin").toString
+    val execIds = sqlExecutions {
+      val rep = OntologyWriter.write(spark, source, pinJob,
+        UmlsExportConfig(umlsVersion = "2025AB"), s"$dir/TEST.ttl", docs,
+        "", lookups)
+      assert(rep.terms === 2L)
+    }
+    assert(execIds.size === 2,
+      s"export issued ${execIds.size} SQL executions: $execIds")
+    // same bytes as the export that reads its own lookups
+    val (_, text) = export(Files.createTempDirectory("graft-ttl").toString)
+    val semTypes = SemanticTypes.generate(fixture("MRSTY"),
+      "http://purl.bioontology.org/ontology/STY/", withRoots = false)
+    OntologyWriter.write(spark, source, pinJob,
+      UmlsExportConfig(umlsVersion = "2025AB"), s"$dir/TEST.ttl", docs,
+      semTypes, lookups)
+    assert(new String(Files.readAllBytes(Paths.get(s"$dir/TEST.ttl")),
+      StandardCharsets.UTF_8) === text)
   }
 
   test("CappedErrorAccumulator: bounded kept set, exact total, across " +
