@@ -17,6 +17,10 @@
 # counts + names. Exit code is the diff's (1 on any mismatch), so the
 # script is a round-close gate.
 #
+# The cluster master and the core count default to the full-size axis
+# (local-cluster[2,8,4096], 32 cores); AXIS_MASTER and AXIS_CPUS shrink
+# it for a smaller host, and the artifact records what was used.
+#
 # SPARK_SCALA_VERSION is required: executor JVMs are launched through
 # the release-layout launcher, which cannot infer the Scala version
 # without it (the "Cannot find any build directories" failure).
@@ -24,13 +28,15 @@ set -euo pipefail
 SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT="${2:-/tmp/axis}"
 AXIS_JSON="${3:-AXIS.json}"
+AXIS_MASTER="${AXIS_MASTER:-local-cluster[2,8,4096]}"
+AXIS_CPUS="${AXIS_CPUS:-32}"
 cd "$(dirname "$0")/.."
 
-SPARK_GRAFT_CPUS=32 sbt -batch \
+SPARK_GRAFT_CPUS="$AXIS_CPUS" sbt -batch \
   "runMain graft.Verify $SF_DIR ${OUT}_default"
 
 SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
-SPARK_GRAFT_MASTER='local-cluster[2,8,4096]' SPARK_GRAFT_CPUS=32 \
+SPARK_GRAFT_MASTER="$AXIS_MASTER" SPARK_GRAFT_CPUS="$AXIS_CPUS" \
   sbt -batch "runMain graft.Verify $SF_DIR ${OUT}_lc"
 
 # Capture the diff's exit code instead of letting `set -e` abort
@@ -42,9 +48,9 @@ SPARK_GRAFT_MASTER='local-cluster[2,8,4096]' SPARK_GRAFT_CPUS=32 \
 rc=0
 python3 tools/diff_runs.py "${OUT}_default" "${OUT}_lc" \
   --json "${AXIS_JSON}.tmp" || rc=$?
-python3 - "$AXIS_JSON" "$SF_DIR" <<'EOF'
+python3 - "$AXIS_JSON" "$SF_DIR" "$AXIS_MASTER" "$AXIS_CPUS" <<'EOF'
 import json, subprocess, sys
-out, sf = sys.argv[1], sys.argv[2]
+out, sf, master, cpus = sys.argv[1:5]
 d = json.load(open(out + ".tmp"))
 def git(*args):
     return subprocess.run(["git"] + list(args), capture_output=True,
@@ -56,7 +62,7 @@ def git(*args):
 # src_dirty records uncommitted src/tools edits at run time — a dirty
 # axis is not evidence about any commit.
 rec = {"metric": "multi_jvm_axis", "sf": sf,
-       "master_a": "local[32]", "master_b": "local-cluster[2,8,4096]",
+       "master_a": "local[%s]" % cpus, "master_b": master,
        "head": git("rev-parse", "HEAD"),
        "src_tree": git("rev-parse", "HEAD:src"),
        "tools_tree": git("rev-parse", "HEAD:tools"),
