@@ -189,7 +189,8 @@ object ConceptRenderer {
   }
 
   /** Dataset form: one narrow map stage, no shuffle — ordering for the
-    * file sink happens downstream (`orderBy(code)` in the writer). */
+    * file sink happens downstream (the writer sorts each partition by
+    * code and merges the parts on the driver). */
   def renderTerms(concepts: Dataset[UmlsConceptRow], cfg: RenderConfig)
       : Dataset[RenderedTerm] = {
     import concepts.sparkSession.implicits._

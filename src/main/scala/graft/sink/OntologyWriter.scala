@@ -1,18 +1,23 @@
 package graft.sink
 
-import java.io.{File, FileOutputStream}
+import java.io.{BufferedOutputStream, File, FileOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.util.{Failure, Success, Try}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions.col
 
 import graft.assemble.{ConceptAssembler, Mrsab, PropertyDoc, ReleaseLookups}
 import graft.functions.TurtleFunctions.mapLang
 import graft.model.{OntologyJob, TermProperty}
-import graft.operators.Materialize
 import graft.render.{ConceptRenderer, OntologyRender, RenderConfig}
 import graft.sources.UmlsSource
 
@@ -62,11 +67,12 @@ private[sink] final case class FinishedRow(
   * property block, semantic types.
   *
   * Spark-first shape: assembly, finishing and render run distributed;
-  * executors write the code-sorted term text as parts and the driver
-  * concatenates their bytes into the single file that is the output
-  * contract (one `.ttl` per SAB). Term order is `orderBy(code)` — the
-  * reference emits dict-insertion order, unreproducible distributed
-  * (SURVEY.md §7.1.6); intra-term bytes are reference-equal.
+  * executors write each spine partition's code-sorted term text as a
+  * part and the driver merges the parts by code into the single file
+  * that is the output contract (one `.ttl` per SAB). Term order is
+  * Spark's string order on code — the reference emits dict-insertion
+  * order, unreproducible distributed (SURVEY.md §7.1.6); intra-term
+  * bytes are reference-equal.
   */
 object OntologyWriter {
 
@@ -140,22 +146,18 @@ object OntologyWriter {
     finally assembler.unpersistShared()
   }
 
-  /** The export's rendered terms, in code order. S6 per-term error
-    * tolerance: finishing failures arrive as `__finish_err` texts, and
-    * render runs under `Try`, so one bad term cannot sink the file.
+  /** The export's rendered terms, each spine partition sorted by code.
+    * S6 per-term error tolerance: finishing failures arrive as
+    * `__finish_err` texts, and render runs under `Try`, so one bad term
+    * cannot sink the file.
     *
-    * Render ONCE: the global orderBy is a range exchange whose
-    * partitioner SAMPLES its child — with render as a live subtree below
-    * the sort, the whole assemble+finish+render map executed twice per
-    * export (40k render calls for a 20k-term export). Cutting lineage on
-    * the RENDERED rows materializes the per-term path exactly once; the
-    * sampling pass and the shuffle then re-scan flat (code, text) blocks.
-    * (The dual — sorting the finished rows and rendering above the
-    * exchange — measured worse: the nested atom/rel struct rows cost
-    * more to shuffle, sort and re-decode than the render pass saved.)
-    * Blocks are output-sized, MEMORY_AND_DISK, and freed by the
-    * ContextCleaner when the export returns; on elastic clusters the
-    * reliable-checkpoint knob applies (see Materialize). */
+    * Render runs inside the `groupBy(code)` spine's own partitions, and
+    * `sortWithinPartitions` orders each one locally: there is no
+    * exchange above the spine, so each term is rendered exactly once
+    * with no cut, and no output-sized shuffle. The file's global code
+    * order comes from the driver's merge of the sorted parts
+    * ([[mergeParts]]). Nothing is checkpointed: a lost executor's
+    * partitions recompute by lineage. */
   private[graft] def rendered(assembler: ConceptAssembler, cfg: RenderConfig,
       strict: Boolean): Dataset[RenderResult] = {
     val renderOne: FinishedRow => RenderResult = { f =>
@@ -170,34 +172,38 @@ object OntologyWriter {
             s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
-    Materialize.cut(
-      assembler.conceptsColumnsTry(strict)
-        .as(Encoders.product[FinishedRow])
-        .map(renderOne)(Encoders.product[RenderResult]).toDF())
-      .as(Encoders.product[RenderResult])
-      .orderBy("code")
+    assembler.conceptsColumnsTry(strict)
+      .as(Encoders.product[FinishedRow])
+      .map(renderOne)(Encoders.product[RenderResult])
+      .sortWithinPartitions("code")
   }
 
-  /** The write: executors write the globally `orderBy(code)`-sorted term
-    * text as parts (a global sort yields range-partitioned parts whose
-    * name order IS the code order); the driver never iterates rows —
-    * counters, error log lines and the property set ride ACCUMULATORS on
-    * the write job itself, so the whole export is ONE pass over the
-    * rendered terms — and the driver then CONCATENATES part bytes into
-    * the single-file contract. The driver never holds a partition of
-    * rendered text, so a multi-GB single-SAB file costs it no memory.
+  /** Row-group size of the parts: the driver's merge holds one row group
+    * of every part at a time, so this bounds its memory per part. */
+  private val PartRowGroupBytes = 8L << 20
+
+  /** The write: executors write each partition's code-sorted
+    * `(code, text)` rows as one parquet part through Spark's file writer
+    * (its commit protocol keeps task retries and speculation safe); the
+    * driver then k-way merges the parts by code ([[mergeParts]]) into the
+    * single file that is the output contract. The driver never iterates
+    * rows through Spark — counters, error log lines and the property set
+    * ride ACCUMULATORS on the write job itself, so the whole export is
+    * ONE pass over the rendered terms — and it holds one row group per
+    * part, not a partition of rendered text, so a multi-GB single-SAB
+    * file costs it bounded memory.
     *
     * Crash-safe publish: the file is assembled at `<out>.tmp` and renamed
     * onto `<out>` atomically once complete, and `<out>.parts` and the temp
-    * file are removed whatever happens — a failed write leaves neither a
-    * partial final file nor stale parts (a previous complete `<out>`
-    * survives it untouched).
+    * file are removed whatever happens — a failed write or merge leaves
+    * neither a partial final file nor stale parts (a previous complete
+    * `<out>` survives it untouched).
     *
-    * Exactly-once counters: the accumulator updates run in the map
-    * AFTER the global sort, i.e. inside the write job's RESULT stage —
-    * Spark applies a result task's accumulator updates once regardless
-    * of retries/speculation. (The same map placed before the sort would
-    * live in a shuffle-map stage, where stage retries double-count.) */
+    * Exactly-once counters: with no exchange above the spine, the
+    * accumulator map runs in the write job's RESULT stage — Spark
+    * applies a result task's accumulator updates once regardless of
+    * retries/speculation. (A map placed below an exchange would live in
+    * a shuffle-map stage, where stage retries double-count.) */
   private def writeParts(
       spark: SparkSession,
       rendered: Dataset[RenderResult],
@@ -216,10 +222,9 @@ object OntologyWriter {
     val propAcc = new MinMapAccumulator
     sc.register(propAcc, "graft.properties")
 
-    // The text sink appends one '\n' per row; term text already ends
-    // with '\n', so strip one to write each term's bytes exactly. Error
-    // rows survive the sort so the result-stage map can count them, then
-    // drop out before the text projection.
+    // Error rows reach the result-stage map so it can count them, then
+    // drop out before the parts are written. Codes and texts are unique
+    // per row, so neither column gains anything from a dictionary.
     val partsDir = outFile + ".parts"
     val tmpFile = Paths.get(outFile + ".tmp")
     try {
@@ -236,8 +241,12 @@ object OntologyWriter {
           r
         }(Encoders.product[RenderResult])
         .filter(col("error").isNull)
-        .select(expr("substring(text, 1, length(text) - 1)").as("value"))
-        .write.mode("overwrite").text(partsDir)
+        .select("code", "text")
+        .write.mode("overwrite")
+        .option("compression", "none")
+        .option("parquet.enable.dictionary", "false")
+        .option("parquet.block.size", PartRowGroupBytes.toString)
+        .parquet(partsDir)
 
       val (errKept, errTotal) = errRows.value
       errKept.foreach { t =>
@@ -252,15 +261,16 @@ object OntologyWriter {
       val props = propAcc.value
         .map { case (uri, att) => TermProperty(uri, att) }.toSeq
 
-      val out = new FileOutputStream(tmpFile.toFile)
+      val out = new BufferedOutputStream(
+        new FileOutputStream(tmpFile.toFile), 1 << 16)
       try {
         def w(s: String): Unit =
           out.write(s.getBytes(StandardCharsets.UTF_8))
         w(OntologyRender.Prefixes)
         w(OntologyRender.header(ns, job.sab, rec, conf.umlsVersion))
-        new File(partsDir).listFiles()
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-          .foreach(f => Files.copy(f.toPath, out))
+        mergeParts(new File(partsDir).listFiles()
+          .filter(_.getName.startsWith("part-")).toSeq,
+          sc.hadoopConfiguration, out)
         w(OntologyRender.propertyBlock(props, propertyDocs))
         if (conf.includeSemanticTypes) { w(semanticTypes); w("\n") }
       } finally out.close()
@@ -276,6 +286,47 @@ object OntologyWriter {
     }
     WriteReport(job.sab, outFile, terms.value, errors.value,
       dupL.value, dupO.value, dupS.value)
+  }
+
+  /** Stream the term texts of the code-sorted `(code, text)` parquet
+    * `parts` into `out` in global code order: a k-way merge on the
+    * driver, no Spark job. Codes compare as unsigned UTF-8 bytes — the
+    * order of Spark's string sort and of
+    * [[graft.functions.SqlFns.sparkStringOrder]] — and are never NULL
+    * (the atom filter drops NULL codes). They are unique per row after
+    * `groupBy(code)`, so the order is total. */
+  private def mergeParts(parts: Seq[File], hadoopConf: Configuration,
+      out: OutputStream): Unit = {
+    final class Cursor(reader: ParquetReader[Group]) {
+      var code: Array[Byte] = _
+      var text: Binary = _
+      def advance(): Boolean = reader.read() match {
+        case null => false
+        case g =>
+          code = g.getBinary("code", 0).getBytes
+          text = g.getBinary("text", 0)
+          true
+      }
+    }
+    val byCode: java.util.Comparator[Cursor] =
+      (a, b) => java.util.Arrays.compareUnsigned(a.code, b.code)
+    val heap = new java.util.PriorityQueue[Cursor](math.max(1, parts.size),
+      byCode)
+    val readers = scala.collection.mutable.ArrayBuffer.empty[ParquetReader[Group]]
+    try {
+      parts.foreach { f =>
+        val reader = ParquetReader.builder(new GroupReadSupport(),
+          new Path(f.toURI)).withConf(hadoopConf).build()
+        readers += reader
+        val c = new Cursor(reader)
+        if (c.advance()) heap.add(c)
+      }
+      while (!heap.isEmpty) {
+        val c = heap.poll()
+        c.text.writeTo(out)
+        if (c.advance()) heap.add(c)
+      }
+    } finally readers.foreach(_.close())
   }
 }
 

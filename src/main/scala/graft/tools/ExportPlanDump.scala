@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** Dump `.explain("formatted")` of the q25e export WRITE frame — the
   * dataflow `OntologyWriter` executes.
@@ -11,15 +11,12 @@ import org.apache.spark.sql.functions._
   *
   * Uses the writer's own composition: columnar finishing
   * (conceptsColumnsTry — prefLabel selection inside whole-stage
-  * codegen, per-term errors as a column) → render map → Materialize
-  * .cut (the one materialization of the rendered terms) → global
-  * orderBy over the checkpoint → error filter → trailing-newline
-  * strip. Because the cut is EAGER, this dump shows the write frame
-  * scanning a LogicalRDD/ExistingRDD instead of the live
-  * assemble+render subtree — the sort's range sampler therefore
-  * re-scans blocks, not the pipeline. A scratch twin at the
-  * pre-change commit (per the documented worktree workflow) dumps the
-  * r19 composition: the render map LIVE below the orderBy.
+  * codegen, per-term errors as a column) → render map →
+  * sortWithinPartitions(code) → error filter → the `(code, text)`
+  * projection the parquet parts hold. The dump shows the render map
+  * and the local sort sitting directly on the `groupBy(code)` spine:
+  * no exchange above it and no checkpoint scan; the global order comes
+  * from the driver's merge of the parts, which runs no plan.
   *
   *   sbt 'runMain graft.tools.ExportPlanDump <outFile>'
   */
@@ -42,11 +39,10 @@ object ExportPlanDump {
     val cfg = graft.render.RenderConfig(ns = "http://x/", lang = "en",
       hierarchy = true, hasTree = false, dedupe = true,
       styUrl = "http://x/STY/")
-    // The writer's composition: columnar finish → render → eager cut →
-    // sort.
+    // The writer's composition: columnar finish → render → local sort.
     val frame = graft.sink.OntologyWriter.rendered(asm, cfg, strict = false)
       .filter(col("error").isNull)
-      .select(expr("substring(text, 1, length(text) - 1)").as("value"))
+      .select("code", "text")
     val plan = frame.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
     java.nio.file.Files.write(java.nio.file.Paths.get(args(0)),

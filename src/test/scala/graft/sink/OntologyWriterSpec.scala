@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+
 import graft.TestSpark
 import graft.model.OntologyJob
 import graft.render.SemanticTypes
@@ -256,20 +258,46 @@ class OntologyWriterSpec extends AnyFunSuite {
 
   private val pinJob = OntologyJob("TEST", None, "TEST.ttl", loadOnCuis = false)
 
-  test("single-render distributed export: the render map materializes " +
-    "in ONE execution and the write pass re-reads the checkpoint " +
-    "(metadata collects aside) — r10 pin, updated r20") {
+  /** Run `body` with session confs set, restoring the previous values. */
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The writer's own rendered rows for `tables`, collected unordered. */
+  private def renderedRows(tables: Map[String, org.apache.spark.sql.DataFrame])
+      : Seq[RenderResult] = {
+    val lookups = graft.assemble.ReleaseLookups.forSab(
+      TestSpark.fixedSource(tables), "TEST")
+    val asm = new graft.assemble.ConceptAssembler(spark,
+      TestSpark.fixedSource(tables), "TEST", lang = "eng",
+      lookups = Some(lookups))
+    val cfg = graft.render.RenderConfig(
+      ns = "http://purl.bioontology.org/ontology/TEST/", lang = "en",
+      hierarchy = true, hasTree = false, dedupe = true,
+      styUrl = "http://purl.bioontology.org/ontology/STY/")
+    try OntologyWriter.rendered(asm, cfg, strict = false).collect().toSeq
+    finally asm.unpersistShared()
+  }
+
+  test("single-render distributed export: the render map runs inside " +
+    "the ONE write execution (metadata collects aside) — r10 pin, " +
+    "updated for the sort-free tail") {
     // The r9 single-pass rewrite's claim, now CI-asserted: counters /
     // errors / properties ride accumulators on the write job — no
-    // extra aggregation actions over the rendered terms. Since r20 the
-    // export issues exactly FIVE SQL executions: three bounded
-    // metadata collects (MRSAB record, SRC cui_roots, MRRANK map), the
-    // ONE materialization of the rendered terms (Materialize.cut —
-    // before r20 the write's range-sort sampled its LIVE child, so the
-    // assemble+finish+render subtree executed TWICE inside the write
-    // execution — 40k render calls for 20k terms),
-    // and the write action over the checkpointed flat rows. A regression
-    // that re-renders per action would count 6+.
+    // extra aggregation actions over the rendered terms. The export
+    // issues exactly FOUR SQL executions: three bounded metadata
+    // collects (MRSAB record, SRC cui_roots, MRRANK map) and the write,
+    // which renders inside the spine's partitions and sorts them
+    // locally. There is no render materialization and no range sort
+    // whose sampler could re-run the render subtree; the driver's merge
+    // of the parts runs no Spark job. A regression that re-renders per
+    // action, or puts a cut back, would count 5+.
     val docs = graft.assemble.PropertyDocs.collectMap(fixture("MRDOC"))
     val execIds = sqlExecutions {
       val dir = Files.createTempDirectory("graft-ttl-pin").toString
@@ -278,14 +306,14 @@ class OntologyWriterSpec extends AnyFunSuite {
         s"$dir/TEST.ttl", docs, "")
       assert(rep.terms === 2L)
     }
-    assert(execIds.size === 5,
+    assert(execIds.size === 4,
       s"export issued ${execIds.size} SQL executions " +
-        s"(expected 5: MRSAB + cui_roots + MRRANK metadata collects " +
-        s"+ the one render materialization + the write pass): $execIds")
+        s"(expected 4: MRSAB + cui_roots + MRRANK metadata collects " +
+        s"+ the write pass): $execIds")
   }
 
-  test("an export given the run's lookup snapshot issues exactly two SQL " +
-    "executions: the render materialization and the write pass") {
+  test("an export given the run's lookup snapshot issues exactly one SQL " +
+    "execution: the write pass") {
     val source = TestSpark.fixedSource(fixture)
     val docs = graft.assemble.PropertyDocs.collectMap(fixture("MRDOC"))
     val lookups = graft.assemble.ReleaseLookups.load(source, Seq("TEST"))
@@ -296,8 +324,9 @@ class OntologyWriterSpec extends AnyFunSuite {
         "", lookups)
       assert(rep.terms === 2L)
     }
-    assert(execIds.size === 2,
-      s"export issued ${execIds.size} SQL executions: $execIds")
+    assert(execIds.size === 1,
+      s"export issued ${execIds.size} SQL executions (expected 1: the " +
+        s"write pass): $execIds")
     // same bytes as the export that reads its own lookups
     val (_, text) = export(Files.createTempDirectory("graft-ttl").toString)
     val semTypes = SemanticTypes.generate(fixture("MRSTY"),
@@ -359,6 +388,24 @@ class OntologyWriterSpec extends AnyFunSuite {
     assert(new String(Files.readAllBytes(Paths.get(out)),
       StandardCharsets.UTF_8) === "earlier")
     assert(new java.io.File(dir).list().toSeq === Seq("TEST.ttl"))
+
+    // A failure inside the driver's merge: the parts commit, then turn
+    // unreadable, so the merge throws with <out>.tmp half-assembled.
+    val docs = graft.assemble.PropertyDocs.collectMap(fixture("MRDOC"))
+    val earlier = Array.tabulate[Byte](256)(_.toByte)
+    Files.write(Paths.get(out), earlier)
+    PartsProbe.corrupt(dir)
+    try withConf(PartsProbe.ProtocolConf -> PartsProbe.ProtocolClass) {
+      intercept[Exception](
+        OntologyWriter.write(spark, TestSpark.fixedSource(fixture),
+          OntologyJob("TEST", None, "TEST.ttl", loadOnCuis = false),
+          UmlsExportConfig(umlsVersion = "2025AB"), out, docs, ""))
+    } finally PartsProbe.forget(dir)
+    assert(!Files.exists(Paths.get(s"$out.tmp")))
+    assert(!Files.exists(Paths.get(s"$out.parts")))
+    assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(out)),
+      earlier))
+    assert(new java.io.File(dir).list().toSeq === Seq("TEST.ttl"))
   }
 
   test("mass render failure: errors past the log cap stay exactly " +
@@ -384,5 +431,138 @@ class OntologyWriterSpec extends AnyFunSuite {
       StandardCharsets.UTF_8)
     assert(text.contains("/TEST/GOOD1> a owl:Class"))
     assert(!text.contains("BAD0001"))
+  }
+
+  test("the driver merge writes the terms of several sorted parts in " +
+    "Spark's string order, past the BMP, with an empty part among them") {
+    // "Ａ" (U+FF21) sorts AFTER "😀" (U+1F600) in Java's UTF-16 order
+    // but BEFORE it in Spark's UTF-8 byte order. Partition 0 writes a
+    // part even when it holds no row, so codes that hash to it are left
+    // out: its part is the empty one.
+    val nParts = 8
+    val wanted = Seq("Ａ", "😀", "ｚ", "é", "Z") ++ (1 to 24).map(i => f"K$i%02d")
+    val partOf = spark.createDataFrame(wanted.map(Tuple1(_))).toDF("code")
+      .select(col("code"), pmod(hash(col("code")), lit(nParts)))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    val codes = wanted.filter(partOf(_) != 0)
+    assert(codes.contains("Ａ") && codes.contains("😀"))
+    assert(codes.map(partOf).distinct.size >= 3)
+    val tables = Map(
+      "MRCONSO" -> TestSpark.mkTable("MRCONSO", codes.zipWithIndex.map {
+        case (c, i) => conso(s"CUI_$i", s"AUI_$i", c, s"Label $c", "PT")
+      }),
+      "MRSAB" -> fixture("MRSAB"))
+
+    val dir = Files.createTempDirectory("graft-ttl-merge").toString
+    PartsProbe.record(dir)
+    val (rep, rows) = try withConf(
+        "spark.sql.shuffle.partitions" -> nParts.toString,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        PartsProbe.ProtocolConf -> PartsProbe.ProtocolClass) {
+      (OntologyWriter.write(spark, TestSpark.fixedSource(tables), pinJob,
+        UmlsExportConfig(umlsVersion = "2025AB"), s"$dir/TEST.ttl",
+        Map.empty, ""), PartsProbe.partRows(dir))
+    } finally PartsProbe.forget(dir)
+    val ttl = new String(Files.readAllBytes(Paths.get(s"$dir/TEST.ttl")),
+      StandardCharsets.UTF_8)
+    assert(rows.count(_ > 0) >= 3, s"part row counts: $rows")
+    assert(rows.count(_ == 0) >= 1, s"part row counts: $rows")
+    assert(rows.sum === codes.size.toLong)
+    assert(rep.terms === codes.size.toLong && rep.errors === 0L)
+
+    val rendered = renderedRows(tables)
+    assert(rendered.forall(_.error == null))
+    val sparkOrder = rendered.sortBy(_.code)(
+      graft.functions.SqlFns.sparkStringOrder)
+    assert(sparkOrder.map(_.code) !== rendered.sortBy(_.code).map(_.code),
+      "the fixture must tell UTF-8 order from UTF-16 order")
+    assert(ttl.indexOf(sparkOrder.map(_.text).mkString) > 0,
+      "the term section is not the sorted concatenation")
+    // every term is written exactly once, so the section IS the terms
+    assert(ttl.split(" a owl:Class ;", -1).length - 1 === codes.size)
+  }
+
+  test("an export where every term fails still writes its header and " +
+    "property block around one empty part") {
+    val tables = Map(
+      "MRCONSO" -> TestSpark.mkTable("MRCONSO", (1 to 5).map(i =>
+        conso(s"CUI_F$i", s"AUI_F$i", s"FAIL$i", s"Unlabelable $i", "SY"))),
+      "MRSAB" -> fixture("MRSAB"))
+    val source = TestSpark.fixedSource(tables)
+    val docs = graft.assemble.PropertyDocs.collectMap(fixture("MRDOC"))
+    val dir = Files.createTempDirectory("graft-ttl-allfail").toString
+    PartsProbe.record(dir)
+    val (rep, rows) = try withConf(
+        PartsProbe.ProtocolConf -> PartsProbe.ProtocolClass) {
+      (OntologyWriter.write(spark, source, pinJob,
+        UmlsExportConfig(umlsVersion = "2025AB"), s"$dir/TEST.ttl", docs, ""),
+        PartsProbe.partRows(dir))
+    } finally PartsProbe.forget(dir)
+    assert(rows === Seq(0L), s"part row counts: $rows")
+    assert(rep.terms === 0L && rep.errors === 5L)
+    val rec = graft.assemble.Mrsab.orEmpty(
+      graft.assemble.ReleaseLookups.forSab(source, "TEST").mrsab("TEST"))
+    val expected = graft.render.OntologyRender.Prefixes +
+      graft.render.OntologyRender.header(
+        "http://purl.bioontology.org/ontology/TEST/", "TEST", rec, "2025AB") +
+      graft.render.OntologyRender.propertyBlock(Nil, docs) + "\n"
+    assert(new String(Files.readAllBytes(Paths.get(s"$dir/TEST.ttl")),
+      StandardCharsets.UTF_8) === expected)
+    assert(expected.contains("umls:hasSTY a owl:ObjectProperty ;"))
+  }
+
+  test("the write plan has no range exchange and no checkpoint scan: " +
+    "render and the local sort sit on the spine's hash partitions") {
+    import org.apache.spark.sql.catalyst.plans.physical.{
+      HashPartitioning, RangePartitioning}
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec,
+      SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("graft-ttl-plan").toString
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution,
+          ns: Long): Unit = {
+        val ours = helper.collect(qe.executedPlan) {
+          case w: DataWritingCommandExec => w.cmd
+        }.exists {
+          case i: InsertIntoHadoopFsRelationCommand =>
+            i.outputPath.toString.contains(dir)
+          case _ => false
+        }
+        if (ours) { plans.add(qe.executedPlan); () }
+      }
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try OntologyWriter.write(spark, TestSpark.fixedSource(fixture), pinJob,
+      UmlsExportConfig(umlsVersion = "2025AB"), s"$dir/TEST.ttl",
+      graft.assemble.PropertyDocs.collectMap(fixture("MRDOC")), "")
+    finally {
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      spark.listenerManager.unregister(listener)
+    }
+    val plan = plans.poll()
+    assert(plan != null, "the write's executed plan was not captured")
+    assert(!helper.collect(plan) { case r: RDDScanExec => r }
+      .exists(_.rdd.isCheckpointed), s"a checkpoint scan:\n$plan")
+    val exchanges = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.exists(_.outputPartitioning.isInstanceOf[HashPartitioning]),
+      s"the spine's hash exchange is missing:\n$plan")
+    assert(!exchanges.exists(
+      _.outputPartitioning.isInstanceOf[RangePartitioning]),
+      s"a range exchange sorts the output:\n$plan")
+    assert(helper.collect(plan) { case s: SortExec if !s.global => s }
+      .nonEmpty, s"no local sort:\n$plan")
+    assert(helper.collect(plan) { case s: SortExec if s.global => s }
+      .isEmpty, s"a global sort:\n$plan")
   }
 }

@@ -259,6 +259,29 @@ class DiffHistorySpec extends AnyFunSuite {
     assert(rcOld === 0, outOld)
   }
 
+  test("requested core counts compare as integers, and a count on one " +
+      "side only prints an advisory") {
+    def numeric(e: String, n: String) =
+      e.replace(s""""cpus_requested":"$n"""", s""""cpus_requested":$n""")
+    // "32" (Bench writes a string) and 32 (a number) are one config
+    val (rcSame, outSame) = run(Seq(
+      entry(quiet, 1.0, cpusRequested = "32"),
+      numeric(entry(quiet, 1.0, cpusRequested = "32"), "32")))
+    assert(!outSame.contains("CONFIG"), outSame)
+    assert(rcSame === 0, outSame)
+    // a padded string still differs from another count
+    val (rcMix, outMix) = run(Seq(
+      entry(quiet, 1.0, cpusRequested = " 8"),
+      numeric(entry(quiet, 1.0, cpusRequested = "32"), "32")))
+    assert(outMix.contains("CONFIG cpus_requested differs (A=8, B=32)"),
+      outMix)
+    assert(rcMix === 1, outMix)
+    val (rcOne, outOne) = run(Seq(entry(quiet, 1.0),
+      entry(quiet, 1.0, cpusRequested = "32")))
+    assert(outOne.contains("cpus_requested recorded on B only (32)"), outOne)
+    assert(rcOne === 0, outOne)
+  }
+
   test("explicit in-range indices work; out-of-range and a lone index " +
       "exit with a usage message instead of a stack trace") {
     val lines = Seq(entry(quiet, 1.0), entry(quiet, 1.0),

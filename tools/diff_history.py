@@ -110,6 +110,20 @@ def parse_args(argv):
     return path, idx, profile, explicit
 
 
+def cpus_requested(rec):
+    """The record's requested core count as an int ("32", 32 and " 32"
+    are one config), or None when the record does not carry it. A value
+    that is not an integer stays a stripped string, so it still compares
+    unequal to any count."""
+    v = rec.get("cpus_requested")
+    if v is None:
+        return None
+    try:
+        return int(str(v).strip())
+    except ValueError:
+        return str(v).strip()
+
+
 def median(xs):
     s = sorted(xs)
     n = len(s)
@@ -259,12 +273,19 @@ def main(argv):
     # REQUESTED core count; entries benched at different configs are
     # different physical plans (r12: defaultParallelism + shuffle
     # partitions differ), so the comparison flags instead of passing.
-    cra = a.get("cpus_requested")
-    crb = b.get("cpus_requested")
-    if cra is not None and crb is not None and str(cra) != str(crb):
+    # Bench writes the count as a JSON string ("32"); other writers may
+    # write a number, so both sides compare as normalized integers.
+    cra = cpus_requested(a)
+    crb = cpus_requested(b)
+    if cra is not None and crb is not None and cra != crb:
         print(f"CONFIG cpus_requested differs (A={cra}, B={crb}) -- "
               "different physical plans; walls are not comparable")
         return 1
+    if (cra is None) != (crb is None):
+        side = "A" if cra is not None else "B"
+        print(f"note   cpus_requested recorded on {side} only "
+              f"({cra if cra is not None else crb}) -- core counts "
+              "not checked")
     print(f"A: {a.get('wall_start')}  total {a.get('total_sec')} s  "
           f"load {a.get('load_avg_start')}->{a.get('load_avg_end')}  "
           f"window {wqa}")
