@@ -63,8 +63,6 @@ import graft.operators.{TextSearch, WebGraph}
   */
 object ScaleStressGraph {
 
-  private def f3(v: Double): String = StressJson.f3(v)
-
   /** Isolated run for calibration: `runMain graft.ScaleStressGraph
     * [sfDir] [factor] [workDir]` — derives a plain replicated corpus
     * (the search gates don't need ScaleStress's dup-structure markers)

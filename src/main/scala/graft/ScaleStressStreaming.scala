@@ -40,8 +40,6 @@ import graft.streaming.{EventStreams, VecStreams}
   */
 object ScaleStressStreaming {
 
-  private def f3(v: Double): String = StressJson.f3(v)
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 100

@@ -5,7 +5,7 @@ import java.io.File
 import org.apache.spark.sql.SparkSession
 
 import graft.pipeline.{PipelineConfig, UmlsPipeline}
-import graft.sink.UmlsExportConfig
+import graft.sink.{UmlsExportConfig, WriteReport}
 import graft.sources.{ConfManifest, UmlsSource}
 
 /** The command-line export — what `python umls2rdf.py` is to the reference
@@ -17,7 +17,9 @@ import graft.sources.{ConfManifest, UmlsSource}
   *       [--strict] [--only-current] [--no-dedupe] [--parallel N]
   *       [--shared-scan] [--master M]
   *
-  * `--strict` fails on empty CODEs, ambiguous AUIs and unmapped languages;
+  * `--strict` fails on empty CODEs, ambiguous AUIs and unmapped languages,
+  * and exits 1 when any ontology had a term error (without it, only an
+  * ontology with errors and no terms exits 1);
   * `--only-current` skips ontologies whose MRSAB record is not the
   * current version; `--no-dedupe` keeps duplicate triples; `--parallel N`
   * exports N ontologies at once; `--master M` sets the Spark master
@@ -89,8 +91,15 @@ object UmlsExportMain {
             s"dups(lit=${r.dupLiteral} obj=${r.dupObject} sub=${r.dupSubclass})"
         println(s"[export] ${r.sab} -> ${r.path}: $status")
       }
-      val failed = reports.exists(r => !r.skipped && r.terms == 0 && r.errors > 0)
-      if (failed) sys.exit(1)
+      val code = exitCode(reports, flags.contains("--strict"))
+      if (code != 0) sys.exit(code)
     } finally spark.stop()
   }
+
+  /** 1 when a SAB wrote no terms and had errors, or, under `--strict`,
+    * when any SAB had a term error; 0 otherwise. */
+  def exitCode(reports: Seq[WriteReport], strict: Boolean): Int =
+    if (reports.exists(r =>
+        !r.skipped && r.errors > 0 && (strict || r.terms == 0))) 1
+    else 0
 }

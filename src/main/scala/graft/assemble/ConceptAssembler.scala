@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.model._
 import graft.sources.UmlsSource
 
 /** Assembles per-code concept rows from the UMLS tables for one SAB —
@@ -74,9 +73,9 @@ class ConceptAssembler(
 
   /** The F1-filtered atoms, persisted once per assembler. Assembly derives
     * the per-code grouping, the AUI→code map (joined 2-3× in
-    * [[relsResolved]]/[[defsByCode]]) and the TUI attachment all from this
-    * one projection, so MRCONSO is scanned ONCE per SAB instead of 4-5×
-    * (the round-2 q25s hotspot: the plan re-derived `atoms` in four
+    * [[relsGroupedWithRoots]]/[[defsByCode]]) and the TUI attachment all
+    * from this one projection, so MRCONSO is scanned ONCE per SAB instead
+    * of 4-5× (the round-2 q25s hotspot: the plan re-derived `atoms` in four
     * subplans whose shuffle keys differ, so ReusedExchange never fired).
     * MEMORY_AND_DISK: a SAB-pruned narrow projection is a few M rows for
     * the largest SAB at full-UMLS scale; disk spill keeps it safe
@@ -155,28 +154,14 @@ class ConceptAssembler(
       atomsShared.select(col("AUI").as("atom_id"), col("code").as("atom_code"))
 
   /** J3+J4: relations attached to their source class, with AUI→code
-    * endpoint resolution in codes mode (`umls2rdf.py:685-727`).
+    * endpoint resolution in codes mode (`umls2rdf.py:685-727`), in ONE
+    * pass: per-source-code grouped relation structs plus the F17 root
+    * flag — `(rcode, rels, is_root)`.
     *
     * Codes mode: attach by AUI2 (inner — a rel not anchored at a class
     * atom is invisible, as in the reference), resolve target by AUI1
     * (unresolved targets dropped, `:717`), drop self-maps (`:715-718`).
     * Cuis mode: attach by CUI2; endpoints are the CUIs, no filtering.
-    * `is_root` (F17) is computed over ALL attached rels — before the
-    * target-resolution filters — exactly like the reference.
-    */
-  def relsResolved: (DataFrame, DataFrame) = {
-    val grouped = relsGroupedWithRoots
-    val out = grouped
-      .select(col("rcode"), explode(col("rels")).as("r"))
-      .select(col("rcode"), col("r.rel").as("rel"), col("r.rela").as("rela"),
-        col("r.cui1").as("cui1"), col("r.codeTarget"), col("r.codeSource"))
-    val rootFlags = grouped
-      .select(col("rcode").as("root_code"), col("is_root"))
-    (out, rootFlags)
-  }
-
-  /** The rels side of the assembly in ONE pass: per-source-code grouped
-    * relation structs plus the F17 root flag — `(rcode, rels, is_root)`.
     *
     * The root flag is detected over the SAME attached-rels relation the
     * grouped structs come from, so fusing both into one `groupBy` halves

@@ -52,19 +52,15 @@ final class ReleaseLookups private (source: UmlsSource, sabs: Seq[String]) {
     require(sabs.contains(sab), s"release lookups were not read for SAB $sab")
 
   /** `get_mrsab_record` (`umls2rdf.py:115-122`): the `RSAB = sab` row
-    * that `orderBy((CURVER != 'Y') asc, VSAB asc).limit(1)` picks — a
-    * NULL CURVER sorts first, then 'Y', then the rest; VSAB in Spark's
-    * order; a full tie keeps the first row in scan order. */
+    * that `orderBy(coalesce(CURVER = 'Y', false) desc, VSAB asc).limit(1)`
+    * picks — a 'Y' row first, then the rest (NULL CURVER among them);
+    * VSAB in Spark's order; a full tie keeps the first row in scan order. */
   def mrsab(sab: String): Option[MrsabRecord] = {
     covers(sab)
     val rows = mrsabCell.rows.filter(r => sab == r.getAs[String]("RSAB"))
     if (rows.isEmpty) None
     else {
-      def curver(r: Row) = r.getAs[String]("CURVER") match {
-        case null => 0
-        case "Y" => 1
-        case _ => 2
-      }
+      def curver(r: Row) = if (r.getAs[String]("CURVER") == "Y") 0 else 1
       val key = Ordering.Tuple2(Ordering.Int, sparkStringOrder)
       val r = rows.minBy(r => (curver(r), r.getAs[String]("VSAB")))(key)
       Some(MrsabRecord(r.schema.fieldNames.iterator.zipWithIndex.map {

@@ -416,7 +416,8 @@ object UmlsQueries {
       (s, _) =>
         UmlsSource.parquet(s, FixtureDir).table("MRSAB")
           .filter(col("RSAB") === "FIX")
-          .orderBy((col("CURVER") =!= "Y").asc, col("VSAB").asc)
+          .orderBy(coalesce(col("CURVER") === "Y", lit(false)).desc,
+            col("VSAB").asc)
           .limit(1)
           .select(col("RSAB").as("rsab"), col("VSAB").as("vsab"),
             col("SVER").as("sver"), col("IMETA").as("imeta"),
@@ -426,7 +427,7 @@ object UmlsQueries {
                LAT AS lat, SSN AS ssn
         FROM ${fx("MRSAB")}
         WHERE RSAB = 'FIX'
-        ORDER BY (CURVER <> 'Y'), VSAB
+        ORDER BY coalesce(CURVER = 'Y', false) DESC, VSAB NULLS FIRST
         LIMIT 1""")),
 
     // ----- q28: MRDOC pivot — A14 VALUE -> (dockey, expanded_form,
@@ -644,13 +645,9 @@ object UmlsQueries {
     * lineitem lines become atoms (one per (order, line); code = part),
     * consecutive lines become rels, orders become defs, parts become
     * atts, customers-of-orders become STY rows. Everything is a narrow
-    * projection — the scan cost stays parquet-side. */
-  /** Factory for profiling tools: a fresh assembler over [[scaleSource]]. */
-  private[graft] def scaleAssembler(s: SparkSession, dir: String)
-      : () => ConceptAssembler =
-    () => new ConceptAssembler(s, scaleSource(s, dir), "BIG")
-
-  /** `hotEvery > 0` collapses every partkey divisible by it into the
+    * projection — the scan cost stays parquet-side.
+    *
+    * `hotEvery > 0` collapses every partkey divisible by it into the
     * single code `X0` — a deliberately skewed SAB (hotEvery=10 → one code
     * holds ~10% of all atoms and att rows) for the q25t skew evidence.
     * `nSabs > 1` splits the same volume across `B0..B{n-1}` SABs (keyed

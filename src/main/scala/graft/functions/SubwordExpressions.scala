@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlShims
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.UnaryExpression
@@ -20,7 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `BpeChainSpec`), so the expression TREE grew linearly with the merge
   * count: plan depth O(merges), every word bouncing through the HOF
   * interpreter once per rule, and — the measured cost that retired it —
-  * ProfileQ183b attributed 90-125 s of cold scheduled-exec per JVM to
+  * a q183b profile (BENCH_NOTES r18) attributed 90-125 s of cold
+  * scheduled-exec per JVM to
   * async C2 compilation of exactly that interpreted chain (the proven
   * 4-14x interpreted-HOF pattern: ArgMinCentroid r17; PqEncode/
   * AdcScore/SimHash64 r18). This expression is rule-count-independent
@@ -104,7 +104,7 @@ case class BpeMergeChain(child: Expression, rules: Seq[(String, String)])
   * three higher-order functions in the apply plan, and HOFs are
   * CodegenFallback: the projection stayed whole-stage-codegen'd but
   * every row bounced through the interpreted lambda dispatcher, whose
-  * C2 warmup is the exact ProfileQ183b cold-pass signature this rewrite
+  * C2 warmup is the exact q183b cold-pass signature this rewrite
   * retires (80 s of cold scheduled-exec remained with the HOF routing;
   * the fold itself was already compiled). With this expression the
   * tokenize projection contains NO higher-order function — split/trim/

@@ -287,11 +287,6 @@ object TextShingleFunctions {
   import org.apache.spark.sql.GraftSqlShims.{columnOf, expressionOf}
   import org.apache.spark.sql.Column
 
-  /** Column form of [[WordShingles]]. `text` must already be lowercased
-    * (callers wrap `lower(...)` — the [[NormalizeCollapse]] contract). */
-  def wordShingles(loweredText: Column, n: Int): Column =
-    columnOf(WordShingles(expressionOf(loweredText), n))
-
   def countCharRange(text: Column, lo: Char, hi: Char): Column =
     columnOf(CountCharRange(expressionOf(text), lo.toByte, hi.toByte))
 

@@ -54,22 +54,12 @@ object TurtleFunctions {
     }
   }
 
-  /** `get_rel_fragment` (`umls2rdf.py:131-132`): RELA if non-empty
-    * (Python falsiness — '' and NULL both fall through), else REL. */
-  def relFragment(rela: String, rel: String): String =
-    if (rela != null && rela.nonEmpty) rela else rel
-
   /** STN parent derivation (C11, `umls2rdf.py:170-175`): dotted path →
     * drop last segment; single-segment → drop last char ("A1" → "A"). */
   def stnParent(stn: String): String =
     if (stn.contains(".")) stn.substring(0, stn.lastIndexOf("."))
     else if (stn.nonEmpty) stn.substring(0, stn.length - 1)
     else stn
-
-  /** IRI-vs-qname object render (C12, `umls2rdf.py:362-363`): wrap in <>
-    * iff the object contains "://". */
-  def renderObject(obj: String): String =
-    if (obj.contains("://")) s"<$obj>" else obj
 
   /** Property label prettify (C8, `umls2rdf.py:522-527`): short
     * descriptions become the label; if the RESULT contains '_', the label

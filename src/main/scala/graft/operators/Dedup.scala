@@ -46,17 +46,6 @@ object Dedup {
       .filter(length(col("token")) > 0)
       .distinct()
 
-  /** Distinct (id, word-n-gram shingle) pairs. Shingling (not raw tokens)
-    * keeps signatures discriminative: over a small vocabulary every
-    * document shares most *tokens*, but almost no *shingles*, so LSH
-    * bucket sizes stay bounded as the corpus grows. */
-  def docShingles(docs: DataFrame, textCol: String, idCol: String,
-      n: Int = 3): DataFrame =
-    docs.select(col(idCol),
-        explode(TextAnalysis.shingles(col(textCol), n)).as("token"))
-      .filter(length(col("token")) > 0)
-      .distinct()
-
   /** Distinct (id, 64-bit shingle feature): shingles are hashed to longs
     * BEFORE the distinct/groupBy shuffle, so the exchange carries 8-byte
     * keys instead of full n-gram strings — the string form re-shuffles
@@ -245,7 +234,7 @@ object Dedup {
     * → xxhash64 → distinct pipeline re-ran 64× per row (the r14
     * factor-100 stream_neardup 71.5 s; r14 verdict #6); the second
     * form lambda-bound the array once but still paid 64 interpreted
-    * folds per row (r18, `tools/SimHashProbe`: 2.60 s per 250k docs vs
+    * folds per row (r18, BENCH_NOTES: 2.60 s per 250k docs vs
     * 0.62 s native, 4.2x — the folds, not the shingle feature build,
     * dominated).
     * The batch [[simhash64]] keeps the codegen'd map-side aggregate,
@@ -266,14 +255,6 @@ object Dedup {
 
   /** Hamming distance between two simhash longs. */
   def hammingDist(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** SimHash near-dup pairs within Hamming distance `maxDist`, blocked on
-    * 16-bit chunks (pigeonhole: any pair within distance 3 shares at least
-    * one of 4 chunks) — avoids the all-pairs join at scale. */
-  def simhashPairs(docs: DataFrame, maxDist: Int = 3,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    hammingNearDupPairs(simhash64(docs, textCol, idCol), maxDist,
-      "simhash", idCol)
 
   /** Near-dup pairs of ANY 64-bit signature column (SimHash, perceptual
     * hash, feature sketch) within Hamming distance `maxDist`, blocked on

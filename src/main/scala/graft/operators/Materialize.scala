@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Materialize-and-cut-lineage for intermediate frames that feed several
   * downstream ACTIONS (dedup survivor ids, LSH band keys, candidate sets):
@@ -90,5 +91,15 @@ object Materialize {
         .getBoolean("spark.dynamicAllocation.enabled", false))
       df.localCheckpoint()
     }
+  }
+
+  /** Free the blocks of a frame returned by `localCheckpoint()`. Its
+    * `Dataset.unpersist()` does not: the blocks belong to the checkpointed
+    * RDD the frame scans, not to the cache manager (MaterializeSpec), so
+    * without this they stay until the frame is garbage-collected. The
+    * frame must not be read afterwards. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = true); ()
+    case _ => ()
   }
 }

@@ -455,17 +455,18 @@ private[operators] object SubwordBatch {
             .localCheckpoint()
           actions += 1
           // the eager checkpoint above has materialized every partition,
-          // so the per-round broadcasts can be released immediately —
-          // without this a long tight-cap training accumulates two
-          // broadcast blocks per round
+          // so the per-round broadcasts and the previous word table's
+          // checkpoint blocks can be released immediately — without this
+          // a long tight-cap training accumulates two broadcast blocks
+          // and two checkpoints per round until the driver's next GC
           bc.destroy()
           sBc.destroy()
-          words.unpersist()
+          Materialize.release(words)
           words = next
-        } finally stats.unpersist()
+        } finally Materialize.release(stats)
       }
       finish()
-    } finally words.unpersist()
+    } finally Materialize.release(words)
   }
 
   // --------------------------------------------------------------

@@ -119,7 +119,7 @@ object Tokenizer {
           .map(r => (r.getString(0), r.getLong(1))).toSeq
         bpeTrainLocal(wf, numMerges)
       } else bpeTrainDistributed(words, numMerges)
-    } finally words.unpersist()
+    } finally Materialize.release(words)
   }
 
   /** Driver-local merge loop over a collected (word, freq) table —
@@ -243,10 +243,11 @@ object Tokenizer {
     *
     * Until r18 this folded one `aggregate` HOF per merge into the plan
     * — fine for a handful of rules, but plan depth grew with the merge
-    * count and ProfileQ183b measured 90-125 s of cold per-JVM C2
-    * compilation against exactly that interpreted chain. The expression
-    * is rule-count-independent in plan shape and carries the two
-    * production tricks (substring prefilter, distinct-word memo) that
+    * count and a q183b profile (BENCH_NOTES r18) measured 90-125 s of
+    * cold per-JVM C2 compilation against exactly that interpreted
+    * chain. The expression is rule-count-independent in plan shape and
+    * carries the two production tricks (substring prefilter,
+    * distinct-word memo) that
     * previously justified a separate mapPartitions twin; `BpeChainSpec`
     * pins the whole plan bit-equal to the replayed pre-r19 fold chain
     * under both codegen and interpreted eval. */
@@ -344,7 +345,7 @@ object Tokenizer {
           .map(r => (r.getString(0), r.getLong(1))).toSeq
         bpeTrainLocal(wf, numMerges)
       } else bpeTrainDistributed(words, numMerges)
-    } finally words.unpersist()
+    } finally Materialize.release(words)
   }
 
   /** Pretoken-BPE training trajectory as a relation (q205):

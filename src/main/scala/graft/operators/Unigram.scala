@@ -324,7 +324,7 @@ object Unigram {
           shrink)
       } else unigramTrainDistributed(words, vocabSize, maxPieceLen,
         seedSize, emIters, shrink)
-    } finally { words.unpersist(); () }
+    } finally Materialize.release(words)
   }
 
   /** Full-table unigram training with DISTRIBUTED E-steps — the route
@@ -379,12 +379,12 @@ object Unigram {
       .localCheckpoint()
     val chars = subs.filter(length(col("piece")) === 1)
       .select("piece", "wgt").as[(String, Long)].collect().sortBy(_._1)
-    if (chars.isEmpty) { subs.unpersist(); return Seq.empty }
+    if (chars.isEmpty) { Materialize.release(subs); return Seq.empty }
     val multi = subs.filter(length(col("piece")) > 1)
       .orderBy(col("wgt").desc, col("piece"))
       .limit(math.max(cap - chars.length, 0))
       .select("piece", "wgt").as[(String, Long)].collect()
-    subs.unpersist()
+    Materialize.release(subs)
 
     var vocab: mutable.LinkedHashMap[String, Double] = {
       val chosen = chars ++ multi
@@ -449,7 +449,7 @@ object Unigram {
       }
       lastCounts = emSweep()
     }
-    parted.unpersist()
+    Materialize.release(parted)
     vocab.toArray.sortBy { case (p, lp) => (-lp, p) }.toSeq
   }
 

@@ -175,7 +175,7 @@ object WordPiece {
           .map(r => (r.getString(0), r.getLong(1))).toSeq
         wordPieceTrainLocal(wf, vocabSize)
       } else wordPieceTrainDistributed(words, vocabSize)
-    } finally words.unpersist()
+    } finally Materialize.release(words)
   }
 
   /** The WordPiece-prefixed (freq, sym) table the distributed routes

@@ -2,8 +2,6 @@ package graft.render
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Dataset
-
 import graft.functions.TurtleFunctions.escape
 import graft.functions.UriFunctions.urlTerm
 import graft.model.{RenderedTerm, TermProperty, UmlsConceptRow}
@@ -186,14 +184,5 @@ object ConceptRenderer {
     sb.append(" .\n\n")
     RenderedTerm(c.code, sb.toString, dupLiteral, dupObject, dupSubclass,
       props.iterator.map { case (u, a) => TermProperty(u, a) }.toSeq)
-  }
-
-  /** Dataset form: one narrow map stage, no shuffle — ordering for the
-    * file sink happens downstream (the writer sorts each partition by
-    * code and merges the parts on the driver). */
-  def renderTerms(concepts: Dataset[UmlsConceptRow], cfg: RenderConfig)
-      : Dataset[RenderedTerm] = {
-    import concepts.sparkSession.implicits._
-    concepts.map(render(_, cfg))
   }
 }

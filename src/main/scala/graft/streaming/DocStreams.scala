@@ -150,7 +150,6 @@ object DocStreams {
   private[streaming] def tokenizeBatch(bdf: DataFrame, batchId: Long,
       vocab: Seq[String], outPath: String,
       onBatch: TokenizeReport => Unit): Unit = {
-    val spark = bdf.sparkSession
     val valid0 =
       if (bdf.columns.contains("_corrupt"))
         bdf.filter(col("_corrupt").isNull && col("doc_id").isNotNull)

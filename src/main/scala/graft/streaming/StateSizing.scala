@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   *
   * The number of state partitions is `spark.sql.shuffle.partitions` at
   * a streaming query's FIRST start (it is then baked into the
-  * checkpoint), and the committed cold-JVM curve (StreamStateSweep,
-  * BENCH_NOTES r18) shows per-batch state-store open/commit across
+  * checkpoint), and the cold-JVM curve recorded in BENCH_NOTES r18
+  * shows per-batch state-store open/commit across
   * state partitions — not task-thread parallelism — dominating stateful
   * micro-batch cost on this host: p=32 → 1,250k/1,564k ev/s
   * (sessionize/windowed_dedup), p=16 → 2,264k/2,606k (the 1.7-1.8×),

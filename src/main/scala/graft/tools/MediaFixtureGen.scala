@@ -26,7 +26,7 @@ object MediaFixtureGen {
     a
   }
 
-  private def vec(seed: Int, jitter: Double = 0.0): Seq[Float] = {
+  private def vec(seed: Int, jitter: Double): Seq[Float] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(Dim)((rnd.nextGaussian() + jitter * 0.01).toFloat)
   }

@@ -20,4 +20,9 @@ object GraftSqlShims {
     * which the SQL analyzer then resolves normally). */
   def eagerExpressionOf(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Block until every listener has seen the events posted so far —
+    * `QueryExecutionListener`s are called asynchronously. */
+  def waitForListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

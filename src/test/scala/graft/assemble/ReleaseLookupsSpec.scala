@@ -26,8 +26,9 @@ class ReleaseLookupsSpec extends AnyFunSuite {
 
   private val mrsab = Seq(
     sabRow("S1", "S1_2024", "N", "old"), sabRow("S1", "S1_2025", "Y", "cur"),
-    // NULL CURVER (absent): the old orderBy put it first on the NULL path
+    // NULL CURVER (absent) loses to 'Y' and ties with 'N' on VSAB
     sabRow("S2", "S2_B", null, "nocurver"), sabRow("S2", "S2_A", "Y", "cur"),
+    sabRow("S9", "S9_B", null, "nocurver"), sabRow("S9", "S9_A", "N", "n"),
     sabRow("S3", "S3_b", "Y", "b"), sabRow("S3", "S3_a", "Y", "a"),
     // full tie on (CURVER, VSAB): the first row in scan order
     sabRow("S4", "S4", "Y", "first"), sabRow("S4", "S4", "Y", "second"),
@@ -56,13 +57,14 @@ class ReleaseLookupsSpec extends AnyFunSuite {
   private val paths = TestSpark.bothPaths(Map(
     "MRSAB" -> mrsab, "MRRANK" -> mrrank, "MRCONSO" -> mrconso))
 
-  private val sabs = Seq("S1", "S2", "S3", "S4", "S5", "S6", "S7", "S8")
+  private val sabs = Seq("S1", "S2", "S3", "S4", "S5", "S6", "S7", "S8", "S9")
 
   // ---- the per-SAB Spark plans the snapshot replaced -------------------
 
   private def oldMrsab(src: UmlsSource, sab: String): Option[MrsabRecord] =
     src.table("MRSAB").filter(col("RSAB") === sab)
-      .orderBy((col("CURVER") =!= "Y").asc, col("VSAB").asc)
+      .orderBy(coalesce(col("CURVER") === "Y", lit(false)).desc,
+        col("VSAB").asc)
       .limit(1).collect().headOption.map { r =>
         MrsabRecord(r.schema.fieldNames.iterator.zipWithIndex.map {
           case (n, i) => n -> (if (r.isNullAt(i)) "" else r.getString(i))
@@ -101,8 +103,9 @@ class ReleaseLookupsSpec extends AnyFunSuite {
       assert(ssn("S5") === Some("fffd"), "VSAB in code-point order")
       assert(ssn("S8") === Some("w"))
       assert(snap.mrsab("S7") === None)
-      // only the NULL path has a NULL CURVER to sort first
-      assert(ssn("S2") === Some(if (path == "nulls") "nocurver" else "cur"))
+      // a NULL CURVER ranks with the non-'Y' rows, as "" does on RRF
+      assert(ssn("S2") === Some("cur"))
+      assert(ssn("S9") === Some("n"))
       // an absent VSAB (NULL, or "") sorts before "A" on both
       assert(ssn("S6") === Some("nullvsab"))
     }

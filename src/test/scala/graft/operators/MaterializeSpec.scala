@@ -98,4 +98,23 @@ class MaterializeSpec extends AnyFunSuite {
       spark.conf.unset("spark.graft.checkpoint.reliable")
     }
   }
+
+  test("Dataset.unpersist leaves localCheckpoint blocks in place; " +
+    "release frees them") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val cut = (1 to 1000).toDF("id").repartition(4).localCheckpoint()
+    val rdd = cut.queryExecution.analyzed.collectFirst {
+      case r: LogicalRDD => r.rdd
+    }.get
+    def cachedParts = sc.getRDDStorageInfo.find(_.id == rdd.id)
+      .map(_.numCachedPartitions).getOrElse(0)
+    val parts = rdd.getNumPartitions
+    assert(parts > 0 && cachedParts === parts)
+    cut.unpersist(blocking = true)
+    assert(cachedParts === parts, "Dataset.unpersist freed the checkpoint")
+    assert(cut.count() === 1000)
+    Materialize.release(cut)
+    assert(cachedParts === 0)
+  }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.model.OntologyJob
-import graft.sink.UmlsExportConfig
+import graft.sink.{UmlsExportConfig, WriteReport}
 import graft.sources.ConfManifest
 
 /** Resumable-pipeline behavior (R1/R2/R4): state survives across runs,
@@ -254,6 +254,24 @@ class UmlsPipelineSpec extends AnyFunSuite {
       new UmlsPipeline(spark, TestSpark.fixedSource(fixture), jobs,
         PipelineConfig(out, work, UmlsExportConfig(umlsVersion = "")))
     }
+  }
+
+  test("exit code: --strict fails on any term error; without it only an " +
+    "ontology with errors and no terms fails") {
+    import graft.UmlsExportMain.exitCode
+    def report(sab: String, terms: Long, errors: Long) =
+      WriteReport(sab, s"$sab.ttl", terms, errors, 0, 0, 0)
+    val clean = report("A", 10, 0)
+    val someErrors = report("B", 9, 1)
+    val allErrors = report("C", 0, 3)
+    val resumed = WriteReport("D", "D.ttl", 0, 0, 0, 0, 0,
+      skipped = true, resumed = true)
+    for (strict <- Seq(false, true)) {
+      assert(exitCode(Seq(clean, resumed), strict) === 0, s"strict=$strict")
+      assert(exitCode(Seq(clean, allErrors), strict) === 1, s"strict=$strict")
+    }
+    assert(exitCode(Seq(clean, someErrors), strict = false) === 0)
+    assert(exitCode(Seq(clean, someErrors), strict = true) === 1)
   }
 
   test("manifest parser skips comments and parses alt URIs (S4/F19)") {

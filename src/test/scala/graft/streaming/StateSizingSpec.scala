@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** Gates the r18-verdict-#7 state-partition sizing knob so it cannot
-  * rot: [[StateSizing.recommended]] encodes the committed
-  * StreamStateSweep curve (~cores/2), and
+  * rot: [[StateSizing.recommended]] encodes the cold-JVM sweep
+  * recorded in BENCH_NOTES r18 (~cores/2), and
   * [[StateSizing.withStatePartitions]] must actually govern the state
   * partition count a streaming query bakes into its checkpoint — and
   * must leave the session conf untouched afterwards (the committed
