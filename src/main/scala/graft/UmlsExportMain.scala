@@ -22,8 +22,9 @@ import graft.sources.{ConfManifest, UmlsSource}
   * ontology with errors and no terms exits 1);
   * `--only-current` skips ontologies whose MRSAB record is not the
   * current version; `--no-dedupe` keeps duplicate triples; `--parallel N`
-  * exports N ontologies at once; `--master M` sets the Spark master
-  * (default `local[*]`).
+  * (N > 1) runs the manifest's two mode-group plans — its load_on_codes
+  * and its load_on_cuis ontologies — at once; `--master M` sets the
+  * Spark master (default `local[*]`).
   *
   * `--shared-scan` reads each fat table once for the whole manifest
   * ([[graft.sources.UmlsSource.sharedScan]]) — the win for

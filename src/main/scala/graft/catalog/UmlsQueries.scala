@@ -574,12 +574,11 @@ object UmlsQueries {
     // sweep shape (the reference loops 35 SABs over the same MySQL
     // tables; umls2rdf.py:860-895). Four SABs split the q25s volume;
     // UmlsSource.sharedScan persists each fat table ONCE (SAB-pruned
-    // union filter) and the four exports run in parallel threads against
-    // it — the 12-SAB profile measured 5.4 s shared vs 11.0 s direct,
-    // and UmlsPipelineSpec pins both byte-identity with direct runs and
-    // job-count-independent inner scan counts (now load-bearing in this
-    // bench entry). Rows-only by design: the fixture e2e goldens +
-    // byte-identity spec pin the VALUES; this entry times the dataflow.
+    // union filter) and the four SABs export as one group, one plan
+    // (OntologyWriter.writeGroup). UmlsPipelineSpec pins job-count-
+    // independent inner scan counts (load-bearing in this bench entry).
+    // Rows-only by design: the fixture e2e goldens + byte-identity spec
+    // pin the VALUES; this entry times the dataflow.
     Q("q25m_export_multi_sab",
       (s, d) => {
         val outDir = java.nio.file.Files
@@ -602,14 +601,14 @@ object UmlsQueries {
       None))
 
   /** The q25m dataflow, factored so UmlsPipelineSpec can drive it with a
-    * counting source: shared scan over `inner`, one export per SAB on a fixed thread pool, reports returned in
-    * completion-independent (input) order. */
+    * counting source: shared scan over `inner`, the SABs exported as one
+    * load_on_codes group, reports returned in input order. */
   private[graft] def multiSabExport(s: SparkSession,
-      inner: UmlsSource, sabs: Seq[String], outDir: java.io.File,
-      parallelism: Int = 4): Seq[graft.sink.WriteReport] = {
+      inner: UmlsSource, sabs: Seq[String],
+      outDir: java.io.File): Seq[graft.sink.WriteReport] = {
     import graft.model.OntologyJob
     import graft.sink.{OntologyWriter, UmlsExportConfig}
-    import graft.assemble.PropertyDoc
+    import graft.assemble.{PropertyDoc, ReleaseLookups}
     // the q25e doc set: every predicate the synthetic SABs emit (J10
     // raises on a missing doc by reference design)
     val docs = Map(
@@ -617,28 +616,16 @@ object UmlsQueries {
       "part_of" -> PropertyDoc("RELA", Some("Part of"), None),
       "RO" -> PropertyDoc("REL", Some("Related to"), None))
     val shared = UmlsSource.sharedScan(inner, sabs)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, sabs.size)))
     try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val futures = sabs.map { sab =>
-        scala.concurrent.Future {
-          val outFile = new java.io.File(outDir, s"$sab.ttl").getAbsolutePath
-          OntologyWriter.write(s, shared,
-            OntologyJob(sab, None, outFile, loadOnCuis = false),
-            UmlsExportConfig(umlsVersion = "2026AA",
-              includeSemanticTypes = false),
-            outFile, docs, "")
-        }
+      val members = sabs.map { sab =>
+        val outFile = new java.io.File(outDir, s"$sab.ttl").getAbsolutePath
+        OntologyJob(sab, None, outFile, loadOnCuis = false) -> outFile
       }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futures),
-        scala.concurrent.duration.Duration.Inf)
-    } finally {
-      pool.shutdown()
-      shared.release()
-    }
+      OntologyWriter.writeGroup(s, shared, members,
+        UmlsExportConfig(umlsVersion = "2026AA", includeSemanticTypes = false),
+        new java.io.File(outDir, ".parts").getAbsolutePath, docs, "",
+        ReleaseLookups.load(shared, sabs))
+    } finally shared.release()
   }
 
   /** UMLS-shaped tables projected from the harness lake (TESTDATA.md):

@@ -55,10 +55,11 @@ final case class PipelineConfig(
     outputDir: String,
     workDir: String,
     exportConf: UmlsExportConfig,
-    /** Concurrent per-ontology export jobs. The 35-SAB export is
-      * embarrassingly parallel per ontology (independent inputs, one file
-      * each); >1 lets Spark schedule the per-SAB jobs concurrently and
-      * keep a cluster saturated while small SABs finish. */
+    /** Concurrent mode-group exports. A manifest exports as at most two
+      * plans — its `load_on_codes` group and its `load_on_cuis` group,
+      * each one Spark plan over all its SABs — so `parallelism > 1` runs
+      * the two groups' plans at once and lets Spark interleave their
+      * stages; values above 2 add nothing. */
     parallelism: Int = 1,
     /** Scan each fat table ONCE for the whole manifest
       * ([[graft.sources.UmlsSource.sharedScan]]) instead of once per SAB
@@ -70,7 +71,8 @@ final case class PipelineConfig(
 /** The run-once export pipeline (`umls2rdf.py:828-896` +
   * `run_umls_pipeline.py`): validate source → the run's small lookups
   * (read once, concurrently) → semantic types → one ontology file per
-  * manifest entry → validate output. Each step is recorded in
+  * manifest entry, exported by one plan per mode group → validate
+  * output. Each step (each ontology its own) is recorded in
   * [[PipelineState]]; completed steps are skipped on re-run (R1); the
   * lookups are re-read by every run, so a rewritten lake is seen. Validation probes are R2 (`run_umls_pipeline.py:256-290`);
   * config checks are R4 (`:298-308`).
@@ -101,6 +103,9 @@ final class UmlsPipeline(
     require(config.exportConf.umlsVersion.nonEmpty, "umlsVersion must be set")
     require(config.exportConf.baseUri.nonEmpty, "baseUri must be set")
     require(jobs.nonEmpty, "manifest has no enabled ontologies")
+    val sabs = jobs.map(_.sab)
+    require(sabs.distinct.size == sabs.size,
+      s"manifest lists a SAB twice: ${sabs.diff(sabs.distinct)}")
     new File(config.outputDir).mkdirs()
     new File(config.workDir).mkdirs()
   }
@@ -196,26 +201,47 @@ final class UmlsPipeline(
       if (includeSty) SemanticTypes.render(sty.get, styUrl, withRoots = false)
       else ""
 
-    def exportOne(job: OntologyJob): WriteReport = {
-      val outFile = s"${config.outputDir}/${job.outFile}"
-      step(s"ontology:${job.sab}") {
-        OntologyWriter.write(spark, effSource, job, config.exportConf, outFile,
-          docs, semTypes, release)
-      }.getOrElse(WriteReport(job.sab, outFile, 0, 0, 0, 0, 0,
-        skipped = true, resumed = true)) // already produced in a previous run
+    // One plan per manifest mode group: every load_on_codes SAB in one,
+    // every load_on_cuis SAB in the other. Resume stays per SAB: a SAB
+    // completed by an earlier run is reported resumed, and each SAB is
+    // marked done as soon as its file is published.
+    def exportGroup(group: Seq[OntologyJob]): Seq[WriteReport] = {
+      val (done, pending) = synchronized {
+        val (d, p) = group.partition(j => state.isDone(s"ontology:${j.sab}"))
+        executed ++= p.map(j => s"ontology:${j.sab}")
+        (d, p)
+      }
+      val resumed = done.map(j => WriteReport(j.sab,
+        s"${config.outputDir}/${j.outFile}", 0, 0, 0, 0, 0,
+        skipped = true, resumed = true)) // produced by a previous run
+      val mode = if (group.head.loadOnCuis) "cuis" else "codes"
+      val written = OntologyWriter.writeGroup(spark, effSource,
+        pending.map(j => j -> s"${config.outputDir}/${j.outFile}"),
+        config.exportConf, s"${config.workDir}/parts-$mode", docs, semTypes,
+        release,
+        published = r => synchronized(state.markDone(s"ontology:${r.sab}")))
+      resumed ++ written
     }
-    val reports =
-      if (config.parallelism <= 1) jobs.map(exportOne)
+    val groups = jobs.partition(!_.loadOnCuis) match {
+      case (codes, cuis) => Seq(codes, cuis).filter(_.nonEmpty)
+    }
+    val groupReports =
+      if (config.parallelism <= 1 || groups.size <= 1)
+        groups.flatMap(exportGroup)
       else {
-        // Per-SAB jobs are independent; a bounded pool submits them so
-        // Spark's scheduler interleaves their stages.
-        val pool = Executors.newFixedThreadPool(config.parallelism)
+        // The groups are independent plans; a bounded pool submits them
+        // so Spark's scheduler interleaves their stages.
+        val pool = Executors.newFixedThreadPool(
+          math.min(config.parallelism, groups.size))
         implicit val ec: ExecutionContext =
           ExecutionContext.fromExecutorService(pool)
         try Await.result(
-          Future.sequence(jobs.map(j => Future(exportOne(j)))), Duration.Inf)
+          Future.sequence(groups.map(g => Future(exportGroup(g)))),
+          Duration.Inf).flatten
         finally pool.shutdown()
       }
+    val bySab = groupReports.map(r => r.sab -> r).toMap
+    val reports = jobs.map(j => bySab(j.sab))
 
     step("validate_output")(validateOutput(reports))
     reports

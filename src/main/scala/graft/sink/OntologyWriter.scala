@@ -12,12 +12,14 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.io.api.Binary
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.util.LongAccumulator
 
 import graft.assemble.{ConceptAssembler, Mrsab, PropertyDoc, ReleaseLookups}
 import graft.functions.TurtleFunctions.mapLang
-import graft.model.{OntologyJob, TermProperty}
+import graft.model.{OntologyJob, RenderedTerm, TermProperty}
 import graft.render.{ConceptRenderer, OntologyRender, RenderConfig}
 import graft.sources.UmlsSource
 
@@ -41,18 +43,17 @@ final case class WriteReport(
     skipped: Boolean = false,
     resumed: Boolean = false)
 
-/** One rendered-or-failed term (S6, `umls2rdf.py:764-771`): exactly one of
-  * `text`/`error` is set. */
-private[graft] final case class RenderResult(
-    code: String, text: String, dupLiteral: Long, dupObject: Long,
-    dupSubclass: Long, properties: Seq[TermProperty], error: String)
+/** One rendered term of an export: its SAB's ordinal in the export's
+  * group, its code and its Turtle text (NULL when the term failed). */
+private[graft] final case class RenderedPart(
+    sab_id: Int, code: String, text: String)
 
 /** The columnar-finished concept row the sink consumes: the
-  * [[graft.assemble.ConceptAssembler.conceptsColumnsTry]] output —
-  * [[graft.model.UmlsConceptRow]] fields plus the per-term finishing
-  * error (`__finish_err`, NULL on success). */
+  * [[graft.assemble.ConceptAssembler.finishedTry]] output —
+  * the class's `sab_id`, [[graft.model.UmlsConceptRow]] fields and the
+  * per-term finishing error (`__finish_err`, NULL on success). */
 private[sink] final case class FinishedRow(
-    code: String, prefLabel: String,
+    sab_id: Int, code: String, prefLabel: String,
     altLabels: Seq[String], defs: Seq[String], cuis: Seq[String],
     tuis: Seq[String], atts: Seq[graft.model.AttOut],
     rels: Seq[graft.model.RelOut], isRoot: Boolean,
@@ -62,22 +63,53 @@ private[sink] final case class FinishedRow(
       tuis, atts, rels, isRoot, treeParents)
 }
 
+/** One SAB's write counters (S6 term/error counts and the capped error
+  * log, A11 duplicate-triple counts, the A15 property set), as
+  * accumulators the render map adds to on the executors. */
+private[graft] final class SabCounters(sc: SparkContext) extends Serializable {
+  val terms: LongAccumulator = sc.longAccumulator("graft.terms")
+  val errors: LongAccumulator = sc.longAccumulator("graft.errors")
+  val dupLiteral: LongAccumulator = sc.longAccumulator("graft.dupLiteral")
+  val dupObject: LongAccumulator = sc.longAccumulator("graft.dupObject")
+  val dupSubclass: LongAccumulator = sc.longAccumulator("graft.dupSubclass")
+  val errRows = new CappedErrorAccumulator(OntologyWriter.ErrorLogCap)
+  sc.register(errRows, "graft.errRows")
+  val properties = new MinMapAccumulator
+  sc.register(properties, "graft.properties")
+
+  def rendered(t: RenderedTerm): Unit = {
+    terms.add(1L)
+    dupLiteral.add(t.dupLiteral); dupObject.add(t.dupObject)
+    dupSubclass.add(t.dupSubclass)
+    t.properties.foreach(p => properties.add((p.uri, p.att)))
+  }
+
+  def failed(code: String, error: String): Unit = {
+    errors.add(1L); errRows.add((code, error))
+  }
+
+  def report(sab: String, path: String): WriteReport =
+    WriteReport(sab, path, terms.value, errors.value, dupLiteral.value,
+      dupObject.value, dupSubclass.value)
+}
+
 /** The Turtle file sink (S5, `umls2rdf.py:745-789,888-893`): one ordered
   * UTF-8 file per ontology — prefixes, MRSAB-fed header, class terms,
   * property block, semantic types.
   *
-  * Spark-first shape: assembly, finishing and render run distributed;
-  * executors write each spine partition's code-sorted term text as a
-  * part and the driver merges the parts by code into the single file
-  * that is the output contract (one `.ttl` per SAB). Term order is
-  * Spark's string order on code — the reference emits dict-insertion
-  * order, unreproducible distributed (SURVEY.md §7.1.6); intra-term
-  * bytes are reference-equal.
+  * Spark-first shape: one plan exports a manifest mode group (every
+  * `load_on_codes` SAB, or every `load_on_cuis` SAB): assembly, finishing
+  * and render run distributed; executors write each spine partition's
+  * code-sorted terms as a part and the driver merges the parts by code
+  * into one file per SAB, the output contract (one `.ttl` per SAB).
+  * Term order is Spark's string order on code — the reference emits
+  * dict-insertion order, unreproducible distributed (SURVEY.md §7.1.6);
+  * intra-term bytes are reference-equal.
   */
 object OntologyWriter {
 
-  /** Max (code, error) pairs the writer ships to the driver for the S6
-    * error log; the total error COUNT stays exact past it. */
+  /** Max (code, error) pairs the writer ships to the driver for one SAB's
+    * S6 error log; the total error COUNT stays exact past it. */
   private[sink] val ErrorLogCap = 1000
 
   /** Export one ontology, reading its MRSAB record, MRRANK map and root
@@ -94,7 +126,8 @@ object OntologyWriter {
       ReleaseLookups.forSab(source, job.sab))
 
   /** Export one ontology with its small lookups taken from `lookups`, the
-    * run's snapshot: the only Spark work left is the export itself. */
+    * run's snapshot: a group of one ([[writeGroup]]), its parts at
+    * `<outFile>.parts`. */
   def write(
       spark: SparkSession,
       source: UmlsSource,
@@ -103,78 +136,128 @@ object OntologyWriter {
       outFile: String,
       propertyDocs: Map[String, PropertyDoc],
       semanticTypes: String,
-      lookups: ReleaseLookups): WriteReport = {
+      lookups: ReleaseLookups): WriteReport =
+    writeGroup(spark, source, Seq(job -> outFile), conf, outFile + ".parts",
+      propertyDocs, semanticTypes, lookups).head
 
-    val ns = conf.baseUri + job.altUri.getOrElse(job.sab) + "/"
-    val rec = Mrsab.orEmpty(lookups.mrsab(job.sab))
-
-    // F18 version gate (`umls2rdf.py:881-887`).
-    if (conf.processOnlyCurrentVersion && !rec.isCurrentVersion(conf.umlsVersion))
-      return WriteReport(job.sab, outFile, 0, 0, 0, 0, 0, skipped = true)
-
-    // MRSAB.LAT is mandatory (`umls2rdf.py:594-597`).
-    val lat = rec.lat.getOrElse(throw new IllegalStateException(
-      s"No LAT found in MRSAB for ontology ${job.sab}")).toLowerCase
-
-    val assembler = new ConceptAssembler(spark, source, job.sab,
-      loadOnCuis = job.loadOnCuis, lang = lat, lookups = Some(lookups))
-    // The reference's tree checks are TRUTHINESS tests (`if tree:`,
-    // `umls2rdf.py:411,422,437`) — an MSH export whose D-tree query
-    // returns zero edges renders tree-less (no MN-root rule). One
-    // limit(1) probe per MSH export reproduces that.
-    val hasTree = job.sab == "MSH" && !assembler.meshTree.isEmpty
-    val cfg = RenderConfig(
-      ns = ns,
-      lang = mapLang(lat, conf.strict),
-      // The reference's main loop INTENDS hierarchy=(sab != "MSH")
-      // (`umls2rdf.py:889`), but `write_into` never forwards its
-      // hierarchy parameter to `toRDF` (`umls2rdf.py:745,766`), so the
-      // actual rendering always runs hierarchy=True and MSH's CHD
-      // suppression comes solely from the tree (`umls2rdf.py:437-448`).
-      // Proven byte-for-byte by ReferenceDifferentialSpec: with
-      // hierarchy=false the engine emitted a `<ns/CHD>` OBJECT triple
-      // for MSH CHD rels where the reference emits nothing.
-      hierarchy = true,
-      hasTree = hasTree,
-      dedupe = conf.dedupeTriples,
-      styUrl = conf.baseUri + "STY/")
-
-    val parent = new File(outFile).getParentFile
-    if (parent != null) parent.mkdirs()
-    try writeParts(spark, rendered(assembler, cfg, conf.strict), job, rec, ns,
-      conf, outFile, propertyDocs, semanticTypes)
-    finally assembler.unpersistShared()
+  /** Export the ontologies of one load mode with ONE plan: `members` are
+    * `(job, output file)` pairs, all `load_on_codes` or all
+    * `load_on_cuis`; reports come back in `members` order.
+    *
+    * Per SAB, as for a lone export: the F18 version gate skips it
+    * (`umls2rdf.py:881-887`); its file is published atomically on its own
+    * and then handed to `published` (the pipeline's resume mark); the
+    * strict checks and the error log cap apply per SAB. A SAB without an
+    * MRSAB LAT (`umls2rdf.py:594-597`) fails the group before any of its
+    * files is published. The group's parts live in `partsDir`, which is
+    * replaced by each write and removed after it. */
+  def writeGroup(
+      spark: SparkSession,
+      source: UmlsSource,
+      members: Seq[(OntologyJob, String)],
+      conf: UmlsExportConfig,
+      partsDir: String,
+      propertyDocs: Map[String, PropertyDoc],
+      semanticTypes: String,
+      lookups: ReleaseLookups,
+      published: WriteReport => Unit = _ => ()): Seq[WriteReport] = {
+    require(members.map(_._1.loadOnCuis).distinct.size <= 1,
+      "a group exports ontologies of one load mode")
+    val recs = members.map(m => Mrsab.orEmpty(lookups.mrsab(m._1.sab)))
+    val (live, gated) = members.zip(recs).partition { case (_, rec) =>
+      !conf.processOnlyCurrentVersion || rec.isCurrentVersion(conf.umlsVersion)
+    }
+    val skipped = gated.map { case ((job, out), _) =>
+      WriteReport(job.sab, out, 0, 0, 0, 0, 0, skipped = true)
+    }
+    skipped.foreach(published)
+    // A killed run may have left this group's parts behind: they go
+    // whether or not a member is left to write.
+    val written = try {
+      val lats = live.map { case ((job, _), rec) =>
+        rec.lat.getOrElse(throw new IllegalStateException(
+          s"No LAT found in MRSAB for ontology ${job.sab}")).toLowerCase
+      }
+      if (live.isEmpty) Nil
+      else {
+        val jobs = live.map(_._1._1)
+        val assembler = ConceptAssembler.group(spark, source,
+          jobs.map(_.sab).zip(lats), jobs.head.loadOnCuis, lookups)
+        val hasTree = assembler.hasMeshTree
+        val cfgs = jobs.zip(lats).map { case (job, lat) =>
+          RenderConfig(
+            ns = namespace(conf, job),
+            lang = mapLang(lat, conf.strict),
+            // The reference's main loop INTENDS hierarchy=(sab != "MSH")
+            // (`umls2rdf.py:889`), but `write_into` never forwards its
+            // hierarchy parameter to `toRDF` (`umls2rdf.py:745,766`), so
+            // the actual rendering always runs hierarchy=True and MSH's
+            // CHD suppression comes solely from the tree
+            // (`umls2rdf.py:437-448`). Proven byte-for-byte by
+            // ReferenceDifferentialSpec: with hierarchy=false the engine
+            // emitted a `<ns/CHD>` OBJECT triple for MSH CHD rels where
+            // the reference emits nothing.
+            hierarchy = true,
+            hasTree = hasTree && job.sab == "MSH",
+            dedupe = conf.dedupeTriples,
+            styUrl = conf.baseUri + "STY/")
+        }
+        live.foreach { case ((_, out), _) =>
+          val parent = new File(out).getParentFile
+          if (parent != null) parent.mkdirs()
+        }
+        try writeParts(spark, assembler, cfgs.toIndexedSeq,
+          live.map { case ((job, out), rec) => (job, out, rec) }, conf,
+          partsDir, propertyDocs, semanticTypes, published)
+        finally assembler.unpersistShared()
+      }
+    } finally removeTree(new File(partsDir))
+    val bySab = (skipped ++ written).map(r => r.sab -> r).toMap
+    members.map(m => bySab(m._1.sab))
   }
+
+  private def namespace(conf: UmlsExportConfig, job: OntologyJob): String =
+    conf.baseUri + job.altUri.getOrElse(job.sab) + "/"
 
   /** The export's rendered terms, each spine partition sorted by code.
     * S6 per-term error tolerance: finishing failures arrive as
     * `__finish_err` texts, and render runs under `Try`, so one bad term
-    * cannot sink the file.
+    * cannot sink the file. The render map renders each class with its
+    * SAB's config and counts it into its SAB's `counters` — a failed term
+    * is counted and logged there, and leaves the map without text, so it
+    * goes no further.
     *
-    * Render runs inside the `groupBy(code)` spine's own partitions, and
-    * `sortWithinPartitions` orders each one locally: there is no
-    * exchange above the spine, so each term is rendered exactly once
-    * with no cut, and no output-sized shuffle. The file's global code
-    * order comes from the driver's merge of the sorted parts
-    * ([[mergeParts]]). Nothing is checkpointed: a lost executor's
-    * partitions recompute by lineage. */
-  private[graft] def rendered(assembler: ConceptAssembler, cfg: RenderConfig,
-      strict: Boolean): Dataset[RenderResult] = {
-    val renderOne: FinishedRow => RenderResult = { f =>
-      if (f.__finish_err != null)
-        RenderResult(f.code, null, 0, 0, 0, Nil, f.__finish_err)
-      else Try(ConceptRenderer.render(f.toConceptRow, cfg)) match {
+    * Render runs inside the `groupBy(sab_id, code)` spine's own
+    * partitions, and `sortWithinPartitions` orders each one locally:
+    * there is no exchange above the spine, so each term is rendered
+    * exactly once with no cut, and no output-sized shuffle; and the
+    * counting map runs in the write job's RESULT stage, where Spark
+    * applies a task's accumulator updates once regardless of
+    * retries/speculation (below an exchange, stage retries would
+    * double-count). The file's global code order comes from the driver's
+    * merge of the sorted parts ([[mergeParts]]). Nothing is checkpointed:
+    * a lost executor's partitions recompute by lineage. */
+  private[graft] def rendered(assembler: ConceptAssembler,
+      cfgs: IndexedSeq[RenderConfig], strict: Boolean,
+      counters: IndexedSeq[SabCounters]): Dataset[RenderedPart] = {
+    val renderOne: FinishedRow => RenderedPart = { f =>
+      val counts = counters(f.sab_id)
+      if (f.__finish_err != null) {
+        counts.failed(f.code, f.__finish_err)
+        RenderedPart(f.sab_id, f.code, null)
+      } else Try(ConceptRenderer.render(f.toConceptRow, cfgs(f.sab_id))) match {
         case Success(t) =>
-          RenderResult(t.code, t.text, t.dupLiteral, t.dupObject,
-            t.dupSubclass, t.properties, null)
+          counts.rendered(t)
+          RenderedPart(f.sab_id, t.code, t.text)
         case Failure(e) =>
-          RenderResult(f.code, null, 0, 0, 0, Nil,
-            s"${e.getClass.getSimpleName}: ${e.getMessage}")
+          counts.failed(f.code, s"${e.getClass.getSimpleName}: ${e.getMessage}")
+          RenderedPart(f.sab_id, f.code, null)
       }
     }
-    assembler.conceptsColumnsTry(strict)
+    assembler.finishedTry(strict)
       .as(Encoders.product[FinishedRow])
-      .map(renderOne)(Encoders.product[RenderResult])
+      .map(renderOne)(Encoders.product[RenderedPart])
+      .filter(col("text").isNotNull)
       .sortWithinPartitions("code")
   }
 
@@ -183,126 +266,113 @@ object OntologyWriter {
   private val PartRowGroupBytes = 8L << 20
 
   /** The write: executors write each partition's code-sorted
-    * `(code, text)` rows as one parquet part through Spark's file writer
-    * (its commit protocol keeps task retries and speculation safe); the
-    * driver then k-way merges the parts by code ([[mergeParts]]) into the
-    * single file that is the output contract. The driver never iterates
-    * rows through Spark — counters, error log lines and the property set
-    * ride ACCUMULATORS on the write job itself, so the whole export is
-    * ONE pass over the rendered terms — and it holds one row group per
-    * part, not a partition of rendered text, so a multi-GB single-SAB
-    * file costs it bounded memory.
+    * `(sab_id, code, text)` rows as one parquet part through Spark's file
+    * writer (its commit protocol keeps task retries and speculation
+    * safe); the driver then k-way merges the parts by code
+    * ([[mergeParts]]), each term into its SAB's file. The driver never
+    * iterates rows through Spark — counters, error log lines and the
+    * property sets ride ACCUMULATORS on the write job itself, so the
+    * whole export is ONE pass over the rendered terms — and it holds one
+    * row group per part, not a partition of rendered text, so a
+    * multi-GB single-SAB file costs it bounded memory.
     *
-    * Crash-safe publish: the file is assembled at `<out>.tmp` and renamed
-    * onto `<out>` atomically once complete, and `<out>.parts` and the temp
-    * file are removed whatever happens — a failed write or merge leaves
-    * neither a partial final file nor stale parts (a previous complete
-    * `<out>` survives it untouched).
-    *
-    * Exactly-once counters: with no exchange above the spine, the
-    * accumulator map runs in the write job's RESULT stage — Spark
-    * applies a result task's accumulator updates once regardless of
-    * retries/speculation. (A map placed below an exchange would live in
-    * a shuffle-map stage, where stage retries double-count.) */
+    * Crash-safe publish: each file is assembled at `<out>.tmp` and renamed
+    * onto `<out>` atomically once complete, and every unpublished temp
+    * file (here) and the parts ([[writeGroup]]) are removed whatever
+    * happens — a failed write or merge leaves neither a partial final
+    * file nor stale parts (a previous complete `<out>` survives it
+    * untouched). Every header and property block is rendered before the
+    * first temp file opens, so a SAB whose property block fails (J10)
+    * publishes nothing of its group. */
   private def writeParts(
       spark: SparkSession,
-      rendered: Dataset[RenderResult],
-      job: OntologyJob, rec: graft.assemble.MrsabRecord, ns: String,
-      conf: UmlsExportConfig, outFile: String,
+      assembler: ConceptAssembler,
+      cfgs: IndexedSeq[RenderConfig],
+      members: Seq[(OntologyJob, String, graft.assemble.MrsabRecord)],
+      conf: UmlsExportConfig,
+      partsDir: String,
       propertyDocs: Map[String, PropertyDoc],
-      semanticTypes: String): WriteReport = {
+      semanticTypes: String,
+      published: WriteReport => Unit): Seq[WriteReport] = {
     val sc = spark.sparkContext
-    val terms = sc.longAccumulator("graft.terms")
-    val errors = sc.longAccumulator("graft.errors")
-    val dupL = sc.longAccumulator("graft.dupLiteral")
-    val dupO = sc.longAccumulator("graft.dupObject")
-    val dupS = sc.longAccumulator("graft.dupSubclass")
-    val errRows = new CappedErrorAccumulator(ErrorLogCap)
-    sc.register(errRows, "graft.errRows")
-    val propAcc = new MinMapAccumulator
-    sc.register(propAcc, "graft.properties")
-
-    // Error rows reach the result-stage map so it can count them, then
-    // drop out before the parts are written. Codes and texts are unique
-    // per row, so neither column gains anything from a dictionary.
-    val partsDir = outFile + ".parts"
-    val tmpFile = Paths.get(outFile + ".tmp")
+    val counters = members.map(_ => new SabCounters(sc)).toIndexedSeq
+    val tmpFiles = members.map { case (_, out, _) => Paths.get(out + ".tmp") }
     try {
-      rendered
-        .map { r =>
-          if (r.error != null) {
-            errors.add(1L); errRows.add((r.code, r.error))
-          } else {
-            terms.add(1L)
-            dupL.add(r.dupLiteral); dupO.add(r.dupObject)
-            dupS.add(r.dupSubclass)
-            r.properties.foreach(p => propAcc.add((p.uri, p.att)))
-          }
-          r
-        }(Encoders.product[RenderResult])
-        .filter(col("error").isNull)
-        .select("code", "text")
+      // Codes and texts are unique per row, so neither column gains
+      // anything from a dictionary.
+      rendered(assembler, cfgs, conf.strict, counters)
         .write.mode("overwrite")
         .option("compression", "none")
         .option("parquet.enable.dictionary", "false")
         .option("parquet.block.size", PartRowGroupBytes.toString)
         .parquet(partsDir)
 
-      val (errKept, errTotal) = errRows.value
-      errKept.foreach { t =>
-        System.err.println(s"ERROR dumping term ${t._1}: ${t._2}")
-      }
-      if (errTotal > errKept.size)
-        System.err.println(s"... and ${errTotal - errKept.size} more term " +
-          s"errors (log capped at ${errKept.size}; full count in the report)")
-      // The property block sorts by URI, so first-seen order is
-      // irrelevant; the min(att) merge makes the pick deterministic (att
-      // and uri are 1:1 — the uri is built FROM the fragment).
-      val props = propAcc.value
-        .map { case (uri, att) => TermProperty(uri, att) }.toSeq
+      val (heads, tails) = members.zip(counters).map {
+        case ((job, _, rec), counts) =>
+          val (errKept, errTotal) = counts.errRows.value
+          errKept.foreach { t =>
+            System.err.println(s"ERROR dumping term ${t._1}: ${t._2}")
+          }
+          if (errTotal > errKept.size)
+            System.err.println(s"... and ${errTotal - errKept.size} more " +
+              s"term errors (log capped at ${errKept.size}; full count in " +
+              "the report)")
+          // The property block sorts by URI, so first-seen order is
+          // irrelevant; the min(att) merge makes the pick deterministic
+          // (att and uri are 1:1 — the uri is built FROM the fragment).
+          val props = counts.properties.value
+            .map { case (uri, att) => TermProperty(uri, att) }.toSeq
+          (OntologyRender.Prefixes +
+            OntologyRender.header(namespace(conf, job), job.sab, rec,
+              conf.umlsVersion),
+            OntologyRender.propertyBlock(props, propertyDocs) +
+              (if (conf.includeSemanticTypes) semanticTypes + "\n" else ""))
+      }.unzip
 
-      val out = new BufferedOutputStream(
-        new FileOutputStream(tmpFile.toFile), 1 << 16)
+      val outs = tmpFiles.map(t =>
+        new BufferedOutputStream(new FileOutputStream(t.toFile), 1 << 16))
       try {
-        def w(s: String): Unit =
-          out.write(s.getBytes(StandardCharsets.UTF_8))
-        w(OntologyRender.Prefixes)
-        w(OntologyRender.header(ns, job.sab, rec, conf.umlsVersion))
+        def w(i: Int, s: String): Unit =
+          outs(i).write(s.getBytes(StandardCharsets.UTF_8))
+        heads.indices.foreach(i => w(i, heads(i)))
         mergeParts(new File(partsDir).listFiles()
           .filter(_.getName.startsWith("part-")).toSeq,
-          sc.hadoopConfiguration, out)
-        w(OntologyRender.propertyBlock(props, propertyDocs))
-        if (conf.includeSemanticTypes) { w(semanticTypes); w("\n") }
-      } finally out.close()
-      Files.move(tmpFile, Paths.get(outFile),
-        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    } finally {
-      def rm(f: File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(); ()
+          sc.hadoopConfiguration, outs.toIndexedSeq)
+        tails.indices.foreach(i => w(i, tails(i)))
+      } finally outs.foreach(_.close())
+      members.zip(tmpFiles).zip(counters).map {
+        case (((job, out, _), tmp), counts) =>
+          Files.move(tmp, Paths.get(out), StandardCopyOption.REPLACE_EXISTING,
+            StandardCopyOption.ATOMIC_MOVE)
+          val report = counts.report(job.sab, out)
+          published(report)
+          report
       }
-      rm(new File(partsDir))
-      Files.deleteIfExists(tmpFile)
-    }
-    WriteReport(job.sab, outFile, terms.value, errors.value,
-      dupL.value, dupO.value, dupS.value)
+    } finally tmpFiles.foreach(Files.deleteIfExists)
   }
 
-  /** Stream the term texts of the code-sorted `(code, text)` parquet
-    * `parts` into `out` in global code order: a k-way merge on the
-    * driver, no Spark job. Codes compare as unsigned UTF-8 bytes — the
-    * order of Spark's string sort and of
+  private def removeTree(f: File): Unit = {
+    val kids = f.listFiles(); if (kids != null) kids.foreach(removeTree)
+    f.delete(); ()
+  }
+
+  /** Stream the term texts of the code-sorted `(sab_id, code, text)`
+    * parquet `parts` into their SABs' `outs` in global code order: a k-way
+    * merge on the driver, no Spark job. Codes compare as unsigned UTF-8
+    * bytes — the order of Spark's string sort and of
     * [[graft.functions.SqlFns.sparkStringOrder]] — and are never NULL
-    * (the atom filter drops NULL codes). They are unique per row after
-    * `groupBy(code)`, so the order is total. */
+    * (the atom filter drops NULL codes). They are unique per SAB after
+    * `groupBy(sab_id, code)`, so each file's order is total. */
   private def mergeParts(parts: Seq[File], hadoopConf: Configuration,
-      out: OutputStream): Unit = {
+      outs: IndexedSeq[OutputStream]): Unit = {
     final class Cursor(reader: ParquetReader[Group]) {
+      var sab: Int = _
       var code: Array[Byte] = _
       var text: Binary = _
       def advance(): Boolean = reader.read() match {
         case null => false
         case g =>
+          sab = g.getInteger("sab_id", 0)
           code = g.getBinary("code", 0).getBytes
           text = g.getBinary("text", 0)
           true
@@ -323,7 +393,7 @@ object OntologyWriter {
       }
       while (!heap.isEmpty) {
         val c = heap.poll()
-        c.text.writeTo(out)
+        c.text.writeTo(outs(c.sab))
         if (c.advance()) heap.add(c)
       }
     } finally readers.foreach(_.close())

@@ -100,14 +100,14 @@ object UmlsSource {
 
   /** Shared-scan source for many-small-SAB manifests: each FAT table
     * (MRCONSO/MRREL/MRDEF/MRSAT) is scanned ONCE, filtered to the union
-    * of the manifest's SABs, and persisted; the N per-SAB export jobs
+    * of the manifest's SABs, and persisted; the export's mode groups
     * then filter the cached frame instead of issuing N lake scans — with
     * a 20-SAB manifest the biggest tables are read once, not 20×, and
-    * the per-job `SAB === x` predicates run against in-memory columnar
+    * the groups' `SAB IN (...)` predicates run against in-memory columnar
     * batches. MRCONSO/MRREL keep "SRC" (root detection reads the
     * `V-<sab>` atoms, `umls2rdf.py:612-614`) and "MSH" (tree-mode
-    * edges) alongside the manifest SABs; every per-job predicate is a
-    * strict subset of the union filter, so job inputs — and therefore
+    * edges) alongside the manifest SABs; every export predicate is a
+    * subset of the union filter, so export inputs — and therefore
     * exported bytes — are identical to the direct source
     * (spec-asserted). Small metadata tables pass through uncached.
     *
@@ -125,7 +125,7 @@ object UmlsSource {
     private val fatSabs = Map(
       "MRCONSO" -> withAux, "MRREL" -> withAux,
       "MRDEF" -> manifest, "MRSAT" -> manifest)
-    // Parallel per-SAB jobs resolve tables concurrently; computeIfAbsent
+    // Parallel group exports resolve tables concurrently; computeIfAbsent
     // guarantees one persist per table.
     private val cache =
       new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()

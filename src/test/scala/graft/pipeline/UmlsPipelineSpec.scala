@@ -164,7 +164,7 @@ class UmlsPipelineSpec extends AnyFunSuite {
     def run(sabs: Seq[String], counts: mutable.Map[String, Int]) = {
       val outDir = Files.createTempDirectory("msab-out").toFile
       val reports = graft.catalog.UmlsQueries.multiSabExport(spark,
-        countingSource(counts), sabs, outDir, parallelism = 2)
+        countingSource(counts), sabs, outDir)
       sabs.foreach { sab =>
         assert(new java.io.File(outDir, s"$sab.ttl").length() > 0L, sab)
       }
@@ -256,6 +256,17 @@ class UmlsPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("config validation rejects a manifest that lists a SAB twice (R4)") {
+    val out = Files.createTempDirectory("pipe-out").toString
+    val ex = intercept[IllegalArgumentException] {
+      new UmlsPipeline(spark, TestSpark.fixedSource(fixture),
+        jobs :+ OntologyJob("SABA", None, "SABA-again.ttl", loadOnCuis = true),
+        PipelineConfig(out, s"$out/.state",
+          UmlsExportConfig(umlsVersion = "2025AB")))
+    }
+    assert(ex.getMessage.contains("lists a SAB twice: List(SABA)"))
+  }
+
   test("exit code: --strict fails on any term error; without it only an " +
     "ontology with errors and no terms fails") {
     import graft.UmlsExportMain.exitCode
@@ -272,6 +283,308 @@ class UmlsPipelineSpec extends AnyFunSuite {
     }
     assert(exitCode(Seq(clean, someErrors), strict = false) === 0)
     assert(exitCode(Seq(clean, someErrors), strict = true) === 1)
+  }
+
+  // ---- one plan per manifest mode group ---------------------------------
+
+  private def rel(cui1: String, aui1: String, cui2: String, aui2: String,
+      rel: String, sab: String): Map[String, String] =
+    Map("CUI1" -> cui1, "AUI1" -> aui1, "CUI2" -> cui2, "AUI2" -> aui2,
+      "REL" -> rel, "SAB" -> sab, "SUPPRESS" -> "N")
+
+  private def mrsab(sab: String, imeta: String = "2025AB") =
+    Map("RSAB" -> sab, "VSAB" -> s"${sab}1", "CURVER" -> "Y", "LAT" -> "ENG",
+      "IMETA" -> imeta)
+
+  /** Four codes SABs and two cuis SABs that share codes, CUIs, a MeSH
+    * D-code and an ICD10CM-style root rel, so that any resolution that
+    * crosses SABs changes some SAB's file. */
+  private val groupRows: Map[String, Seq[Map[String, String]]] = Map(
+    "MRCONSO" -> Seq(
+      conso("C1", "A1", "X1", "Alpha", "PT", "KA"),
+      conso("C3", "A3", "X1", "Alpha synonym", "SY", "KA"),
+      conso("C2", "A2", "X2", "Alpha two", "PT", "KA"),
+      conso("C7", "A7", "D000002", "Alpha dee", "PT", "KA"),
+      conso("C1", "B1", "X1", "Beta one", "PT", "KB"),
+      conso("C4", "B2", "X3", "Beta three", "PT", "KB"),
+      conso("CM1", "AM1", "D000001", "Mesh parent", "MH", "MSH"),
+      conso("CM2", "AM2", "D000002", "Mesh child", "MH", "MSH"),
+      conso("CI1", "AI1", "A00", "Cholera", "PT", "ICD10CM"),
+      conso("C9", "CA1", "Q1", "Cee a", "PT", "CA") + ("ISPREF" -> "Y"),
+      conso("C8", "CA2", "Q2", "Cee a two", "PT", "CA") + ("ISPREF" -> "Y"),
+      conso("C9", "CB1", "R1", "Cee b", "PT", "CB") + ("ISPREF" -> "Y"),
+      conso("CR", "AR", "V-KA", "KA root", "PT", "SRC")),
+    "MRREL" -> Seq(
+      rel("C2", "A2", "C1", "A1", "CHD", "KA"),
+      rel("CR", "AR0", "C2", "A2", "CHD", "KA"), // V-KA root
+      // targets that resolve only in the other codes SAB: dropped
+      rel("C4", "B2", "C1", "A1", "RO", "KA"),
+      rel("C2", "A2", "C1", "B1", "RO", "KB"),
+      // anchored at the other SAB's atom: attaches to nothing
+      rel("C4", "B2", "C7", "A7", "RO", "KB"),
+      // the ICD10CM root patch rel, also present in KA
+      rel("C3264380", "AX", "CI1", "AI1", "CHD", "ICD10CM"),
+      rel("C3264380", "AX", "C1", "A1", "CHD", "KA"),
+      rel("CM1", "AM1", "CM2", "AM2", "CHD", "MSH"),
+      rel("C8", "CA2", "C9", "CA1", "RO", "CA"),
+      rel("C8", "CX", "C9", "CB1", "RN", "CB")),
+    "MRDEF" -> Seq(
+      Map("CUI" -> "C1", "AUI" -> "A1", "SAB" -> "KA", "DEF" -> "Def KA"),
+      Map("CUI" -> "C1", "AUI" -> "B1", "SAB" -> "KB", "DEF" -> "Def KB"),
+      Map("CUI" -> "C9", "AUI" -> "CA1", "SAB" -> "CA", "DEF" -> "Def CA"),
+      Map("CUI" -> "C9", "AUI" -> "CB1", "SAB" -> "CB", "DEF" -> "Def CB")),
+    "MRSAT" -> Seq(
+      Map("CUI" -> "C1", "CODE" -> "X1", "ATN" -> "TH", "ATV" -> "ka",
+        "SAB" -> "KA"),
+      Map("CUI" -> "C1", "CODE" -> "X1", "ATN" -> "TH", "ATV" -> "kb",
+        "SAB" -> "KB"),
+      Map("CUI" -> "C9", "CODE" -> "Q1", "ATN" -> "TH", "ATV" -> "ca",
+        "SAB" -> "CA")),
+    "MRRANK" -> Seq( // MSH finishes by A7, the others by A9
+      Map("RANK" -> "0400", "SAB" -> "MSH", "TTY" -> "MH",
+        "SUPPRESS" -> "N")),
+    "MRSTY" -> Seq(
+      Map("CUI" -> "C1", "TUI" -> "T001", "STN" -> "A1", "STY" -> "Entity"),
+      Map("CUI" -> "C9", "TUI" -> "T002", "STN" -> "A1.1",
+        "STY" -> "Object")),
+    "MRSAB" -> Seq("KA", "KB", "MSH", "ICD10CM", "CA", "CB").map(mrsab(_)),
+    "MRDOC" -> Seq(
+      Map("DOCKEY" -> "REL", "VALUE" -> "RO", "TYPE" -> "expanded_form",
+        "EXPL" -> "related"),
+      Map("DOCKEY" -> "REL", "VALUE" -> "RN", "TYPE" -> "expanded_form",
+        "EXPL" -> "narrower"),
+      Map("DOCKEY" -> "ATN", "VALUE" -> "TH", "TYPE" -> "expanded_form",
+        "EXPL" -> "thesaurus"))
+  )
+
+  private def groupSource(rows: Map[String, Seq[Map[String, String]]] =
+      groupRows) =
+    TestSpark.fixedSource(
+      rows.map { case (t, r) => t -> TestSpark.mkTable(t, r) })
+
+  private def job(sab: String, cuis: Boolean = false) =
+    OntologyJob(sab, None, s"$sab.ttl", loadOnCuis = cuis)
+
+  private def exportTo(out: String, jobs: Seq[OntologyJob],
+      rows: Map[String, Seq[Map[String, String]]] = groupRows,
+      conf: UmlsExportConfig = UmlsExportConfig(umlsVersion = "2025AB"),
+      work: Option[String] = None): Seq[WriteReport] =
+    new UmlsPipeline(spark, groupSource(rows), jobs,
+      PipelineConfig(out, work.getOrElse(s"$out/.state"), conf)).run()
+
+  private def bytes(path: String): Seq[Byte] =
+    Files.readAllBytes(Paths.get(path)).toSeq
+
+  /** Export `jobs` as one manifest, then each job as its own manifest:
+    * every grouped file must equal its one-SAB export. Returns the
+    * grouped run's directory and reports. */
+  private def assertGroupedEqualsSingles(jobs: Seq[OntologyJob],
+      rows: Map[String, Seq[Map[String, String]]] = groupRows,
+      conf: UmlsExportConfig = UmlsExportConfig(umlsVersion = "2025AB"))
+      : (String, Seq[WriteReport]) = {
+    val grouped = Files.createTempDirectory("pipe-group").toString
+    val reports = exportTo(grouped, jobs, rows, conf)
+    jobs.zip(reports).filterNot(_._2.skipped).foreach { case (j, _) =>
+      val alone = Files.createTempDirectory("pipe-alone").toString
+      exportTo(alone, Seq(j), rows, conf)
+      val (g, a) = (s"$grouped/${j.outFile}", s"$alone/${j.outFile}")
+      assert(bytes(g) == bytes(a), s"${j.sab}: the grouped file differs " +
+        s"from its one-SAB export:\n${text(g)}\n--- one-SAB:\n${text(a)}")
+    }
+    (grouped, reports)
+  }
+
+  private def text(path: String): String =
+    new String(Files.readAllBytes(Paths.get(path)),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+  test("mode groups: two cuis SABs sharing a CUI each export their own " +
+    "class, as their one-SAB manifests do") {
+    val (out, reports) =
+      assertGroupedEqualsSingles(
+        Seq(job("CA", cuis = true), job("CB", cuis = true)))
+    assert(reports.map(r => (r.sab, r.terms, r.errors)) ===
+      Seq(("CA", 2L, 0L), ("CB", 1L, 0L)))
+    val ca = text(s"$out/CA.ttl")
+    val cb = text(s"$out/CB.ttl")
+    assert(ca.contains("\"\"\"Cee a\"\"\"@en") && !ca.contains("Cee b"))
+    assert(cb.contains("\"\"\"Cee b\"\"\"@en") && !cb.contains("Cee a"))
+    assert(ca.contains("Def CA") && !ca.contains("Def CB"))
+    assert(cb.contains("/CB/RN>") && !ca.contains("/CA/RN>"))
+  }
+
+  test("mode groups: two codes SABs sharing a CODE keep their labels, " +
+    "definitions and attributes apart") {
+    val (out, reports) = assertGroupedEqualsSingles(Seq(job("KA"), job("KB")))
+    assert(reports.map(r => (r.sab, r.terms)) === Seq(("KA", 3L), ("KB", 2L)))
+    val ka = text(s"$out/KA.ttl")
+    val kb = text(s"$out/KB.ttl")
+    assert(ka.contains("Def KA") && !ka.contains("Def KB"))
+    assert(kb.contains("Def KB") && !kb.contains("Def KA"))
+    assert(ka.contains("Alpha synonym") && !kb.contains("Alpha"))
+    assert(ka.contains("\"\"\"ka\"\"\"") && !ka.contains("\"\"\"kb\"\"\""))
+  }
+
+  test("mode groups: a rel whose AUI resolves only in another SAB of the " +
+    "group stays unresolved") {
+    val (out, _) = assertGroupedEqualsSingles(Seq(job("KA"), job("KB")))
+    // KA's X1 -> KB's atom B2 and KB's X1 -> KA's atom A2 resolve in the
+    // other SAB only; KB's rel anchored at KA's atom A7 attaches nowhere.
+    assert(!text(s"$out/KA.ttl").contains("/KA/RO>"))
+    assert(!text(s"$out/KB.ttl").contains("/KB/RO>"))
+    // the in-SAB CHD rel and the V-KA root still resolve
+    assert(text(s"$out/KA.ttl").contains(
+      "rdfs:subClassOf <http://purl.bioontology.org/ontology/KA/X2>"))
+    assert(text(s"$out/KA.ttl").contains("rdfs:subClassOf owl:Thing"))
+  }
+
+  test("mode groups: the MeSH tree and the ICD10CM root patch touch only " +
+    "their own SAB") {
+    val (out, _) = assertGroupedEqualsSingles(
+      Seq(job("KA"), job("MSH"), job("ICD10CM")))
+    val msh = text(s"$out/MSH.ttl")
+    val ka = text(s"$out/KA.ttl")
+    assert(msh.contains(
+      "rdfs:subClassOf <http://purl.bioontology.org/ontology/MSH/D000001>"))
+    // KA's own D000002 gets no tree parent, and KA's CHD rel from
+    // C3264380 is no root patch
+    assert(!ka.contains("/D000001>"))
+    def term(ttl: String, code: String): String = {
+      val from = ttl.indexOf(s"/$code> a owl:Class")
+      ttl.substring(from, ttl.indexOf(" .\n", from))
+    }
+    assert(!term(ka, "X1").contains("owl:Thing"))
+    assert(term(text(s"$out/ICD10CM.ttl"), "A00").contains(
+      "rdfs:subClassOf owl:Thing"))
+  }
+
+  test("mode groups: per-SAB error counts, and the error log is capped " +
+    "per SAB") {
+    def bad(sab: String, n: Int) = (1 to n).map(i =>
+      conso(s"C$sab$i", s"A$sab$i", s"BAD$i", s"Unlabelable $i", "SY", sab))
+    val rows = groupRows +
+      ("MRCONSO" ->
+        (groupRows("MRCONSO") ++ bad("KA", 1200) ++ bad("KB", 1003)))
+    val err = new java.io.ByteArrayOutputStream()
+    val before = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val (_, reports) =
+      try assertGroupedEqualsSingles(Seq(job("KA"), job("KB")), rows)
+      finally System.setErr(before)
+    assert(reports.map(r => (r.sab, r.terms, r.errors)) ===
+      Seq(("KA", 3L, 1200L), ("KB", 2L, 1003L)))
+    // three runs logged: the group, then KA alone, then KB alone
+    val lines = err.toString("UTF-8").linesIterator.toSeq
+    assert(lines.count(_.startsWith("ERROR dumping term BAD")) === 4000)
+    assert(lines.filter(_.startsWith("... and ")).map(_.split(" ")(2)) ===
+      Seq("200", "3", "200", "3"))
+  }
+
+  test("mode groups: --strict fails the group naming the offending SAB, " +
+    "before any of its files is published") {
+    val rows = groupRows +
+      ("MRCONSO" -> (groupRows("MRCONSO") :+ conso("C5", "B5", "", "No code",
+        "PT", "KB")))
+    val out = Files.createTempDirectory("pipe-strict").toString
+    val ex = intercept[IllegalStateException](exportTo(out,
+      Seq(job("KA"), job("KB")), rows,
+      UmlsExportConfig(umlsVersion = "2025AB", strict = true)))
+    assert(ex.getMessage.contains("atoms with empty CODE in SAB KB"),
+      ex.getMessage)
+    assert(!Files.exists(Paths.get(s"$out/KA.ttl")))
+    assert(!Files.exists(Paths.get(s"$out/KB.ttl")))
+  }
+
+  test("mode groups: a missing MRSAB LAT fails the group before any of " +
+    "its files is published") {
+    val rows = groupRows + ("MRSAB" -> Seq(mrsab("KA"), mrsab("KB") - "LAT"))
+    val out = Files.createTempDirectory("pipe-nolat").toString
+    val ex = intercept[IllegalStateException](
+      exportTo(out, Seq(job("KA"), job("KB")), rows))
+    assert(ex.getMessage === "No LAT found in MRSAB for ontology KB")
+    assert(!Files.exists(Paths.get(s"$out/KA.ttl")))
+  }
+
+  test("mode groups: an F18 version-gate skip inside a group leaves the " +
+    "other SABs' files as their one-SAB manifests write them") {
+    val rows = groupRows +
+      ("MRSAB" -> Seq(mrsab("KA"), mrsab("KB", imeta = "2024AA"), mrsab("MSH")))
+    val conf = UmlsExportConfig(umlsVersion = "2025AB",
+      processOnlyCurrentVersion = true)
+    val (out, reports) = assertGroupedEqualsSingles(
+      Seq(job("KA"), job("KB"), job("MSH")), rows, conf)
+    assert(reports.map(r => (r.sab, r.skipped)) ===
+      Seq(("KA", false), ("KB", true), ("MSH", false)))
+    assert(!Files.exists(Paths.get(s"$out/KB.ttl")))
+  }
+
+  test("mode groups: a kill between two SABs of one group resumes to " +
+    "byte-identical files with no stale temp file or parts") {
+    val jobs = Seq(job("KA"), job("KB"), job("CA", cuis = true))
+    val full = Files.createTempDirectory("pipe-kill-full").toString
+    exportTo(full, jobs)
+    // The killed run published KA and died before KB: its state names KA,
+    // and its KB temp file and the group's parts are still on disk.
+    val out = Files.createTempDirectory("pipe-kill-out").toString
+    val work = Files.createTempDirectory("pipe-kill-work").toString
+    val st = new PipelineState(s"$work/pipeline_state.json")
+    Seq("validate_source", "semantic_types", "ontology:KA")
+      .foreach(st.markDone)
+    for (f <- Seq("KA.ttl", "umls_semantictypes.ttl"))
+      Files.copy(Paths.get(s"$full/$f"), Paths.get(s"$out/$f"))
+    Files.write(Paths.get(s"$out/KB.ttl.tmp"), "half a file".getBytes)
+    Files.createDirectories(Paths.get(s"$work/parts-codes"))
+    Files.write(Paths.get(s"$work/parts-codes/part-00000-stale.parquet"),
+      "stale".getBytes)
+    val p = new UmlsPipeline(spark, groupSource(), jobs,
+      PipelineConfig(out, work, UmlsExportConfig(umlsVersion = "2025AB")))
+    val reports = p.run()
+    assert(p.executed.toSet ===
+      Set("ontology:KB", "ontology:CA", "validate_output"))
+    assert(reports.map(r => (r.sab, r.resumed)) ===
+      Seq(("KA", true), ("KB", false), ("CA", false)))
+    for (f <- Seq("KA.ttl", "KB.ttl", "CA.ttl"))
+      assert(bytes(s"$out/$f") === bytes(s"$full/$f"), f)
+    assert(new java.io.File(out).list().toSet ===
+      Set("KA.ttl", "KB.ttl", "CA.ttl", "umls_semantictypes.ttl"))
+    assert(new java.io.File(work).list().toSeq === Seq("pipeline_state.json"))
+  }
+
+  test("mode groups: a manifest of two codes and two cuis SABs runs " +
+    "exactly two write executions") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val out = Files.createTempDirectory("pipe-writes").toString
+    val writes = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        helper.collect(qe.executedPlan) {
+          case w: DataWritingCommandExec => w.cmd
+        }.foreach {
+          case i: InsertIntoHadoopFsRelationCommand
+              if i.outputPath.toString.contains(out) =>
+            writes.add(i.outputPath.toString)
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val reports =
+      try exportTo(out, Seq(job("KA"), job("CA", cuis = true), job("KB"),
+        job("CB", cuis = true)))
+      finally {
+        Thread.sleep(1500) // listener events arrive asynchronously
+        spark.listenerManager.unregister(listener)
+      }
+    assert(reports.map(_.sab) === Seq("KA", "CA", "KB", "CB"))
+    import scala.jdk.CollectionConverters._
+    assert(writes.asScala.toSeq.map(p => p.substring(p.lastIndexOf('/') + 1))
+      .sorted === Seq("parts-codes", "parts-cuis"), writes)
   }
 
   test("manifest parser skips comments and parses alt URIs (S4/F19)") {

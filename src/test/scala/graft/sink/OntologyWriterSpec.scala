@@ -269,9 +269,10 @@ class OntologyWriterSpec extends AnyFunSuite {
     }
   }
 
-  /** The writer's own rendered rows for `tables`, collected unordered. */
+  /** The writer's own rendered rows for `tables`, collected unordered,
+    * with the render's counters. */
   private def renderedRows(tables: Map[String, org.apache.spark.sql.DataFrame])
-      : Seq[RenderResult] = {
+      : (Seq[RenderedPart], SabCounters) = {
     val lookups = graft.assemble.ReleaseLookups.forSab(
       TestSpark.fixedSource(tables), "TEST")
     val asm = new graft.assemble.ConceptAssembler(spark,
@@ -281,7 +282,9 @@ class OntologyWriterSpec extends AnyFunSuite {
       ns = "http://purl.bioontology.org/ontology/TEST/", lang = "en",
       hierarchy = true, hasTree = false, dedupe = true,
       styUrl = "http://purl.bioontology.org/ontology/STY/")
-    try OntologyWriter.rendered(asm, cfg, strict = false).collect().toSeq
+    val counters = new SabCounters(spark.sparkContext)
+    try (OntologyWriter.rendered(asm, IndexedSeq(cfg), strict = false,
+      IndexedSeq(counters)).collect().toSeq, counters)
     finally asm.unpersistShared()
   }
 
@@ -368,7 +371,7 @@ class OntologyWriterSpec extends AnyFunSuite {
   test("a write that fails mid-way publishes nothing and leaves no " +
     "temp file or parts behind") {
     // MRDOC documents no predicate, so the property block raises (J10)
-    // after the parts are written and while <out>.tmp is half-assembled.
+    // after the parts are written.
     val dir = Files.createTempDirectory("graft-ttl-fail").toString
     val out = s"$dir/TEST.ttl"
     def failingWrite(): Unit = {
@@ -470,8 +473,8 @@ class OntologyWriterSpec extends AnyFunSuite {
     assert(rows.sum === codes.size.toLong)
     assert(rep.terms === codes.size.toLong && rep.errors === 0L)
 
-    val rendered = renderedRows(tables)
-    assert(rendered.forall(_.error == null))
+    val (rendered, counters) = renderedRows(tables)
+    assert(counters.errors.value === 0L)
     val sparkOrder = rendered.sortBy(_.code)(
       graft.functions.SqlFns.sparkStringOrder)
     assert(sparkOrder.map(_.code) !== rendered.sortBy(_.code).map(_.code),
