@@ -14,17 +14,17 @@ import graft.sources.{ConfManifest, UmlsSource}
   *
   * Usage:
   *   runMain graft.UmlsExportMain <sourceDir> <umls.conf> <outDir> <umlsVersion>
-  *       [--strict] [--only-current] [--no-dedupe] [--parallel N]
-  *       [--shared-scan] [--master M]
+  *       [--strict] [--only-current] [--no-dedupe] [--shared-scan]
+  *       [--master M]
   *
   * `--strict` fails on empty CODEs, ambiguous AUIs and unmapped languages,
   * and exits 1 when any ontology had a term error (without it, only an
   * ontology with errors and no terms exits 1);
   * `--only-current` skips ontologies whose MRSAB record is not the
-  * current version; `--no-dedupe` keeps duplicate triples; `--parallel N`
-  * (N > 1) runs the manifest's two mode-group plans — its load_on_codes
-  * and its load_on_cuis ontologies — at once; `--master M` sets the
-  * Spark master (default `local[*]`).
+  * current version; `--no-dedupe` keeps duplicate triples; `--master M`
+  * sets the Spark master (default `local[*]`). The manifest's
+  * load_on_codes and load_on_cuis ontologies export as two plans that
+  * always run at once.
   *
   * `--shared-scan` reads each fat table once for the whole manifest
   * ([[graft.sources.UmlsSource.sharedScan]]) — the win for
@@ -41,8 +41,8 @@ object UmlsExportMain {
     if (args.length < 4) {
       System.err.println(
         "usage: UmlsExportMain <sourceDir> <umls.conf> <outDir> <umlsVersion>" +
-          " [--strict] [--only-current] [--no-dedupe] [--parallel N]" +
-          " [--shared-scan] [--master M]")
+          " [--strict] [--only-current] [--no-dedupe] [--shared-scan]" +
+          " [--master M]")
       sys.exit(2)
     }
     val Array(sourceDir, confPath, outDir, version) = args.take(4)
@@ -50,9 +50,6 @@ object UmlsExportMain {
     val master = flags.sliding(2).collectFirst {
       case Seq("--master", m) => m
     }.getOrElse("local[*]")
-    val parallel = flags.sliding(2).collectFirst {
-      case Seq("--parallel", n) => n.toInt
-    }.getOrElse(1)
 
     val spark = SparkSession.builder()
       .appName(s"umls-export-$version")
@@ -83,11 +80,12 @@ object UmlsExportMain {
           dedupeTriples = !flags.contains("--no-dedupe"),
           processOnlyCurrentVersion = flags.contains("--only-current"),
           strict = flags.contains("--strict")),
-        parallelism = parallel,
         sharedScan = flags.contains("--shared-scan"))
       val reports = new UmlsPipeline(spark, source, jobs, config).run()
       reports.foreach { r =>
-        val status = if (r.skipped) "skipped (done in a previous run)"
+        val status =
+          if (r.resumed) "skipped (done in a previous run)"
+          else if (r.skipped) "skipped (not the current version)"
           else s"${r.terms} terms, ${r.errors} errors, " +
             s"dups(lit=${r.dupLiteral} obj=${r.dupObject} sub=${r.dupSubclass})"
         println(s"[export] ${r.sab} -> ${r.path}: $status")

@@ -1,5 +1,6 @@
 package graft.assemble
 
+import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -62,8 +63,8 @@ class ConceptAssembler private (
     saltBuckets: Int,
     release: ReleaseLookups) {
 
-  /** One SAB's assembler: a group of one. Without `lookups`, this SAB's
-    * MRRANK map and root CUIs are read on first use. */
+  /** One SAB's assembler: a group of one, whose MRRANK map and root CUIs
+    * are read on first use. */
   def this(
       spark: SparkSession,
       source: UmlsSource,
@@ -71,10 +72,9 @@ class ConceptAssembler private (
       loadOnCuis: Boolean = false,
       lang: String = "ENG",
       limit: Option[Int] = None,
-      saltBuckets: Int = 1,
-      lookups: Option[ReleaseLookups] = None) =
+      saltBuckets: Int = 1) =
     this(spark, source, Seq(sab), Seq(lang), loadOnCuis, limit, saltBuckets,
-      lookups.getOrElse(ReleaseLookups.forSab(source, sab)))
+      ReleaseLookups.forSab(source, sab))
 
   require(sabs.nonEmpty && sabs.distinct.size == sabs.size,
     s"a SAB group needs distinct SABs: $sabs")
@@ -137,27 +137,29 @@ class ConceptAssembler private (
     * MEMORY_AND_DISK: a SAB-pruned narrow projection is a few M rows for
     * the largest SAB at full-UMLS scale; disk spill keeps it safe
     * regardless. Call [[unpersistShared]] when the export is done. */
-  private var sharedInitialized = false
-  private lazy val atomsShared: DataFrame = {
-    sharedInitialized = true
+  private lazy val atomsShared: DataFrame =
     // Only the columns assembly reads — caching the full 19-column RRF
     // row would double the cache bytes (and the row-encode cost) for
     // columns nothing downstream touches.
-    atoms.select(keyed("sab_id", sabIdOf(col("SAB")))(col("code"),
-        col("CUI"), col("TS"), col("STT"), col("ISPREF"), col("AUI"),
-        col("SCUI"), col("TTY"), col("CODE"), col("STR")): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-  }
+    persisted(atoms.select(keyed("sab_id", sabIdOf(col("SAB")))(col("code"),
+      col("CUI"), col("TS"), col("STT"), col("ISPREF"), col("AUI"),
+      col("SCUI"), col("TTY"), col("CODE"), col("STR")): _*))
 
   /** The `sab_id` of an [[atomsShared]] row. */
   private def atomSab: Column = sabKey(col("sab_id"))
 
-  /** Release the shared atom and tree caches (no-op if assembly never
-    * ran). */
-  def unpersistShared(): Unit = {
-    if (sharedInitialized) atomsShared.unpersist()
-    if (treeInitialized) meshTreeShared.unpersist()
-    ()
+  /** The frames this assembler persisted, released by [[unpersistShared]]. */
+  private val persistedFrames = mutable.Buffer.empty[DataFrame]
+
+  private def persisted(df: DataFrame): DataFrame = synchronized {
+    persistedFrames += df
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Release the assembler's caches (no-op if assembly never ran). */
+  def unpersistShared(): Unit = synchronized {
+    persistedFrames.foreach(_.unpersist())
+    persistedFrames.clear()
   }
 
   /** `get_code` (`umls2rdf.py:142-147`): CUI in cuis mode; else CODE,
@@ -184,22 +186,22 @@ class ConceptAssembler private (
     * read from MRREL filtered on SAB/REL only — not from [[rels]]. */
   def meshTree: DataFrame = meshTreeKeyed.drop("msab")
 
-  /** Whether MSH is in the group and its D-tree has an edge: the
-    * reference's tree checks are TRUTHINESS tests (`if tree:`,
-    * `umls2rdf.py:411,422,437`), so an MSH export whose tree query
-    * returns zero edges renders tree-less (no MN-root rule). The probe
-    * reads the persisted tree that [[assembled]] joins, so the tree's
-    * joins and shuffles run once per group. */
-  def hasMeshTree: Boolean =
-    sabs.contains("MSH") && !meshTreeShared.isEmpty
+  /** Whether the group's MeSH D-tree has an edge, as a column of the
+    * plan that reads it: the reference's tree checks are TRUTHINESS tests
+    * (`if tree:`, `umls2rdf.py:411,422,437`), so an MSH export whose tree
+    * query returns zero edges renders tree-less (no MN-root rule). An
+    * uncorrelated EXISTS runs inside the export's own execution, so the
+    * driver asks nothing between the lookups and the write. Always false
+    * without MSH in the group. */
+  def meshTreeExists: Column =
+    if (sabs.contains("MSH")) meshTreeShared.exists() else lit(false)
 
   /** [[meshTreeKeyed]], persisted once per assembler like
-    * [[atomsShared]]. */
-  private var treeInitialized = false
-  private lazy val meshTreeShared: DataFrame = {
-    treeInitialized = true
-    meshTreeKeyed.persist(StorageLevel.MEMORY_AND_DISK)
-  }
+    * [[atomsShared]]: the EXISTS subquery and the join in [[assembled]]
+    * plan the tree apart (constraints inferred from the join, and join
+    * strategies AQE picks per subquery, differ), so without the cache
+    * they share no exchange and the tree would be computed twice. */
+  private lazy val meshTreeShared: DataFrame = persisted(meshTreeKeyed)
 
   /** [[meshTree]] keyed by MSH's `sab_id` (`msab`), taken from the rows
     * themselves: a key Catalyst cannot fold keeps the tree join on

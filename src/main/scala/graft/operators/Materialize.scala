@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Materialize-and-cut-lineage for intermediate frames that feed several
@@ -97,9 +97,11 @@ object Materialize {
     * `Dataset.unpersist()` does not: the blocks belong to the checkpointed
     * RDD the frame scans, not to the cache manager (MaterializeSpec), so
     * without this they stay until the frame is garbage-collected. The
-    * frame must not be read afterwards. */
+    * frame must not be read afterwards. The blocks are dropped through the
+    * context rather than `RDD.unpersist`, which warns on every call that a
+    * checkpointed RDD cannot be recomputed — the point of releasing it. */
   def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = true); ()
+    case r: LogicalRDD => GraftSqlShims.unpersistRDD(df.sparkSession, r.rdd.id)
     case _ => ()
   }
 }

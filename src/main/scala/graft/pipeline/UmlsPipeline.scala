@@ -3,11 +3,12 @@ package graft.pipeline
 import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.Executors
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
 
@@ -55,11 +56,8 @@ final case class PipelineConfig(
     outputDir: String,
     workDir: String,
     exportConf: UmlsExportConfig,
-    /** Concurrent mode-group exports. A manifest exports as at most two
-      * plans — its `load_on_codes` group and its `load_on_cuis` group,
-      * each one Spark plan over all its SABs — so `parallelism > 1` runs
-      * the two groups' plans at once and lets Spark interleave their
-      * stages; values above 2 add nothing. */
+    /** Ignored: a manifest's two mode-group plans always run at once.
+      * Kept only for callers built against the earlier option. */
     parallelism: Int = 1,
     /** Scan each fat table ONCE for the whole manifest
       * ([[graft.sources.UmlsSource.sharedScan]]) instead of once per SAB
@@ -71,9 +69,9 @@ final case class PipelineConfig(
 /** The run-once export pipeline (`umls2rdf.py:828-896` +
   * `run_umls_pipeline.py`): validate source → the run's small lookups
   * (read once, concurrently) → semantic types → one ontology file per
-  * manifest entry, exported by one plan per mode group → validate
-  * output. Each step (each ontology its own) is recorded in
-  * [[PipelineState]]; completed steps are skipped on re-run (R1); the
+  * manifest entry, exported by one plan per mode group, the groups at
+  * once → validate output. Each step (each ontology its own) is recorded
+  * in [[PipelineState]]; completed steps are skipped on re-run (R1); the
   * lookups are re-read by every run, so a rewritten lake is seen. Validation probes are R2 (`run_umls_pipeline.py:256-290`);
   * config checks are R4 (`:298-308`).
   */
@@ -111,7 +109,7 @@ final class UmlsPipeline(
   }
 
   private def step[T](name: String)(body: => T): Option[T] =
-    // All state access under the pipeline lock: parallel export threads
+    // All state access under the pipeline lock: the mode groups' threads
     // write disjoint step names, but LinkedHashSet reads racing writes are
     // still undefined.
     if (synchronized(state.isDone(name))) None
@@ -181,6 +179,28 @@ final class UmlsPipeline(
     } finally pool.shutdown()
   }
 
+  /** Run `tasks` at once, each on its own thread — the mode groups'
+    * exports, so Spark interleaves their plans' stages. Every task is
+    * awaited before this returns, also when one fails: a group still
+    * writing would otherwise publish and mark its files after [[run]] had
+    * thrown and released the shared-scan cache it reads. The first
+    * failure, in task order, is then rethrown. The wait is not bounded: a
+    * group ends when its Spark jobs do. */
+  private def allAtOnce[T](tasks: Seq[() => T]): Seq[T] =
+    if (tasks.size <= 1) tasks.map(_())
+    else {
+      val pool = Executors.newFixedThreadPool(tasks.size)
+      val results =
+        try tasks.map(t => pool.submit(new Callable[T] { def call(): T = t() }))
+          .map(f => Try(f.get()))
+        finally pool.shutdown()
+      results.map {
+        case Success(r) => r
+        case Failure(e: ExecutionException) => throw e.getCause
+        case Failure(e) => throw e
+      }
+    }
+
   private def runSteps(): Seq[WriteReport] = {
     step("validate_source")(validateSource())
 
@@ -202,9 +222,10 @@ final class UmlsPipeline(
       else ""
 
     // One plan per manifest mode group: every load_on_codes SAB in one,
-    // every load_on_cuis SAB in the other. Resume stays per SAB: a SAB
-    // completed by an earlier run is reported resumed, and each SAB is
-    // marked done as soon as its file is published.
+    // every load_on_cuis SAB in the other, the two run at once. Resume
+    // stays per SAB: a SAB completed by an earlier run is reported
+    // resumed, and each SAB is marked done as soon as its file is
+    // published.
     def exportGroup(group: Seq[OntologyJob]): Seq[WriteReport] = {
       val (done, pending) = synchronized {
         val (d, p) = group.partition(j => state.isDone(s"ontology:${j.sab}"))
@@ -225,21 +246,7 @@ final class UmlsPipeline(
     val groups = jobs.partition(!_.loadOnCuis) match {
       case (codes, cuis) => Seq(codes, cuis).filter(_.nonEmpty)
     }
-    val groupReports =
-      if (config.parallelism <= 1 || groups.size <= 1)
-        groups.flatMap(exportGroup)
-      else {
-        // The groups are independent plans; a bounded pool submits them
-        // so Spark's scheduler interleaves their stages.
-        val pool = Executors.newFixedThreadPool(
-          math.min(config.parallelism, groups.size))
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        try Await.result(
-          Future.sequence(groups.map(g => Future(exportGroup(g)))),
-          Duration.Inf).flatten
-        finally pool.shutdown()
-      }
+    val groupReports = allAtOnce(groups.map(g => () => exportGroup(g))).flatten
     val bySab = groupReports.map(r => r.sab -> r).toMap
     val reports = jobs.map(j => bySab(j.sab))
 

@@ -9,17 +9,15 @@ import graft.model.{RenderedTerm, TermProperty, UmlsConceptRow}
 /** Render options for one ontology — the knobs `UmlsClass.toRDF` takes as
   * arguments or reads from config (`umls2rdf.py:391,766,889`).
   *
+  * CHD rels always render as `rdfs:subClassOf`: the reference main loop's
+  * `hierarchy=(sab != "MSH")` (`umls2rdf.py:889`) is DEAD, because
+  * `write_into` never forwards the flag to `toRDF` (`umls2rdf.py:745,766`),
+  * so `toRDF` always runs with hierarchy=True and MSH CHD suppression comes
+  * from the tree alone (`umls2rdf.py:437-448`; ReferenceDifferentialSpec
+  * pins this byte-for-byte).
+  *
   * @param ns        ontology namespace (term URIs are `ns/quote(code)`)
   * @param lang      output language tag (mapped MRSAB.LAT, `umls2rdf.py:766`)
-  * @param hierarchy CHD rels become `rdfs:subClassOf` when true (the
-  *                  `toRDF` parameter). The reference main loop's
-  *                  `hierarchy=(sab != "MSH")` (`umls2rdf.py:889`) is
-  *                  DEAD: `write_into` drops the flag
-  *                  (`umls2rdf.py:745,766`), so `toRDF` always runs
-  *                  with hierarchy=True and MSH CHD suppression comes
-  *                  from the tree alone — the production writer
-  *                  therefore passes true (ReferenceDifferentialSpec
-  *                  pins this byte-for-byte)
   * @param hasTree   a MeSH code tree exists (J12); suppresses rel-driven
   *                  subclass triples and enables the MN-root rule (F14)
   * @param dedupe    `conf.DEDUPE_CLASS_TRIPLES` (A10)
@@ -28,7 +26,6 @@ import graft.model.{RenderedTerm, TermProperty, UmlsConceptRow}
 final case class RenderConfig(
     ns: String,
     lang: String = "en",
-    hierarchy: Boolean = true,
     hasTree: Boolean = false,
     dedupe: Boolean = true,
     styUrl: String = "http://purl.bioontology.org/ontology/STY/")
@@ -145,7 +142,7 @@ object ConceptRenderer {
           s"Inconsistent code in rel: ${r.codeSource} != ${c.code}")
       val fragment = if (r.rela != null && r.rela.nonEmpty) r.rela else r.rel
       if (r.rel != "PAR") { // F10
-        if (r.rel == "CHD" && cfg.hierarchy) { // F11
+        if (r.rel == "CHD") { // F11
           if (!BogusRoots.contains(r.codeTarget)) { // F12
             if (!cfg.hasTree)
               appendSubclass(urlTerm(cfg.ns, r.codeTarget))

@@ -51,13 +51,14 @@ private[graft] final case class RenderedPart(
 /** The columnar-finished concept row the sink consumes: the
   * [[graft.assemble.ConceptAssembler.finishedTry]] output —
   * the class's `sab_id`, [[graft.model.UmlsConceptRow]] fields and the
-  * per-term finishing error (`__finish_err`, NULL on success). */
+  * per-term finishing error (`__finish_err`, NULL on success) — plus
+  * whether the group's MeSH tree has an edge (`has_tree`). */
 private[sink] final case class FinishedRow(
     sab_id: Int, code: String, prefLabel: String,
     altLabels: Seq[String], defs: Seq[String], cuis: Seq[String],
     tuis: Seq[String], atts: Seq[graft.model.AttOut],
     rels: Seq[graft.model.RelOut], isRoot: Boolean,
-    treeParents: Seq[String], __finish_err: String) {
+    treeParents: Seq[String], __finish_err: String, has_tree: Boolean) {
   def toConceptRow: graft.model.UmlsConceptRow =
     graft.model.UmlsConceptRow(code, prefLabel, altLabels, defs, cuis,
       tuis, atts, rels, isRoot, treeParents)
@@ -112,8 +113,9 @@ object OntologyWriter {
     * S6 error log; the total error COUNT stays exact past it. */
   private[sink] val ErrorLogCap = 1000
 
-  /** Export one ontology, reading its MRSAB record, MRRANK map and root
-    * CUIs on their own ([[ReleaseLookups.forSab]]). */
+  /** Export one ontology as a group of one ([[writeGroup]]), its parts at
+    * `<outFile>.parts`, reading its MRSAB record, MRRANK map and root CUIs
+    * on their own ([[ReleaseLookups.forSab]]). */
   def write(
       spark: SparkSession,
       source: UmlsSource,
@@ -122,34 +124,20 @@ object OntologyWriter {
       outFile: String,
       propertyDocs: Map[String, PropertyDoc],
       semanticTypes: String): WriteReport =
-    write(spark, source, job, conf, outFile, propertyDocs, semanticTypes,
-      ReleaseLookups.forSab(source, job.sab))
-
-  /** Export one ontology with its small lookups taken from `lookups`, the
-    * run's snapshot: a group of one ([[writeGroup]]), its parts at
-    * `<outFile>.parts`. */
-  def write(
-      spark: SparkSession,
-      source: UmlsSource,
-      job: OntologyJob,
-      conf: UmlsExportConfig,
-      outFile: String,
-      propertyDocs: Map[String, PropertyDoc],
-      semanticTypes: String,
-      lookups: ReleaseLookups): WriteReport =
     writeGroup(spark, source, Seq(job -> outFile), conf, outFile + ".parts",
-      propertyDocs, semanticTypes, lookups).head
+      propertyDocs, semanticTypes, ReleaseLookups.forSab(source, job.sab)).head
 
   /** Export the ontologies of one load mode with ONE plan: `members` are
     * `(job, output file)` pairs, all `load_on_codes` or all
     * `load_on_cuis`; reports come back in `members` order.
     *
     * Per SAB, as for a lone export: the F18 version gate skips it
-    * (`umls2rdf.py:881-887`); its file is published atomically on its own
-    * and then handed to `published` (the pipeline's resume mark); the
-    * strict checks and the error log cap apply per SAB. A SAB without an
-    * MRSAB LAT (`umls2rdf.py:594-597`) fails the group before any of its
-    * files is published. The group's parts live in `partsDir`, which is
+    * (`umls2rdf.py:881-887`) and reports it skipped, not published, so a
+    * resumed run gates it again and never expects its file; its file is
+    * published atomically on its own and then handed to `published` (the
+    * pipeline's resume mark); the strict checks and the error log cap
+    * apply per SAB. A SAB without an MRSAB LAT (`umls2rdf.py:594-597`)
+    * fails the group before any of its files is published. The group's parts live in `partsDir`, which is
     * replaced by each write and removed after it. */
   def writeGroup(
       spark: SparkSession,
@@ -170,7 +158,6 @@ object OntologyWriter {
     val skipped = gated.map { case ((job, out), _) =>
       WriteReport(job.sab, out, 0, 0, 0, 0, 0, skipped = true)
     }
-    skipped.foreach(published)
     // A killed run may have left this group's parts behind: they go
     // whether or not a member is left to write.
     val written = try {
@@ -183,22 +170,13 @@ object OntologyWriter {
         val jobs = live.map(_._1._1)
         val assembler = ConceptAssembler.group(spark, source,
           jobs.map(_.sab).zip(lats), jobs.head.loadOnCuis, lookups)
-        val hasTree = assembler.hasMeshTree
+        // MSH's config renders with its tree; [[rendered]] drops the tree
+        // rules when the tree turns out to have no edge.
         val cfgs = jobs.zip(lats).map { case (job, lat) =>
           RenderConfig(
             ns = namespace(conf, job),
             lang = mapLang(lat, conf.strict),
-            // The reference's main loop INTENDS hierarchy=(sab != "MSH")
-            // (`umls2rdf.py:889`), but `write_into` never forwards its
-            // hierarchy parameter to `toRDF` (`umls2rdf.py:745,766`), so
-            // the actual rendering always runs hierarchy=True and MSH's
-            // CHD suppression comes solely from the tree
-            // (`umls2rdf.py:437-448`). Proven byte-for-byte by
-            // ReferenceDifferentialSpec: with hierarchy=false the engine
-            // emitted a `<ns/CHD>` OBJECT triple for MSH CHD rels where
-            // the reference emits nothing.
-            hierarchy = true,
-            hasTree = hasTree && job.sab == "MSH",
+            hasTree = job.sab == "MSH",
             dedupe = conf.dedupeTriples,
             styUrl = conf.baseUri + "STY/")
         }
@@ -225,7 +203,10 @@ object OntologyWriter {
     * cannot sink the file. The render map renders each class with its
     * SAB's config and counts it into its SAB's `counters` — a failed term
     * is counted and logged there, and leaves the map without text, so it
-    * goes no further.
+    * goes no further. A config that renders with the MeSH tree falls
+    * back to its tree-less twin when the tree has no edge (the
+    * reference's `if tree:`), a flag the plan computes with
+    * [[ConceptAssembler.meshTreeExists]].
     *
     * Render runs inside the `groupBy(sab_id, code)` spine's own
     * partitions, and `sortWithinPartitions` orders each one locally:
@@ -240,12 +221,14 @@ object OntologyWriter {
   private[graft] def rendered(assembler: ConceptAssembler,
       cfgs: IndexedSeq[RenderConfig], strict: Boolean,
       counters: IndexedSeq[SabCounters]): Dataset[RenderedPart] = {
+    val treeless = cfgs.map(_.copy(hasTree = false))
     val renderOne: FinishedRow => RenderedPart = { f =>
       val counts = counters(f.sab_id)
+      val cfg = if (f.has_tree) cfgs(f.sab_id) else treeless(f.sab_id)
       if (f.__finish_err != null) {
         counts.failed(f.code, f.__finish_err)
         RenderedPart(f.sab_id, f.code, null)
-      } else Try(ConceptRenderer.render(f.toConceptRow, cfgs(f.sab_id))) match {
+      } else Try(ConceptRenderer.render(f.toConceptRow, cfg)) match {
         case Success(t) =>
           counts.rendered(t)
           RenderedPart(f.sab_id, t.code, t.text)
@@ -255,6 +238,7 @@ object OntologyWriter {
       }
     }
     assembler.finishedTry(strict)
+      .withColumn("has_tree", assembler.meshTreeExists)
       .as(Encoders.product[FinishedRow])
       .map(renderOne)(Encoders.product[RenderedPart])
       .filter(col("text").isNotNull)

@@ -21,6 +21,12 @@ object GraftSqlShims {
   def eagerExpressionOf(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** Drop an RDD's blocks from every executor, waiting until they are
+    * gone. Unlike `RDD.unpersist`, this logs no warning for a locally
+    * checkpointed RDD, whose blocks are all the data it has. */
+  def unpersistRDD(spark: SparkSession, rddId: Int): Unit =
+    spark.sparkContext.unpersistRDD(rddId, blocking = true)
+
   /** Block until every listener has seen the events posted so far —
     * `QueryExecutionListener`s are called asynchronously. */
   def waitForListeners(spark: SparkSession): Unit =

@@ -117,4 +117,49 @@ class MaterializeSpec extends AnyFunSuite {
     Materialize.release(cut)
     assert(cachedParts === 0)
   }
+
+  test("release logs no warning, where RDD.unpersist warns that the " +
+    "checkpoint cannot be recomputed") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.execution.LogicalRDD
+    // WARN-and-above events logged on this thread.
+    val me = Thread.currentThread.getName
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-release-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN) &&
+            e.getThreadName == me) {
+          warnings.add(e.getMessage.getFormattedMessage); ()
+        }
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    val level = root.getLevel
+    // A session that silenced its log must still show the warning here.
+    if (level.intLevel < Level.WARN.intLevel) root.setLevel(Level.WARN)
+    root.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    def checkpointed() = (1 to 100).toDF("id").repartition(2).localCheckpoint()
+    try {
+      val released = checkpointed()
+      Materialize.release(released)
+      assert(warnings.isEmpty, warnings)
+      val unpersisted = checkpointed()
+      unpersisted.queryExecution.analyzed.collectFirst {
+        case r: LogicalRDD => r.rdd
+      }.get.unpersist(blocking = true)
+      assert(warnings.size === 1 &&
+        warnings.peek.contains("locally checkpointed"), warnings)
+    } finally {
+      root.removeAppender(capture.getName)
+      root.setLevel(level)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+  }
 }

@@ -73,7 +73,7 @@ class UmlsPipelineSpec extends AnyFunSuite {
       new UmlsPipeline(spark, countingSource(counts),
         sabs.map(s => OntologyJob(s, None, s"$s.ttl", loadOnCuis = false)),
         PipelineConfig(out, work, UmlsExportConfig(umlsVersion = "2025AB"),
-          parallelism = 2, sharedScan = shared)).run()
+          sharedScan = shared)).run()
       out
     }
     val direct = run(Seq("SABA", "SABB"), shared = false,
@@ -125,7 +125,7 @@ class UmlsPipelineSpec extends AnyFunSuite {
       new UmlsPipeline(spark, counting,
         sabs.map(s => OntologyJob(s, None, s"$s.ttl", loadOnCuis = false)),
         PipelineConfig(out, s"$out/.state",
-          UmlsExportConfig(umlsVersion = "2025AB"), parallelism = 2)).run()
+          UmlsExportConfig(umlsVersion = "2025AB"))).run()
       counts.toMap
     }
     spark.sparkContext.addSparkListener(listener)
@@ -585,6 +585,120 @@ class UmlsPipelineSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     assert(writes.asScala.toSeq.map(p => p.substring(p.lastIndexOf('/') + 1))
       .sorted === Seq("parts-codes", "parts-cuis"), writes)
+  }
+
+  test("mode groups: when one group fails, run() still waits for the " +
+    "other to publish and mark its file, and leaves no parts behind") {
+    // The cuis group fails at once; the codes group is still writing.
+    val rows = groupRows + ("MRSAB" -> Seq(mrsab("KA"), mrsab("CA") - "LAT"))
+    val out = Files.createTempDirectory("pipe-wait").toString
+    val ex = intercept[IllegalStateException](
+      exportTo(out, Seq(job("KA"), job("CA", cuis = true)), rows))
+    assert(ex.getMessage === "No LAT found in MRSAB for ontology CA")
+    assert(text(s"$out/KA.ttl").contains("/KA/X1> a owl:Class"))
+    assert(!Files.exists(Paths.get(s"$out/CA.ttl")))
+    val state = new PipelineState(s"$out/.state/pipeline_state.json")
+    assert(state.isDone("ontology:KA") && !state.isDone("ontology:CA"))
+    assert(new java.io.File(s"$out/.state").list().toSeq ===
+      Seq("pipeline_state.json"))
+  }
+
+  test("mode groups: a run with an F18 version-gate skip, killed before " +
+    "validate_output, resumes and passes") {
+    val rows = groupRows +
+      ("MRSAB" -> Seq(mrsab("KA"), mrsab("KB", imeta = "2024AA")))
+    val conf = UmlsExportConfig(umlsVersion = "2025AB",
+      processOnlyCurrentVersion = true)
+    val jobs = Seq(job("KA"), job("KB"))
+    val out = Files.createTempDirectory("pipe-f18-resume").toString
+    exportTo(out, jobs, rows, conf)
+    val statePath = Paths.get(s"$out/.state/pipeline_state.json")
+    val done = text(statePath.toString)
+    assert(done.endsWith(", \"validate_output\"]}"), done)
+    Files.write(statePath, done.replace(", \"validate_output\"", "")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val reports = exportTo(out, jobs, rows, conf)
+    assert(reports.map(r => (r.sab, r.skipped, r.resumed)) ===
+      Seq(("KA", true, true), ("KB", true, false)))
+    assert(!Files.exists(Paths.get(s"$out/KB.ttl")))
+  }
+
+  test("mode groups: an export over MSH and a cuis SAB asks the driver " +
+    "nothing between the lookups and the writes") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val out = Files.createTempDirectory("pipe-no-probe").toString
+    // Every SQL execution as it starts (description, root execution,
+    // plan), and the action name of every one that ends.
+    val started = new java.util.concurrent.ConcurrentHashMap[Long,
+      SparkListenerSQLExecutionStart]()
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val starts = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          started.put(s.executionId, s); ()
+        case _ => ()
+      }
+    }
+    val ends = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        actions.add(f); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    // MRREL counts the rows its scans read.
+    val relReads = spark.sparkContext.longAccumulator("test.mrrelReads")
+    val tables = groupRows.map { case (t, r) => t -> TestSpark.mkTable(t, r) }
+    val rel = tables("MRREL")
+    val source = TestSpark.fixedSource(tables + ("MRREL" -> spark
+      .createDataFrame(rel.rdd.map { r => relReads.add(1); r }, rel.schema)))
+    spark.sparkContext.addSparkListener(starts)
+    spark.listenerManager.register(ends)
+    val reports =
+      try new UmlsPipeline(spark, source, Seq(job("MSH"), job("CA", cuis = true)),
+        PipelineConfig(out, s"$out/.state",
+          UmlsExportConfig(umlsVersion = "2025AB"))).run()
+      finally {
+        org.apache.spark.sql.GraftSqlShims.waitForListeners(spark)
+        spark.listenerManager.unregister(ends)
+        spark.sparkContext.removeSparkListener(starts)
+      }
+    assert(reports.map(r => (r.sab, r.terms)) === Seq(("MSH", 2L), ("CA", 2L)))
+    assert(text(s"$out/MSH.ttl").contains(
+      "rdfs:subClassOf <http://purl.bioontology.org/ontology/MSH/D000001>"))
+    val ours = started.asScala.filter { case (_, s) =>
+      !s.physicalPlanDescription.contains("InsertIntoHadoopFsRelation") ||
+        s.physicalPlanDescription.contains(out)
+    }
+    def isWrite(id: Long) = started.get(id).physicalPlanDescription
+      .contains("InsertIntoHadoopFsRelation")
+    val kinds = ours.toSeq.sortBy(_._1).map { case (id, s) =>
+      val kind =
+        if (s.description.startsWith("graft:run:")) "lookup"
+        else if (s.description.startsWith("isEmpty at UmlsPipeline.scala"))
+          "source probe"
+        else if (isWrite(id)) "write"
+        else if (s.rootExecutionId.exists(r => r != id && started
+          .containsKey(r) && isWrite(r))) "inside a write"
+        else s"unexpected: ${s.description}\n${s.physicalPlanDescription}"
+      kind
+    }
+    assert(!kinds.exists(_.startsWith("unexpected")), kinds.mkString("\n"))
+    assert(kinds.count(_ == "write") === 2, kinds)
+    assert(kinds.count(_ == "source probe") === 1, kinds)
+    // The source probe is the one isEmpty, and no execution but a write
+    // reads the tree's CHD edges.
+    assert(actions.asScala.count(_ == "isEmpty") === 1, actions)
+    assert(!ours.exists { case (id, s) =>
+      !isWrite(id) && s.physicalPlanDescription.contains("CHD")
+    }, kinds)
+    // MRREL is scanned three times: each group's rels and the tree, which
+    // the subquery and the join read from one cache.
+    assert(relReads.value === 3L * groupRows("MRREL").size)
   }
 
   test("manifest parser skips comments and parses alt URIs (S4/F19)") {

@@ -273,14 +273,13 @@ class OntologyWriterSpec extends AnyFunSuite {
     * with the render's counters. */
   private def renderedRows(tables: Map[String, org.apache.spark.sql.DataFrame])
       : (Seq[RenderedPart], SabCounters) = {
-    val lookups = graft.assemble.ReleaseLookups.forSab(
-      TestSpark.fixedSource(tables), "TEST")
-    val asm = new graft.assemble.ConceptAssembler(spark,
-      TestSpark.fixedSource(tables), "TEST", lang = "eng",
-      lookups = Some(lookups))
+    val source = TestSpark.fixedSource(tables)
+    val asm = graft.assemble.ConceptAssembler.group(spark, source,
+      Seq("TEST" -> "eng"), loadOnCuis = false,
+      graft.assemble.ReleaseLookups.forSab(source, "TEST"))
     val cfg = graft.render.RenderConfig(
       ns = "http://purl.bioontology.org/ontology/TEST/", lang = "en",
-      hierarchy = true, hasTree = false, dedupe = true,
+      hasTree = false, dedupe = true,
       styUrl = "http://purl.bioontology.org/ontology/STY/")
     val counters = new SabCounters(spark.sparkContext)
     try (OntologyWriter.rendered(asm, IndexedSeq(cfg), strict = false,
@@ -321,10 +320,12 @@ class OntologyWriterSpec extends AnyFunSuite {
     val docs = graft.assemble.PropertyDocs.collectMap(fixture("MRDOC"))
     val lookups = graft.assemble.ReleaseLookups.load(source, Seq("TEST"))
     val dir = Files.createTempDirectory("graft-ttl-pin").toString
+    def writeWith(semTypes: String): WriteReport =
+      OntologyWriter.writeGroup(spark, source, Seq(pinJob -> s"$dir/TEST.ttl"),
+        UmlsExportConfig(umlsVersion = "2025AB"), s"$dir/parts", docs,
+        semTypes, lookups).head
     val execIds = sqlExecutions {
-      val rep = OntologyWriter.write(spark, source, pinJob,
-        UmlsExportConfig(umlsVersion = "2025AB"), s"$dir/TEST.ttl", docs,
-        "", lookups)
+      val rep = writeWith("")
       assert(rep.terms === 2L)
     }
     assert(execIds.size === 1,
@@ -334,9 +335,7 @@ class OntologyWriterSpec extends AnyFunSuite {
     val (_, text) = export(Files.createTempDirectory("graft-ttl").toString)
     val semTypes = SemanticTypes.generate(fixture("MRSTY"),
       "http://purl.bioontology.org/ontology/STY/", withRoots = false)
-    OntologyWriter.write(spark, source, pinJob,
-      UmlsExportConfig(umlsVersion = "2025AB"), s"$dir/TEST.ttl", docs,
-      semTypes, lookups)
+    writeWith(semTypes)
     assert(new String(Files.readAllBytes(Paths.get(s"$dir/TEST.ttl")),
       StandardCharsets.UTF_8) === text)
   }

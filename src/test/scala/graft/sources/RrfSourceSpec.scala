@@ -89,15 +89,21 @@ class RrfSourceSpec extends AnyFunSuite {
   }
 
   test("parallel per-SAB export is byte-identical to sequential") {
+    // The two mode groups of one manifest run at once; exported as two
+    // one-SAB manifests, they run one after the other.
     val outSeq = Files.createTempDirectory("graft-out-seq").toString
     val outPar = Files.createTempDirectory("graft-out-par").toString
-    runPipeline(UmlsSource.parquet(spark, "fixtures/umls"), outSeq)
     val jobs = Seq(
       OntologyJob("FIX", None, "fix.ttl", loadOnCuis = false),
       OntologyJob("CFX", None, "cfx.ttl", loadOnCuis = true))
-    new UmlsPipeline(spark, UmlsSource.parquet(spark, "fixtures/umls"),
-      jobs, PipelineConfig(outPar, s"$outPar/.state",
-        UmlsExportConfig(umlsVersion = "2025AA"), parallelism = 2)).run()
+    def export(out: String, jobs: Seq[OntologyJob]): Unit = {
+      new UmlsPipeline(spark, UmlsSource.parquet(spark, "fixtures/umls"),
+        jobs, PipelineConfig(out, s"$out/.state",
+          UmlsExportConfig(umlsVersion = "2025AA"))).run()
+      ()
+    }
+    jobs.foreach(j => export(outSeq, Seq(j)))
+    export(outPar, jobs)
     def read(p: String) = new String(
       Files.readAllBytes(Paths.get(p)), StandardCharsets.UTF_8)
     assert(read(s"$outPar/fix.ttl") === read(s"$outSeq/fix.ttl"))
