@@ -22,9 +22,9 @@ import graft.sources.{ConfManifest, UmlsSource}
   * ontology with errors and no terms exits 1);
   * `--only-current` skips ontologies whose MRSAB record is not the
   * current version; `--no-dedupe` keeps duplicate triples; `--master M`
-  * sets the Spark master (default `local[*]`). The manifest's
-  * load_on_codes and load_on_cuis ontologies export as two plans that
-  * always run at once.
+  * sets the Spark master (default `local[*]`). Any other flag is an
+  * error (exit 2). The whole manifest, its load_on_codes and load_on_cuis
+  * ontologies alike, exports as one plan.
   *
   * `--shared-scan` reads each fat table once for the whole manifest
   * ([[graft.sources.UmlsSource.sharedScan]]) — the win for
@@ -37,23 +37,53 @@ import graft.sources.{ConfManifest, UmlsSource}
   */
 object UmlsExportMain {
 
+  val Usage: String =
+    "usage: UmlsExportMain <sourceDir> <umls.conf> <outDir> <umlsVersion>" +
+      " [--strict] [--only-current] [--no-dedupe] [--shared-scan]" +
+      " [--master M]"
+
+  /** The options the flags after the four positional arguments set. */
+  final case class Flags(
+      strict: Boolean = false,
+      onlyCurrent: Boolean = false,
+      noDedupe: Boolean = false,
+      sharedScan: Boolean = false,
+      master: String = "local[*]")
+
+  /** Parse the flags after the positional arguments: the options, or the
+    * error naming the first flag that is unknown or lacks its value. */
+  def parseFlags(flags: List[String]): Either[String, Flags] = {
+    @scala.annotation.tailrec
+    def go(rest: List[String], f: Flags): Either[String, Flags] = rest match {
+      case Nil => Right(f)
+      case "--strict" :: t => go(t, f.copy(strict = true))
+      case "--only-current" :: t => go(t, f.copy(onlyCurrent = true))
+      case "--no-dedupe" :: t => go(t, f.copy(noDedupe = true))
+      case "--shared-scan" :: t => go(t, f.copy(sharedScan = true))
+      case "--master" :: m :: t if !m.startsWith("--") =>
+        go(t, f.copy(master = m))
+      case "--master" :: _ => Left("--master needs a value")
+      case flag :: _ => Left(s"unknown flag $flag")
+    }
+    go(flags, Flags())
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.length < 4) {
-      System.err.println(
-        "usage: UmlsExportMain <sourceDir> <umls.conf> <outDir> <umlsVersion>" +
-          " [--strict] [--only-current] [--no-dedupe] [--shared-scan]" +
-          " [--master M]")
+      System.err.println(Usage)
       sys.exit(2)
     }
     val Array(sourceDir, confPath, outDir, version) = args.take(4)
-    val flags = args.drop(4).toSeq
-    val master = flags.sliding(2).collectFirst {
-      case Seq("--master", m) => m
-    }.getOrElse("local[*]")
+    val flags = parseFlags(args.drop(4).toList) match {
+      case Right(f) => f
+      case Left(error) =>
+        System.err.println(s"UmlsExportMain: $error\n$Usage")
+        sys.exit(2)
+    }
 
     val spark = SparkSession.builder()
       .appName(s"umls-export-$version")
-      .master(master)
+      .master(flags.master)
       .config("spark.sql.shuffle.partitions",
         math.max(Runtime.getRuntime.availableProcessors(), 4))
       .config("spark.sql.adaptive.enabled", "true")
@@ -77,10 +107,10 @@ object UmlsExportMain {
         workDir = s"$outDir/.state",
         exportConf = UmlsExportConfig(
           umlsVersion = version,
-          dedupeTriples = !flags.contains("--no-dedupe"),
-          processOnlyCurrentVersion = flags.contains("--only-current"),
-          strict = flags.contains("--strict")),
-        sharedScan = flags.contains("--shared-scan"))
+          dedupeTriples = !flags.noDedupe,
+          processOnlyCurrentVersion = flags.onlyCurrent,
+          strict = flags.strict),
+        sharedScan = flags.sharedScan)
       val reports = new UmlsPipeline(spark, source, jobs, config).run()
       reports.foreach { r =>
         val status =
@@ -90,7 +120,7 @@ object UmlsExportMain {
             s"dups(lit=${r.dupLiteral} obj=${r.dupObject} sub=${r.dupSubclass})"
         println(s"[export] ${r.sab} -> ${r.path}: $status")
       }
-      val code = exitCode(reports, flags.contains("--strict"))
+      val code = exitCode(reports, flags.strict)
       if (code != 0) sys.exit(code)
     } finally spark.stop()
   }

@@ -10,8 +10,8 @@ import org.apache.spark.storage.StorageLevel
 import graft.sources.UmlsSource
 
 /** Assembles per-code concept rows from the UMLS tables for a group of
-  * SABs of one mode — the Spark-first re-expression of
-  * `UmlsOntology.load_tables` + `terms()` (`umls2rdf.py:586-743`).
+  * SABs — the Spark-first re-expression of `UmlsOntology.load_tables` +
+  * `terms()` (`umls2rdf.py:586-743`).
   *
   * Where the reference builds in-RAM hash indexes (`*_by_*` defaultdicts,
   * `umls2rdf.py:545-557`) and loops row-at-a-time, this declares the same
@@ -27,20 +27,23 @@ import graft.sources.UmlsSource
   *   - tiny tables (MRRANK per SAB ≈ hundreds of rows; cui_roots ≈ 1) are
   *     broadcast.
   *
-  * Whole-export shape: one assembler per manifest mode group — every
-  * `load_on_codes` SAB in one, every `load_on_cuis` SAB in the other —
-  * so a manifest runs two plans, not one per SAB. A plan has a fixed
-  * cost whatever its row count (jobs, generated classes, JIT): on the
-  * `release_sweep` benchmark workload (4 SABs, 8 000 classes) the
-  * per-SAB plans ran 99-102 jobs per warm export against 28 for the same
-  * volume in one SAB, and codegen plus JIT took 12 of its 13.4 cpu-s.
-  * Every class key, group-by and AUI/CUI resolution is therefore keyed by
-  * `(sab_id, code)`, where `sab_id` is the SAB's ordinal in the group,
-  * so a class, a rel endpoint or a definition never resolves across
-  * SABs. In a one-SAB group `sab_id` is the literal 0 ([[sabKey]]), which
-  * Catalyst folds out of every key, join and map lookup: a single SAB
-  * plans exactly as a per-SAB assembler did. The per-SAB values (LAT,
-  * MRRANK, root CUIs) enter the plan as literal maps keyed by `sab_id`.
+  * Whole-export shape: one assembler per manifest — its `load_on_codes`
+  * and `load_on_cuis` SABs alike — so a manifest runs one plan, as the
+  * reference exports every SAB in one loop (`umls2rdf.py:828-896`). A
+  * plan has a fixed cost whatever its row count (jobs, generated classes,
+  * JIT): on the `release_sweep` benchmark workload (4 SABs, 8 000
+  * classes) the per-SAB plans ran 99-102 jobs per warm export against 28
+  * for the same volume in one SAB, and one plan per load mode still ran
+  * 59-60. Every class key, group-by and AUI/CUI resolution is therefore
+  * keyed by `(sab_id, code)`, where `sab_id` is the SAB's ordinal in the
+  * group, so a class, a rel endpoint or a definition never resolves
+  * across SABs. In a one-SAB group `sab_id` is the literal 0
+  * ([[sabKey]]), which Catalyst folds out of every key, join and map
+  * lookup: a single SAB plans exactly as a per-SAB assembler did. The
+  * per-SAB values (LAT, MRRANK, root CUIs) enter the plan as literal
+  * maps keyed by `sab_id`, and the load mode as the set of `load_on_cuis`
+  * ordinals ([[byMode]]); in a one-mode group the mode is a constant of
+  * the plan, so such a group plans as one of a single mode did.
   *
   * Determinism (SURVEY.md §7.1.6): the reference's "first atom" /
   * stable-sort tie-breaks follow MySQL scan order, which no distributed
@@ -50,6 +53,7 @@ import graft.sources.UmlsSource
   *
   * @param sabs the group's SABs; a SAB's `sab_id` is its index here
   * @param langs each SAB's MRSAB language, in `sabs` order
+  * @param onCuis whether each SAB is `load_on_cuis`, in `sabs` order
   * @param release the run's [[ReleaseLookups]] (MRRANK map, root CUIs),
   *   covering every SAB of the group
   */
@@ -58,7 +62,7 @@ class ConceptAssembler private (
     source: UmlsSource,
     sabs: Seq[String],
     langs: Seq[String],
-    loadOnCuis: Boolean,
+    onCuis: Seq[Boolean],
     limit: Option[Int],
     saltBuckets: Int,
     release: ReleaseLookups) {
@@ -73,11 +77,36 @@ class ConceptAssembler private (
       lang: String = "ENG",
       limit: Option[Int] = None,
       saltBuckets: Int = 1) =
-    this(spark, source, Seq(sab), Seq(lang), loadOnCuis, limit, saltBuckets,
-      ReleaseLookups.forSab(source, sab))
+    this(spark, source, Seq(sab), Seq(lang), Seq(loadOnCuis), limit,
+      saltBuckets, ReleaseLookups.forSab(source, sab))
 
   require(sabs.nonEmpty && sabs.distinct.size == sabs.size,
     s"a SAB group needs distinct SABs: $sabs")
+
+  /** Whether the group holds SABs of both load modes. */
+  private val mixed = onCuis.distinct.size > 1
+
+  /** Whether the group holds a `load_on_codes` SAB. */
+  private val hasCodes = onCuis.contains(false)
+
+  /** `ifCuis` on a row of a `load_on_cuis` SAB, `ifCodes` on a row of a
+    * `load_on_codes` SAB, `isCuis` telling the two apart ([[cuisSab]] or
+    * [[cuisId]]). In a one-mode group the mode is a constant and this is
+    * that mode's value alone — the other is never built — so such a group
+    * carries no per-row mode test in its plan. */
+  private def byMode(isCuis: => Column)(ifCuis: => Column,
+      ifCodes: => Column): Column =
+    if (mixed) when(isCuis, ifCuis).otherwise(ifCodes)
+    else if (onCuis.head) ifCuis
+    else ifCodes
+
+  /** Whether a raw table row's SAB column names a `load_on_cuis` SAB. */
+  private def cuisSab(sab: Column): Column =
+    sab.isin(sabs.zip(onCuis).collect { case (s, true) => s }: _*)
+
+  /** Whether a `sab_id` is that of a `load_on_cuis` SAB. */
+  private def cuisId(id: Column): Column =
+    id.isin(onCuis.zipWithIndex.collect { case (true, i) => i }: _*)
 
   /** A `sab_id` column: `c` in a multi-SAB group, the literal 0 in a
     * one-SAB group. Every key, join condition and map lookup reads the
@@ -168,12 +197,15 @@ class ConceptAssembler private (
     * dropped by the filter in [[atoms]]; strict mode surfaces them via
     * [[invalidCodeAtoms]] (see [[assembled]]). */
   private def codeExpr =
-    if (loadOnCuis) col("CUI")
-    else when(length(col("CODE")) > 0, col("CODE"))
+    byMode(cuisSab(col("SAB")))(col("CUI"),
+      when(length(col("CODE")) > 0, col("CODE")))
 
+  /** The F1-filtered atoms of the group's `load_on_codes` SABs whose CODE
+    * is NULL or empty. */
   def invalidCodeAtoms: DataFrame =
     source.table("MRCONSO").filter(f1)
-      .filter(col("CODE").isNull || length(col("CODE")) === 0)
+      .filter(byMode(cuisSab(col("SAB")))(lit(false),
+        col("CODE").isNull || length(col("CODE")) === 0))
 
   /** F3-filtered relations (`umls2rdf.py:621-623`). */
   def rels: DataFrame =
@@ -226,29 +258,53 @@ class ConceptAssembler private (
       .agg(collect_set("parent").as("parents"))
   }
 
-  /** Atom id → code, keyed by `atom_sab`: AUI in codes mode, CUI in cuis
-    * mode. */
+  /** AUI → code of the `load_on_codes` SABs' atoms, keyed by `atom_sab`.
+    * AUI is MRCONSO's primary key (one row per atom), so the projection is
+    * already row-unique — a distinct would be a full-width shuffle of
+    * every atom for nothing. (Code-ambiguity per AUI is separately
+    * policed by [[auiCardinalityViolations]].) A `load_on_cuis` SAB needs
+    * no such map: its class key is the CUI itself, so its rows meet their
+    * class at the `(sab_id, code)` join onto the grouped atoms. */
   private def atomIdCode: DataFrame = {
-    val ids = atomsShared.select(keyed("atom_sab", col("sab_id"))(
-      col(if (loadOnCuis) "CUI" else "AUI").as("atom_id"),
-      col("code").as("atom_code")): _*)
-    // AUI is MRCONSO's primary key (one row per atom), so the codes-mode
-    // projection is already row-unique — a distinct there would be a
-    // full-width shuffle of every atom for nothing. (Code-ambiguity per
-    // atom id is separately policed by [[auiCardinalityViolations]].)
-    if (loadOnCuis) ids.distinct() else ids
+    val codesAtoms =
+      if (mixed) atomsShared.filter(!cuisId(col("sab_id"))) else atomsShared
+    codesAtoms.select(keyed("atom_sab", col("sab_id"))(
+      col("AUI").as("atom_id"), col("code").as("atom_code")): _*)
+  }
+
+  /** `rows` — a raw table's rows, with its `SAB` column — with the code of
+    * the atom of their own SAB whose AUI is `rows`' column `aui`, as
+    * column `code`. A `load_on_codes` row whose AUI resolves no atom is
+    * dropped, unless `outer`. A `load_on_cuis` row resolves nothing — its
+    * SAB has no atom in [[atomIdCode]], its key being its CUI — and is
+    * kept, with `code` NULL. */
+  private def resolveAui(rows: DataFrame, aui: String, code: String,
+      outer: Boolean): DataFrame = {
+    val ids = atomIdCode.select(keyed("r_sab", col("atom_sab"))(
+      col("atom_id").as("r_aui"), col("atom_code").as(code)): _*)
+    val joined = rows.join(ids,
+      sameSab(sabIds(col("SAB")), col("r_sab")) && col(aui) === col("r_aui"),
+      if (outer || mixed) "left" else "inner")
+    val kept =
+      if (mixed && !outer)
+        joined.filter(cuisSab(col("SAB")) || col("r_aui").isNotNull)
+      else joined
+    kept.drop("r_sab", "r_aui")
   }
 
   /** J3+J4: relations attached to their source class, with AUI→code
     * endpoint resolution in codes mode (`umls2rdf.py:685-727`), in ONE
     * pass: per-source-class grouped relation structs plus the F17 root
-    * flag — `(rsab, rcode, rels, is_root)`.
+    * flag — `(rsab, rcode, rels, is_root)`. Each rel takes its SAB's mode.
     *
     * Codes mode: attach by AUI2 (inner — a rel not anchored at a class
     * atom is invisible, as in the reference), resolve target by AUI1
     * (unresolved targets dropped, `:717`), drop self-maps (`:715-718`).
-    * Cuis mode: attach by CUI2; endpoints are the CUIs, no filtering.
     * Both resolutions stay within the rel's own SAB.
+    * Cuis mode: attach by CUI2; endpoints are the CUIs, no filtering. The
+    * rels are grouped by `(rsab, CUI2)` as they are: a group whose CUI2 is
+    * no class of its SAB meets no class at the `(sab_id, code)` join in
+    * [[assembled]], so it is dropped there, its root vote with it.
     *
     * The root flag is detected over the SAME attached-rels relation the
     * grouped structs come from, so fusing both into one `groupBy` halves
@@ -267,58 +323,41 @@ class ConceptAssembler private (
     * result, so the shuffle carries each rel's own fields only. */
   def relsGroupedWithRoots: DataFrame = {
     val relSab = sabIdOf(col("SAB"))
+    val cuisRel = cuisSab(col("SAB"))
     val rootsCol = array_contains(
       bySab(sabs.map(s => release.cuiRoots(s).toSeq.sorted), relSab),
       col("CUI1"))
-    // RelOut's fields, rebuilt from a collected struct inside the
-    // aggregate's own result projection.
-    def relOut(collected: Column, target: String): Column =
-      transform(collected, r => struct(
-        r.getField("rel").as("rel"), r.getField("rela").as("rela"),
-        r.getField("cui1").as("cui1"), r.getField(target).as("codeTarget"),
-        col("rcode").as("codeSource")))
-    if (loadOnCuis) {
-      val attached = rels.join(atomIdCode,
-        sameSab(sabIds(col("SAB")), col("atom_sab")) &&
-          col("CUI2") === col("atom_id"), "left_semi")
-      attached
-        .groupBy(relSab.as("rsab"), col("CUI2").as("rcode"))
-        .agg(
-          relOut(collect_list(struct(
-            col("REL").as("rel"), col("RELA").as("rela"),
-            col("CUI1").as("cui1"))), "cui1").as("rels"),
-          max(rootsCol).as("is_root"))
-    } else {
-      val attached = rels.join(
-        atomIdCode.select(keyed("src_sab", col("atom_sab"))(
-          col("atom_id").as("src_aui"),
-          col("atom_code").as("codeSource")): _*),
-        sameSab(sabIds(col("SAB")), col("src_sab")) &&
-          col("AUI2") === col("src_aui"))
-      val icd = sabs.indexOf("ICD10CM")
-      val icdPatch =
-        if (icd < 0) lit(false)
-        else sameSab(sabIds(col("SAB")), lit(icd)) &&
-          col("CUI1") === "C3264380" &&
-          col("REL") === "CHD"
-      val resolved = attached.join(
-        atomIdCode.select(keyed("tgt_sab", col("atom_sab"))(
-          col("atom_id").as("tgt_aui"),
-          col("atom_code").as("codeTarget")): _*),
-        sameSab(sabIds(col("SAB")), col("tgt_sab")) &&
-          col("AUI1") === col("tgt_aui"),
-        "left")
-      resolved
-        .groupBy(relSab.as("rsab"), col("codeSource").as("rcode"))
-        .agg(
-          relOut(collect_list(when(
-            col("codeTarget").isNotNull &&
-              col("codeTarget") =!= col("codeSource"),
-            struct(col("REL").as("rel"), col("RELA").as("rela"),
-              col("CUI1").as("cui1"), col("codeTarget")))), "codeTarget")
-            .as("rels"),
-          max((rootsCol && col("REL") === "CHD") || icdPatch).as("is_root"))
-    }
+    val icd = sabs.indexOf("ICD10CM")
+    val icdPatch =
+      if (icd < 0) lit(false)
+      else sameSab(sabIds(col("SAB")), lit(icd)) &&
+        col("CUI1") === "C3264380" &&
+        col("REL") === "CHD"
+    val resolved =
+      if (!hasCodes) rels
+      else resolveAui(resolveAui(rels, "AUI2", "codeSource", outer = false),
+        "AUI1", "codeTarget", outer = true)
+    val relStruct = struct(Seq(col("REL").as("rel"), col("RELA").as("rela"),
+      col("CUI1").as("cui1")) ++
+      (if (hasCodes) Seq(col("codeTarget")) else Nil): _*)
+    resolved
+      .groupBy(relSab.as("rsab"),
+        byMode(cuisRel)(col("CUI2"), col("codeSource")).as("rcode"))
+      .agg(
+        // RelOut's fields, rebuilt from a collected struct inside the
+        // aggregate's own result projection.
+        transform(collect_list(byMode(cuisRel)(relStruct, when(
+          col("codeTarget").isNotNull &&
+            col("codeTarget") =!= col("codeSource"), relStruct))),
+          r => struct(
+            r.getField("rel").as("rel"), r.getField("rela").as("rela"),
+            r.getField("cui1").as("cui1"),
+            byMode(cuisId(col("rsab")))(r.getField("cui1"),
+              r.getField("codeTarget")).as("codeTarget"),
+            col("rcode").as("codeSource")))
+          .as("rels"),
+        max(byMode(cuisRel)(rootsCol,
+          (rootsCol && col("REL") === "CHD") || icdPatch)).as("is_root"))
   }
 
   /** J5: definitions keyed by AUI (codes) / CUI (cuis)
@@ -327,15 +366,10 @@ class ConceptAssembler private (
     * (`umls2rdf.py:417-419`). */
   def defsByCode: DataFrame = {
     val d = source.table("MRDEF").filter(col("SAB").isin(sabs: _*))
-    val defSab = sabIdOf(col("SAB"))
-    if (loadOnCuis)
-      d.groupBy(defSab.as("dsab"), col("CUI").as("dcode"))
-        .agg(array_sort(collect_set("DEF")).as("defs"))
-    else
-      d.join(atomIdCode, sameSab(sabIds(col("SAB")), col("atom_sab")) &&
-          col("AUI") === col("atom_id"))
-        .groupBy(defSab.as("dsab"), col("atom_code").as("dcode"))
-        .agg(array_sort(collect_set("DEF")).as("defs"))
+    (if (hasCodes) resolveAui(d, "AUI", "atom_code", outer = false) else d)
+      .groupBy(sabIdOf(col("SAB")).as("dsab"),
+        byMode(cuisSab(col("SAB")))(col("CUI"), col("atom_code")).as("dcode"))
+      .agg(array_sort(collect_set("DEF")).as("defs"))
   }
 
   /** J6/F5: attributes keyed by CODE (codes) / CUI (cuis), per SAB
@@ -343,7 +377,7 @@ class ConceptAssembler private (
   def attsByCode: DataFrame = {
     val a = source.table("MRSAT")
       .filter(col("SAB").isin(sabs: _*) && col("CODE").isNotNull)
-    val key = if (loadOnCuis) col("CUI") else col("CODE")
+    val key = byMode(cuisSab(col("SAB")))(col("CUI"), col("CODE"))
     a.groupBy(sabIdOf(col("SAB")).as("asab"), key.as("acode"))
       .agg(collect_list(struct(col("ATN").as("atn"), col("ATV").as("atv")))
         .as("atts"))
@@ -365,9 +399,9 @@ class ConceptAssembler private (
     release.rankByTty(sabs.head)
   }
 
-  /** J3 cardinality violations: atom ids (AUIs in codes mode) that resolve
-    * to more than one distinct code within their SAB — `(sab_id, atom_id,
-    * n_codes)`. The reference raises "more than one or none codes"
+  /** J3 cardinality violations: AUIs of the `load_on_codes` SABs that
+    * resolve to more than one distinct code within their SAB — `(sab_id,
+    * atom_id, n_codes)`. The reference raises "more than one or none codes"
     * (`umls2rdf.py:715-716`) when a rel endpoint resolves ambiguously;
     * here the same condition is a queryable validation relation, enforced
     * by `assembled(strict = true)`. */
@@ -419,52 +453,57 @@ class ConceptAssembler private (
     val atomsS = col("atoms_sorted")
     val strs = transform(atomsS, a => a.getField("str"))
     val first = element_at(atomsS, 1).getField("str")
-    val (prefCol, errCol) =
-      if (loadOnCuis) {
-        // A8 cascade (umls2rdf.py:296-319), branch-for-branch; the
-        // cascade cannot fail.
-        val labels = array_distinct(strs)
-        val isPref = filter(atomsS, a => a.getField("ispref") === "Y")
-        val prefPf = filter(isPref, a => a.getField("stt") === "PF")
-        val ttyP = filter(atomsS, a => a.getField("tty").startsWith("P"))
-        (when(size(atomsS) === 1, first)
-          .when(size(labels) === 1, element_at(labels, 1))
-          .when(size(isPref) === 0, first)
-          .when(size(isPref) === 1, element_at(isPref, 1).getField("str"))
-          .when(size(prefPf) === 0, first)
-          .when(size(prefPf) === 1, element_at(prefPf, 1).getField("str"))
-          .when(size(ttyP) === 1, element_at(ttyP, 1).getField("str"))
-          .otherwise(first),
-          lit(null).cast("string"))
-      } else {
-        // The SAB's MRRANK map picks the branch per row (folded to one
-        // branch in a one-SAB group).
-        val rankLit = bySab(sabs.map(release.rankByTty), sabKey(col("sab_id")))
-        // A7 argmax; FIRST max in canonical order (a stable maxBy's
-        // tie-break) = array_position's first-occurrence pick. One rank
-        // lookup per atom, no per-step struct rebuilds. A missing TTY
-        // fails the term like the reference's KeyError, keyed on the
-        // FIRST missing atom in canonical order.
-        val missing = filter(atomsS,
-          a => element_at(rankLit, a.getField("tty")).isNull)
-        val a7Err = when(size(missing) > 0,
-          concat(lit(s"${ConceptAssembler.FinishError}TTY "),
-            element_at(missing, 1).getField("tty"), lit(" not in MRRANK")))
-        val ranks = transform(atomsS,
-          a => element_at(rankLit, a.getField("tty")))
-        val a7Pref = element_at(atomsS,
-          array_position(ranks, array_max(ranks)).cast("int"))
-          .getField("str")
-        // A9: empty MRRANK requires exactly one 'P'-TTY atom.
-        val prefAtoms = filter(atomsS, a => a.getField("tty").contains("P"))
-        val a9Err = when(size(prefAtoms) =!= 1,
-          lit(s"${ConceptAssembler.FinishError}Unable to select pref label"))
-        val a9Pref = element_at(prefAtoms, 1).getField("str")
-        val ranked = size(rankLit) > 0
-        (when(ranked, when(a7Err.isNull, a7Pref))
-          .otherwise(when(a9Err.isNull, a9Pref)),
-          when(ranked, a7Err).otherwise(a9Err))
-      }
+    // A8 cascade (umls2rdf.py:296-319), branch-for-branch; the cascade
+    // cannot fail.
+    def a8: Column = {
+      val labels = array_distinct(strs)
+      val isPref = filter(atomsS, a => a.getField("ispref") === "Y")
+      val prefPf = filter(isPref, a => a.getField("stt") === "PF")
+      val ttyP = filter(atomsS, a => a.getField("tty").startsWith("P"))
+      when(size(atomsS) === 1, first)
+        .when(size(labels) === 1, element_at(labels, 1))
+        .when(size(isPref) === 0, first)
+        .when(size(isPref) === 1, element_at(isPref, 1).getField("str"))
+        .when(size(prefPf) === 0, first)
+        .when(size(prefPf) === 1, element_at(prefPf, 1).getField("str"))
+        .when(size(ttyP) === 1, element_at(ttyP, 1).getField("str"))
+        .otherwise(first)
+    }
+    // The SAB's MRRANK map picks A7 or A9 per row (folded to one branch
+    // in a one-SAB group); a load_on_cuis SAB's map is never read.
+    lazy val (a7a9Pref, a7a9Err) = {
+      val rankLit = bySab(sabs.zip(onCuis).map {
+        case (sab, cuis) => if (cuis) Map.empty[String, Int]
+          else release.rankByTty(sab)
+      }, sabKey(col("sab_id")))
+      // A7 argmax; FIRST max in canonical order (a stable maxBy's
+      // tie-break) = array_position's first-occurrence pick. One rank
+      // lookup per atom, no per-step struct rebuilds. A missing TTY
+      // fails the term like the reference's KeyError, keyed on the
+      // FIRST missing atom in canonical order.
+      val missing = filter(atomsS,
+        a => element_at(rankLit, a.getField("tty")).isNull)
+      val a7Err = when(size(missing) > 0,
+        concat(lit(s"${ConceptAssembler.FinishError}TTY "),
+          element_at(missing, 1).getField("tty"), lit(" not in MRRANK")))
+      val ranks = transform(atomsS,
+        a => element_at(rankLit, a.getField("tty")))
+      val a7Pref = element_at(atomsS,
+        array_position(ranks, array_max(ranks)).cast("int"))
+        .getField("str")
+      // A9: empty MRRANK requires exactly one 'P'-TTY atom.
+      val prefAtoms = filter(atomsS, a => a.getField("tty").contains("P"))
+      val a9Err = when(size(prefAtoms) =!= 1,
+        lit(s"${ConceptAssembler.FinishError}Unable to select pref label"))
+      val a9Pref = element_at(prefAtoms, 1).getField("str")
+      val ranked = size(rankLit) > 0
+      (when(ranked, when(a7Err.isNull, a7Pref))
+        .otherwise(when(a9Err.isNull, a9Pref)),
+        when(ranked, a7Err).otherwise(a9Err))
+    }
+    val cuisClass = cuisId(sabKey(col("sab_id")))
+    val prefCol = byMode(cuisClass)(a8, a7a9Pref)
+    val errCol = byMode(cuisClass)(lit(null).cast("string"), a7a9Err)
     withSorted
       .withColumn("prefLabel", prefCol)
       .select(
@@ -538,10 +577,12 @@ class ConceptAssembler private (
     * @param strict reproduce the reference's hard asserts: fail if any atom
     *   has an empty CODE (`umls2rdf.py:142-147`) or any AUI resolves to >1
     *   code (`umls2rdf.py:715-716`) instead of silently dropping; the
-    *   failure names the first offending SAB of the group.
+    *   failure names the first offending SAB of the group. Only the
+    *   `load_on_codes` SABs are checked: a `load_on_cuis` class key is
+    *   its CUI.
     */
   def assembled(strict: Boolean = false): DataFrame = {
-    if (strict && !loadOnCuis) {
+    if (strict && hasCodes) {
       firstViolation(invalidCodeAtoms
           .groupBy(sabIdOf(col("SAB")).as("sab_id")).count())
         .foreach { case (sab, n) => throw new IllegalStateException(
@@ -586,14 +627,16 @@ class ConceptAssembler private (
 
 object ConceptAssembler {
 
-  /** The assembler of one manifest mode group: `members` are the group's
-    * `(SAB, MRSAB language)` pairs, in manifest order (a SAB's position is
-    * its `sab_id`); `lookups` must cover every one of them. */
-  def group(spark: SparkSession, source: UmlsSource,
-      members: Seq[(String, String)], loadOnCuis: Boolean,
+  /** One SAB of a group: its MRSAB language and its load mode. */
+  final case class Member(sab: String, lang: String, loadOnCuis: Boolean)
+
+  /** The assembler of a manifest's SABs: `members` in manifest order (a
+    * SAB's position is its `sab_id`), of either load mode or both;
+    * `lookups` must cover every one of them. */
+  def group(spark: SparkSession, source: UmlsSource, members: Seq[Member],
       lookups: ReleaseLookups): ConceptAssembler =
-    new ConceptAssembler(spark, source, members.map(_._1),
-      members.map(_._2), loadOnCuis, None, 1, lookups)
+    new ConceptAssembler(spark, source, members.map(_.sab),
+      members.map(_.lang), members.map(_.loadOnCuis), None, 1, lookups)
 
   /** The class prefix of every `__finish_err` text. Columnar finishing
     * throws nothing it could name, so its failures (the reference's

@@ -601,8 +601,8 @@ object UmlsQueries {
       None))
 
   /** The q25m dataflow, factored so UmlsPipelineSpec can drive it with a
-    * counting source: shared scan over `inner`, the SABs exported as one
-    * load_on_codes group, reports returned in input order. */
+    * counting source: shared scan over `inner`, the SABs exported
+    * (load_on_codes) by one plan, reports returned in input order. */
   private[graft] def multiSabExport(s: SparkSession,
       inner: UmlsSource, sabs: Seq[String],
       outDir: java.io.File): Seq[graft.sink.WriteReport] = {

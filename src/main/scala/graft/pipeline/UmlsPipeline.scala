@@ -3,12 +3,11 @@ package graft.pipeline
 import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.Executors
 
 import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
 
@@ -56,8 +55,8 @@ final case class PipelineConfig(
     outputDir: String,
     workDir: String,
     exportConf: UmlsExportConfig,
-    /** Ignored: a manifest's two mode-group plans always run at once.
-      * Kept only for callers built against the earlier option. */
+    /** Ignored: a manifest exports as one plan. Kept only for callers
+      * built against the earlier option. */
     parallelism: Int = 1,
     /** Scan each fat table ONCE for the whole manifest
       * ([[graft.sources.UmlsSource.sharedScan]]) instead of once per SAB
@@ -69,11 +68,12 @@ final case class PipelineConfig(
 /** The run-once export pipeline (`umls2rdf.py:828-896` +
   * `run_umls_pipeline.py`): validate source → the run's small lookups
   * (read once, concurrently) → semantic types → one ontology file per
-  * manifest entry, exported by one plan per mode group, the groups at
-  * once → validate output. Each step (each ontology its own) is recorded
-  * in [[PipelineState]]; completed steps are skipped on re-run (R1); the
-  * lookups are re-read by every run, so a rewritten lake is seen. Validation probes are R2 (`run_umls_pipeline.py:256-290`);
-  * config checks are R4 (`:298-308`).
+  * manifest entry, the whole manifest exported by one plan → validate
+  * output. Each step (each ontology its own) is recorded in
+  * [[PipelineState]]; completed steps are skipped on re-run (R1); the
+  * lookups are re-read by every run, so a rewritten lake is seen.
+  * Validation probes are R2 (`run_umls_pipeline.py:256-290`); config
+  * checks are R4 (`:298-308`).
   */
 final class UmlsPipeline(
     spark: SparkSession,
@@ -109,14 +109,11 @@ final class UmlsPipeline(
   }
 
   private def step[T](name: String)(body: => T): Option[T] =
-    // All state access under the pipeline lock: the mode groups' threads
-    // write disjoint step names, but LinkedHashSet reads racing writes are
-    // still undefined.
-    if (synchronized(state.isDone(name))) None
+    if (state.isDone(name)) None
     else {
-      synchronized { executed += name; () }
+      executed += name
       val r = body
-      synchronized(state.markDone(name))
+      state.markDone(name)
       Some(r)
     }
 
@@ -179,28 +176,6 @@ final class UmlsPipeline(
     } finally pool.shutdown()
   }
 
-  /** Run `tasks` at once, each on its own thread — the mode groups'
-    * exports, so Spark interleaves their plans' stages. Every task is
-    * awaited before this returns, also when one fails: a group still
-    * writing would otherwise publish and mark its files after [[run]] had
-    * thrown and released the shared-scan cache it reads. The first
-    * failure, in task order, is then rethrown. The wait is not bounded: a
-    * group ends when its Spark jobs do. */
-  private def allAtOnce[T](tasks: Seq[() => T]): Seq[T] =
-    if (tasks.size <= 1) tasks.map(_())
-    else {
-      val pool = Executors.newFixedThreadPool(tasks.size)
-      val results =
-        try tasks.map(t => pool.submit(new Callable[T] { def call(): T = t() }))
-          .map(f => Try(f.get()))
-        finally pool.shutdown()
-      results.map {
-        case Success(r) => r
-        case Failure(e: ExecutionException) => throw e.getCause
-        case Failure(e) => throw e
-      }
-    }
-
   private def runSteps(): Seq[WriteReport] = {
     step("validate_source")(validateSource())
 
@@ -209,7 +184,7 @@ final class UmlsPipeline(
     // render from one collect of MRSTY's graph, made only if one is needed.
     val includeSty = config.exportConf.includeSemanticTypes
     val (release, sty, docs) =
-      readLookups(includeSty || !synchronized(state.isDone("semantic_types")))
+      readLookups(includeSty || !state.isDone("semantic_types"))
     val styUrl = config.exportConf.baseUri + "STY/"
     val styFile = s"${config.outputDir}/umls_semantictypes.ttl"
     step("semantic_types") {
@@ -221,33 +196,21 @@ final class UmlsPipeline(
       if (includeSty) SemanticTypes.render(sty.get, styUrl, withRoots = false)
       else ""
 
-    // One plan per manifest mode group: every load_on_codes SAB in one,
-    // every load_on_cuis SAB in the other, the two run at once. Resume
-    // stays per SAB: a SAB completed by an earlier run is reported
-    // resumed, and each SAB is marked done as soon as its file is
-    // published.
-    def exportGroup(group: Seq[OntologyJob]): Seq[WriteReport] = {
-      val (done, pending) = synchronized {
-        val (d, p) = group.partition(j => state.isDone(s"ontology:${j.sab}"))
-        executed ++= p.map(j => s"ontology:${j.sab}")
-        (d, p)
-      }
-      val resumed = done.map(j => WriteReport(j.sab,
-        s"${config.outputDir}/${j.outFile}", 0, 0, 0, 0, 0,
-        skipped = true, resumed = true)) // produced by a previous run
-      val mode = if (group.head.loadOnCuis) "cuis" else "codes"
-      val written = OntologyWriter.writeGroup(spark, effSource,
-        pending.map(j => j -> s"${config.outputDir}/${j.outFile}"),
-        config.exportConf, s"${config.workDir}/parts-$mode", docs, semTypes,
-        release,
-        published = r => synchronized(state.markDone(s"ontology:${r.sab}")))
-      resumed ++ written
-    }
-    val groups = jobs.partition(!_.loadOnCuis) match {
-      case (codes, cuis) => Seq(codes, cuis).filter(_.nonEmpty)
-    }
-    val groupReports = allAtOnce(groups.map(g => () => exportGroup(g))).flatten
-    val bySab = groupReports.map(r => r.sab -> r).toMap
+    // One plan exports the manifest, load_on_codes and load_on_cuis SABs
+    // alike. Resume stays per SAB: a SAB completed by an earlier run is
+    // reported resumed, and each SAB is marked done as soon as its file
+    // is published.
+    val (done, pending) =
+      jobs.partition(j => state.isDone(s"ontology:${j.sab}"))
+    executed ++= pending.map(j => s"ontology:${j.sab}")
+    val resumed = done.map(j => WriteReport(j.sab,
+      s"${config.outputDir}/${j.outFile}", 0, 0, 0, 0, 0,
+      skipped = true, resumed = true)) // produced by a previous run
+    val written = OntologyWriter.writeGroup(spark, effSource,
+      pending.map(j => j -> s"${config.outputDir}/${j.outFile}"),
+      config.exportConf, s"${config.workDir}/parts", docs, semTypes, release,
+      published = r => state.markDone(s"ontology:${r.sab}"))
+    val bySab = (resumed ++ written).map(r => r.sab -> r).toMap
     val reports = jobs.map(j => bySab(j.sab))
 
     step("validate_output")(validateOutput(reports))

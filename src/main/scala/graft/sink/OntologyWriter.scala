@@ -98,8 +98,8 @@ private[graft] final class SabCounters(sc: SparkContext) extends Serializable {
   * UTF-8 file per ontology — prefixes, MRSAB-fed header, class terms,
   * property block, semantic types.
   *
-  * Spark-first shape: one plan exports a manifest mode group (every
-  * `load_on_codes` SAB, or every `load_on_cuis` SAB): assembly, finishing
+  * Spark-first shape: one plan exports a whole manifest, its
+  * `load_on_codes` and `load_on_cuis` SABs alike: assembly, finishing
   * and render run distributed; executors write each spine partition's
   * code-sorted terms as a part and the driver merges the parts by code
   * into one file per SAB, the output contract (one `.ttl` per SAB).
@@ -127,18 +127,19 @@ object OntologyWriter {
     writeGroup(spark, source, Seq(job -> outFile), conf, outFile + ".parts",
       propertyDocs, semanticTypes, ReleaseLookups.forSab(source, job.sab)).head
 
-  /** Export the ontologies of one load mode with ONE plan: `members` are
-    * `(job, output file)` pairs, all `load_on_codes` or all
-    * `load_on_cuis`; reports come back in `members` order.
+  /** Export ontologies with ONE plan: `members` are `(job, output file)`
+    * pairs, `load_on_codes` and `load_on_cuis` alike (each SAB is
+    * assembled in its own mode); reports come back in `members` order.
     *
     * Per SAB, as for a lone export: the F18 version gate skips it
     * (`umls2rdf.py:881-887`) and reports it skipped, not published, so a
     * resumed run gates it again and never expects its file; its file is
     * published atomically on its own and then handed to `published` (the
-    * pipeline's resume mark); the strict checks and the error log cap
-    * apply per SAB. A SAB without an MRSAB LAT (`umls2rdf.py:594-597`)
-    * fails the group before any of its files is published. The group's parts live in `partsDir`, which is
-    * replaced by each write and removed after it. */
+    * pipeline's resume mark); the strict checks (`load_on_codes` SABs
+    * only) and the error log cap apply per SAB. A SAB without an MRSAB
+    * LAT (`umls2rdf.py:594-597`) fails the export before any file is
+    * published. The parts live in `partsDir`, which is replaced by each
+    * write and removed after it. */
   def writeGroup(
       spark: SparkSession,
       source: UmlsSource,
@@ -149,8 +150,6 @@ object OntologyWriter {
       semanticTypes: String,
       lookups: ReleaseLookups,
       published: WriteReport => Unit = _ => ()): Seq[WriteReport] = {
-    require(members.map(_._1.loadOnCuis).distinct.size <= 1,
-      "a group exports ontologies of one load mode")
     val recs = members.map(m => Mrsab.orEmpty(lookups.mrsab(m._1.sab)))
     val (live, gated) = members.zip(recs).partition { case (_, rec) =>
       !conf.processOnlyCurrentVersion || rec.isCurrentVersion(conf.umlsVersion)
@@ -158,7 +157,7 @@ object OntologyWriter {
     val skipped = gated.map { case ((job, out), _) =>
       WriteReport(job.sab, out, 0, 0, 0, 0, 0, skipped = true)
     }
-    // A killed run may have left this group's parts behind: they go
+    // A killed run may have left its parts behind: they go
     // whether or not a member is left to write.
     val written = try {
       val lats = live.map { case ((job, _), rec) =>
@@ -169,7 +168,9 @@ object OntologyWriter {
       else {
         val jobs = live.map(_._1._1)
         val assembler = ConceptAssembler.group(spark, source,
-          jobs.map(_.sab).zip(lats), jobs.head.loadOnCuis, lookups)
+          jobs.zip(lats).map { case (job, lat) =>
+            ConceptAssembler.Member(job.sab, lat, job.loadOnCuis)
+          }, lookups)
         // MSH's config renders with its tree; [[rendered]] drops the tree
         // rules when the tree turns out to have no edge.
         val cfgs = jobs.zip(lats).map { case (job, lat) =>
@@ -267,7 +268,7 @@ object OntologyWriter {
     * file nor stale parts (a previous complete `<out>` survives it
     * untouched). Every header and property block is rendered before the
     * first temp file opens, so a SAB whose property block fails (J10)
-    * publishes nothing of its group. */
+    * publishes no file of the export. */
   private def writeParts(
       spark: SparkSession,
       assembler: ConceptAssembler,

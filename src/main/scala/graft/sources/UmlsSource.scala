@@ -100,10 +100,10 @@ object UmlsSource {
 
   /** Shared-scan source for many-small-SAB manifests: each FAT table
     * (MRCONSO/MRREL/MRDEF/MRSAT) is scanned ONCE, filtered to the union
-    * of the manifest's SABs, and persisted; the export's mode groups
-    * then filter the cached frame instead of issuing N lake scans — with
-    * a 20-SAB manifest the biggest tables are read once, not 20×, and
-    * the groups' `SAB IN (...)` predicates run against in-memory columnar
+    * of the manifest's SABs, and persisted; the export then filters the
+    * cached frame instead of issuing N lake scans — with a 20-SAB
+    * manifest the biggest tables are read once, not 20×, and the
+    * export's `SAB IN (...)` predicates run against in-memory columnar
     * batches. MRCONSO/MRREL keep "SRC" (root detection reads the
     * `V-<sab>` atoms, `umls2rdf.py:612-614`) and "MSH" (tree-mode
     * edges) alongside the manifest SABs; every export predicate is a
@@ -125,8 +125,8 @@ object UmlsSource {
     private val fatSabs = Map(
       "MRCONSO" -> withAux, "MRREL" -> withAux,
       "MRDEF" -> manifest, "MRSAT" -> manifest)
-    // Parallel group exports resolve tables concurrently; computeIfAbsent
-    // guarantees one persist per table.
+    // Callers on several threads (the run's lookups) resolve tables
+    // concurrently; computeIfAbsent guarantees one persist per table.
     private val cache =
       new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
     def table(name: String): DataFrame = {

@@ -296,9 +296,10 @@ class UmlsPipelineSpec extends AnyFunSuite {
     Map("RSAB" -> sab, "VSAB" -> s"${sab}1", "CURVER" -> "Y", "LAT" -> "ENG",
       "IMETA" -> imeta)
 
-  /** Four codes SABs and two cuis SABs that share codes, CUIs, a MeSH
-    * D-code and an ICD10CM-style root rel, so that any resolution that
-    * crosses SABs changes some SAB's file. */
+  /** Five codes SABs and two cuis SABs that share codes, CUIs, a MeSH
+    * D-code and an ICD10CM-style root rel, and a codes SAB (KC) whose
+    * CODEs are the cuis SABs' CUIs, so that any resolution that crosses
+    * SABs or load modes changes some SAB's file. */
   private val groupRows: Map[String, Seq[Map[String, String]]] = Map(
     "MRCONSO" -> Seq(
       conso("C1", "A1", "X1", "Alpha", "PT", "KA"),
@@ -313,6 +314,9 @@ class UmlsPipelineSpec extends AnyFunSuite {
       conso("C9", "CA1", "Q1", "Cee a", "PT", "CA") + ("ISPREF" -> "Y"),
       conso("C8", "CA2", "Q2", "Cee a two", "PT", "CA") + ("ISPREF" -> "Y"),
       conso("C9", "CB1", "R1", "Cee b", "PT", "CB") + ("ISPREF" -> "Y"),
+      conso("CK1", "K1", "C9", "Kay nine", "PT", "KC"),
+      conso("CK2", "K2", "C8", "Kay eight", "PT", "KC"),
+      conso("C9", "K3", "C8", "Kay eight synonym", "SY", "KC"),
       conso("CR", "AR", "V-KA", "KA root", "PT", "SRC")),
     "MRREL" -> Seq(
       rel("C2", "A2", "C1", "A1", "CHD", "KA"),
@@ -327,19 +331,30 @@ class UmlsPipelineSpec extends AnyFunSuite {
       rel("C3264380", "AX", "C1", "A1", "CHD", "KA"),
       rel("CM1", "AM1", "CM2", "AM2", "CHD", "MSH"),
       rel("C8", "CA2", "C9", "CA1", "RO", "CA"),
-      rel("C8", "CX", "C9", "CB1", "RN", "CB")),
+      rel("C8", "CX", "C9", "CB1", "RN", "CB"),
+      // a cuis self-rel (kept) and a codes self-map (dropped, `:715-718`)
+      rel("C9", "CA1", "C9", "CA1", "RO", "CA"),
+      rel("CK1", "K1", "CK1", "K1", "RO", "KC"),
+      // KC's C9 -> C8, by AUI; by CUI it would attach to CA's and CB's C9
+      rel("CK2", "K2", "CK1", "K1", "RO", "KC"),
+      rel("C9", "K3", "C8", "CA2", "RO", "KC"),
+      // CA's rel on C1, which is no CA class: no CA term
+      rel("C9", "CA1", "C1", "A1", "RO", "CA")),
     "MRDEF" -> Seq(
       Map("CUI" -> "C1", "AUI" -> "A1", "SAB" -> "KA", "DEF" -> "Def KA"),
       Map("CUI" -> "C1", "AUI" -> "B1", "SAB" -> "KB", "DEF" -> "Def KB"),
       Map("CUI" -> "C9", "AUI" -> "CA1", "SAB" -> "CA", "DEF" -> "Def CA"),
-      Map("CUI" -> "C9", "AUI" -> "CB1", "SAB" -> "CB", "DEF" -> "Def CB")),
+      Map("CUI" -> "C9", "AUI" -> "CB1", "SAB" -> "CB", "DEF" -> "Def CB"),
+      Map("CUI" -> "CK1", "AUI" -> "K1", "SAB" -> "KC", "DEF" -> "Def KC")),
     "MRSAT" -> Seq(
       Map("CUI" -> "C1", "CODE" -> "X1", "ATN" -> "TH", "ATV" -> "ka",
         "SAB" -> "KA"),
       Map("CUI" -> "C1", "CODE" -> "X1", "ATN" -> "TH", "ATV" -> "kb",
         "SAB" -> "KB"),
       Map("CUI" -> "C9", "CODE" -> "Q1", "ATN" -> "TH", "ATV" -> "ca",
-        "SAB" -> "CA")),
+        "SAB" -> "CA"),
+      Map("CUI" -> "CK1", "CODE" -> "C9", "ATN" -> "TH", "ATV" -> "kc",
+        "SAB" -> "KC")),
     "MRRANK" -> Seq( // MSH finishes by A7, the others by A9
       Map("RANK" -> "0400", "SAB" -> "MSH", "TTY" -> "MH",
         "SUPPRESS" -> "N")),
@@ -347,7 +362,8 @@ class UmlsPipelineSpec extends AnyFunSuite {
       Map("CUI" -> "C1", "TUI" -> "T001", "STN" -> "A1", "STY" -> "Entity"),
       Map("CUI" -> "C9", "TUI" -> "T002", "STN" -> "A1.1",
         "STY" -> "Object")),
-    "MRSAB" -> Seq("KA", "KB", "MSH", "ICD10CM", "CA", "CB").map(mrsab(_)),
+    "MRSAB" ->
+      Seq("KA", "KB", "MSH", "ICD10CM", "CA", "CB", "KC").map(mrsab(_)),
     "MRDOC" -> Seq(
       Map("DOCKEY" -> "REL", "VALUE" -> "RO", "TYPE" -> "expanded_form",
         "EXPL" -> "related"),
@@ -524,7 +540,7 @@ class UmlsPipelineSpec extends AnyFunSuite {
     val full = Files.createTempDirectory("pipe-kill-full").toString
     exportTo(full, jobs)
     // The killed run published KA and died before KB: its state names KA,
-    // and its KB temp file and the group's parts are still on disk.
+    // and its KB temp file and the export's parts are still on disk.
     val out = Files.createTempDirectory("pipe-kill-out").toString
     val work = Files.createTempDirectory("pipe-kill-work").toString
     val st = new PipelineState(s"$work/pipeline_state.json")
@@ -533,8 +549,8 @@ class UmlsPipelineSpec extends AnyFunSuite {
     for (f <- Seq("KA.ttl", "umls_semantictypes.ttl"))
       Files.copy(Paths.get(s"$full/$f"), Paths.get(s"$out/$f"))
     Files.write(Paths.get(s"$out/KB.ttl.tmp"), "half a file".getBytes)
-    Files.createDirectories(Paths.get(s"$work/parts-codes"))
-    Files.write(Paths.get(s"$work/parts-codes/part-00000-stale.parquet"),
+    Files.createDirectories(Paths.get(s"$work/parts"))
+    Files.write(Paths.get(s"$work/parts/part-00000-stale.parquet"),
       "stale".getBytes)
     val p = new UmlsPipeline(spark, groupSource(), jobs,
       PipelineConfig(out, work, UmlsExportConfig(umlsVersion = "2025AB")))
@@ -551,7 +567,7 @@ class UmlsPipelineSpec extends AnyFunSuite {
   }
 
   test("mode groups: a manifest of two codes and two cuis SABs runs " +
-    "exactly two write executions") {
+    "exactly one write execution") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -584,21 +600,79 @@ class UmlsPipelineSpec extends AnyFunSuite {
     assert(reports.map(_.sab) === Seq("KA", "CA", "KB", "CB"))
     import scala.jdk.CollectionConverters._
     assert(writes.asScala.toSeq.map(p => p.substring(p.lastIndexOf('/') + 1))
-      .sorted === Seq("parts-codes", "parts-cuis"), writes)
+      === Seq("parts"), writes)
+  }
+
+  test("one plan: a manifest mixing load modes writes each file as its " +
+    "one-SAB manifest does") {
+    val (out, reports) = assertGroupedEqualsSingles(Seq(job("KA"),
+      job("CA", cuis = true), job("MSH"), job("ICD10CM"), job("KC")))
+    assert(reports.map(r => (r.sab, r.terms, r.errors)) === Seq(("KA", 3L, 0L),
+      ("CA", 2L, 0L), ("MSH", 2L, 0L), ("ICD10CM", 1L, 0L), ("KC", 2L, 0L)))
+    def term(sab: String, code: String): String = {
+      val ttl = text(s"$out/$sab.ttl")
+      val from = ttl.indexOf(s"/$sab/$code> a owl:Class")
+      assert(from >= 0, s"$sab has no class $code:\n$ttl")
+      ttl.substring(from, ttl.indexOf(" .\n", from))
+    }
+    // KC's codes are CA's CUIs: KC keys its classes, definitions and
+    // attributes by CODE and resolves its rels by AUI; CA keys by CUI.
+    val kc9 = term("KC", "C9")
+    assert(kc9.contains("Kay nine") && kc9.contains("Def KC") &&
+      kc9.contains("\"\"\"kc\"\"\""), kc9)
+    assert(kc9.contains("/KC/RO> <http://purl.bioontology.org/ontology/KC/C8>"),
+      kc9)
+    assert(!kc9.contains("/KC/RO> <http://purl.bioontology.org/ontology/KC/C9>"),
+      kc9) // the self-map is dropped
+    assert(!term("KC", "C8").contains("/KC/RO>"), term("KC", "C8"))
+    val ca9 = term("CA", "C9")
+    assert(ca9.contains("Cee a") && ca9.contains("Def CA") &&
+      !ca9.contains("Kay"), ca9)
+    assert(ca9.contains("/CA/RO> <http://purl.bioontology.org/ontology/CA/C9>"),
+      ca9) // a cuis self-rel is kept
+    assert(!text(s"$out/CA.ttl").contains("/CA/C1>"))
+    assert(term("MSH", "D000002").contains(
+      "rdfs:subClassOf <http://purl.bioontology.org/ontology/MSH/D000001>"))
+    assert(term("ICD10CM", "A00").contains("rdfs:subClassOf owl:Thing"))
+  }
+
+  test("one plan: MSH listed load_on_cuis exports the bytes the " +
+    "mode-group export wrote, alone or beside codes SABs") {
+    val (out, _) = assertGroupedEqualsSingles(
+      Seq(job("KA"), job("MSH", cuis = true), job("CA", cuis = true)))
+    val msh = text(s"$out/MSH.ttl")
+    // CUI classes: the D-tree, keyed by D-code, gives them no parent, and
+    // the CHD rel is no subClassOf under the tree rules.
+    def cuiClass(cui: String, label: String): String = {
+      val q = "\"\"\""
+      s"<http://purl.bioontology.org/ontology/MSH/$cui> a owl:Class ;\n" +
+        s"\tskos:prefLabel $q$label$q@en ;\n" +
+        s"\tskos:notation $q$cui$q^^xsd:string ;\n" +
+        s"\tumls:cui $q$cui$q^^xsd:string ;\n .\n"
+    }
+    assert(msh.contains(cuiClass("CM1", "Mesh parent") + "\n" +
+      cuiClass("CM2", "Mesh child")), msh)
+    // The whole file, as the export with one plan per load mode wrote it.
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(Files.readAllBytes(Paths.get(s"$out/MSH.ttl")))
+      .map("%02x".format(_)).mkString
+    assert(sha ===
+      "1376c11abd87b475a8c200e014d7a348a4746e41f81a36a608fc65aefd9a72a5")
   }
 
   test("mode groups: when one group fails, run() still waits for the " +
     "other to publish and mark its file, and leaves no parts behind") {
-    // The cuis group fails at once; the codes group is still writing.
+    // One plan exports both modes, so a cuis SAB without a LAT fails the
+    // whole manifest: no file is published and no ontology is marked.
     val rows = groupRows + ("MRSAB" -> Seq(mrsab("KA"), mrsab("CA") - "LAT"))
     val out = Files.createTempDirectory("pipe-wait").toString
     val ex = intercept[IllegalStateException](
       exportTo(out, Seq(job("KA"), job("CA", cuis = true)), rows))
     assert(ex.getMessage === "No LAT found in MRSAB for ontology CA")
-    assert(text(s"$out/KA.ttl").contains("/KA/X1> a owl:Class"))
+    assert(!Files.exists(Paths.get(s"$out/KA.ttl")))
     assert(!Files.exists(Paths.get(s"$out/CA.ttl")))
     val state = new PipelineState(s"$out/.state/pipeline_state.json")
-    assert(state.isDone("ontology:KA") && !state.isDone("ontology:CA"))
+    assert(!state.isDone("ontology:KA") && !state.isDone("ontology:CA"))
     assert(new java.io.File(s"$out/.state").list().toSeq ===
       Seq("pipeline_state.json"))
   }
@@ -688,7 +762,7 @@ class UmlsPipelineSpec extends AnyFunSuite {
       kind
     }
     assert(!kinds.exists(_.startsWith("unexpected")), kinds.mkString("\n"))
-    assert(kinds.count(_ == "write") === 2, kinds)
+    assert(kinds.count(_ == "write") === 1, kinds)
     assert(kinds.count(_ == "source probe") === 1, kinds)
     // The source probe is the one isEmpty, and no execution but a write
     // reads the tree's CHD edges.
@@ -696,9 +770,9 @@ class UmlsPipelineSpec extends AnyFunSuite {
     assert(!ours.exists { case (id, s) =>
       !isWrite(id) && s.physicalPlanDescription.contains("CHD")
     }, kinds)
-    // MRREL is scanned three times: each group's rels and the tree, which
-    // the subquery and the join read from one cache.
-    assert(relReads.value === 3L * groupRows("MRREL").size)
+    // MRREL is scanned twice: the rels and the tree, which the subquery
+    // and the join read from one cache.
+    assert(relReads.value === 2L * groupRows("MRREL").size)
   }
 
   test("manifest parser skips comments and parses alt URIs (S4/F19)") {

@@ -275,7 +275,8 @@ class OntologyWriterSpec extends AnyFunSuite {
       : (Seq[RenderedPart], SabCounters) = {
     val source = TestSpark.fixedSource(tables)
     val asm = graft.assemble.ConceptAssembler.group(spark, source,
-      Seq("TEST" -> "eng"), loadOnCuis = false,
+      Seq(graft.assemble.ConceptAssembler.Member("TEST", "eng",
+        loadOnCuis = false)),
       graft.assemble.ReleaseLookups.forSab(source, "TEST"))
     val cfg = graft.render.RenderConfig(
       ns = "http://purl.bioontology.org/ontology/TEST/", lang = "en",

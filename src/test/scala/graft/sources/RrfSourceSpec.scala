@@ -89,8 +89,8 @@ class RrfSourceSpec extends AnyFunSuite {
   }
 
   test("parallel per-SAB export is byte-identical to sequential") {
-    // The two mode groups of one manifest run at once; exported as two
-    // one-SAB manifests, they run one after the other.
+    // One plan exports both load modes of the manifest; exported as two
+    // one-SAB manifests, the SABs run one after the other.
     val outSeq = Files.createTempDirectory("graft-out-seq").toString
     val outPar = Files.createTempDirectory("graft-out-par").toString
     val jobs = Seq(
