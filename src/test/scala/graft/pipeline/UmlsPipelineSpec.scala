@@ -660,6 +660,20 @@ class UmlsPipelineSpec extends AnyFunSuite {
       "1376c11abd87b475a8c200e014d7a348a4746e41f81a36a608fc65aefd9a72a5")
   }
 
+  test("one plan: --strict checks only the load_on_codes SABs of a " +
+    "manifest mixing load modes") {
+    // A cuis SAB's atom with an empty CODE is keyed by its CUI: --strict
+    // lets it pass in a mixed manifest, as in a cuis-only one.
+    val rows = groupRows + ("MRCONSO" -> (groupRows("MRCONSO") :+
+      (conso("C9", "CA9", "", "Cee a no code", "SY", "CA") + ("ISPREF" -> "N"))))
+    val strict = UmlsExportConfig(umlsVersion = "2025AB", strict = true)
+    val (out, reports) = assertGroupedEqualsSingles(
+      Seq(job("KA"), job("CA", cuis = true)), rows, strict)
+    assert(reports.map(r => (r.sab, r.terms, r.errors)) ===
+      Seq(("KA", 3L, 0L), ("CA", 2L, 0L)))
+    assert(text(s"$out/CA.ttl").contains("Cee a no code"))
+  }
+
   test("mode groups: when one group fails, run() still waits for the " +
     "other to publish and mark its file, and leaves no parts behind") {
     // One plan exports both modes, so a cuis SAB without a LAT fails the
