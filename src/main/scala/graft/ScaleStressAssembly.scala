@@ -32,7 +32,7 @@ import graft.sources.UmlsSource
   *     cui/tui cardinalities for the hot class and a uniform sample
   *     class, planted prefLabels, Σ(altLabels+1) = total atoms;
   *   - the salted twin (`saltBuckets = 8`, the q25t configuration,
-  *     [[ConceptAssembler]] `groupCollectAtoms`) must be MULTISET-EQUAL
+  *     [[ConceptAssembler]] `collectByClass`) must be MULTISET-EQUAL
   *     to the unsalted assembly over canonicalized full rows (arrays
   *     order-insensitive via array_sort — collect_list order is
   *     partitioning-dependent by design; every consumer re-sorts);

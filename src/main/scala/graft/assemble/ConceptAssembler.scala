@@ -14,18 +14,23 @@ import graft.sources.UmlsSource
   * `terms()` (`umls2rdf.py:586-743`).
   *
   * Where the reference builds in-RAM hash indexes (`*_by_*` defaultdicts,
-  * `umls2rdf.py:545-557`) and loops row-at-a-time, this declares the same
-  * dataflow as joins + groupBys and lets Catalyst plan it:
+  * `umls2rdf.py:545-557`) and fills each `UmlsClass` from them in one
+  * loop, this declares the same record assembly as ONE keyed pass:
   *   - every child table is filtered by SAB first (parquet/JDBC pushdown —
   *     the reference's F1-F6 WHERE clauses);
   *   - AUI→code resolution (J3) is a join against the atom (AUI, code)
-  *     projection;
-  *   - per-class grouping (A1) is `groupBy(sab_id, code)` with
-  *     `collect_list` — one shuffle keyed by class; per-code fan-in is
-  *     bounded (a code has bounded atoms/rels), so collected arrays are
-  *     safe at full-UMLS scale and AQE handles the SNOMEDCT/LNC skew;
-  *   - tiny tables (MRRANK per SAB ≈ hundreds of rows; cui_roots ≈ 1) are
-  *     broadcast.
+  *     projection, below the class spine;
+  *   - every child row — atom, rel with its root vote, definition,
+  *     attribute, semantic type, MeSH tree edge — is projected to its
+  *     class key plus a payload struct holding one nullable field per
+  *     kind, the projections are unioned, and per-class grouping (A1) is
+  *     ONE `groupBy(sab_id, code)` with ONE `collect_list`: one shuffle
+  *     keyed by class and no join above it. The aggregate's result splits
+  *     the list by kind ([[assembled]]). Per-code fan-in is bounded (a
+  *     code has bounded atoms/rels), so collected arrays are safe at
+  *     full-UMLS scale; skewed codes can be salted ([[collectByClass]]);
+  *   - tiny tables (MRRANK per SAB ≈ hundreds of rows; root CUIs ≈ 1)
+  *     enter the plan as literals.
   *
   * Whole-export shape: one assembler per manifest — its `load_on_codes`
   * and `load_on_cuis` SABs alike — so a manifest runs one plan, as the
@@ -157,15 +162,14 @@ class ConceptAssembler private (
       col("SUPPRESS") === "N"
 
   /** The F1-filtered atoms, persisted once per assembler. Assembly derives
-    * the per-code grouping, the AUI→code map (joined 2-3× in
-    * [[relsGroupedWithRoots]]/[[defsByCode]]) and the TUI attachment all
-    * from this one projection, so MRCONSO is scanned ONCE per group
-    * instead of 4-5× (the round-2 q25s hotspot: the plan re-derived
-    * `atoms` in four subplans whose shuffle keys differ, so
-    * ReusedExchange never fired).
-    * MEMORY_AND_DISK: a SAB-pruned narrow projection is a few M rows for
-    * the largest SAB at full-UMLS scale; disk spill keeps it safe
-    * regardless. Call [[unpersistShared]] when the export is done. */
+    * the atom rows of the class spine, the AUI→code map (joined by the
+    * rels' two endpoints and by the definitions, [[resolveAui]]) and the
+    * semantic-type attachment all from this one projection, so MRCONSO
+    * is scanned ONCE per group for them: plans that re-derive `atoms`
+    * per use shuffle it under different keys, so ReusedExchange would
+    * not fire. MEMORY_AND_DISK: a SAB-pruned narrow projection is a few
+    * M rows for the largest SAB at full-UMLS scale; disk spill keeps it
+    * safe regardless. Call [[unpersistShared]] when the export is done. */
   private lazy val atomsShared: DataFrame =
     // Only the columns assembly reads — caching the full 19-column RRF
     // row would double the cache bytes (and the row-encode cost) for
@@ -173,9 +177,6 @@ class ConceptAssembler private (
     persisted(atoms.select(keyed("sab_id", sabIdOf(col("SAB")))(col("code"),
       col("CUI"), col("TS"), col("STT"), col("ISPREF"), col("AUI"),
       col("SCUI"), col("TTY"), col("CODE"), col("STR")): _*))
-
-  /** The `sab_id` of an [[atomsShared]] row. */
-  private def atomSab: Column = sabKey(col("sab_id"))
 
   /** The frames this assembler persisted, released by [[unpersistShared]]. */
   private val persistedFrames = mutable.Buffer.empty[DataFrame]
@@ -212,11 +213,14 @@ class ConceptAssembler private (
     limited(source.table("MRREL")
       .filter(col("SAB").isin(sabs: _*) && col("SUPPRESS") === "N"))
 
-  /** MeSH `D*` CHD tree: child code → parent codes (J2,
-    * `umls2rdf.py:201-217`). Only consulted for MSH. The reference's
-    * tree SQL has NO SUPPRESS predicate (unlike F3), so the edges are
-    * read from MRREL filtered on SAB/REL only — not from [[rels]]. */
-  def meshTree: DataFrame = meshTreeKeyed.drop("msab")
+  /** MeSH `D*` CHD tree: child code → parent codes, as `(child,
+    * parents)` (J2, `umls2rdf.py:201-217`). Only consulted for MSH. The
+    * reference's tree SQL has NO SUPPRESS predicate (unlike F3), so the
+    * edges are read from MRREL filtered on SAB/REL only — not from
+    * [[rels]]. */
+  def meshTree: DataFrame =
+    meshTreeEdges(meshCodes).groupBy(col("code").as("child"))
+      .agg(collect_set("parent").as("parents"))
 
   /** Whether the group's MeSH D-tree has an edge, as a column of the
     * plan that reads it: the reference's tree checks are TRUTHINESS tests
@@ -228,35 +232,35 @@ class ConceptAssembler private (
   def meshTreeExists: Column =
     if (sabs.contains("MSH")) meshTreeShared.exists() else lit(false)
 
-  /** [[meshTreeKeyed]], persisted once per assembler like
-    * [[atomsShared]]: the EXISTS subquery and the join in [[assembled]]
-    * plan the tree apart (constraints inferred from the join, and join
-    * strategies AQE picks per subquery, differ), so without the cache
-    * they share no exchange and the tree would be computed twice. */
-  private lazy val meshTreeShared: DataFrame = persisted(meshTreeKeyed)
+  /** The tree's edges, persisted once per assembler like [[atomsShared]]:
+    * the EXISTS subquery and the class spine in [[assembled]] plan the
+    * tree apart (constraints inferred, and join strategies AQE picks per
+    * subquery, differ), so without the cache they share no exchange and
+    * the tree would be computed twice. Its D-codes are persisted too:
+    * the edges join them twice, and adaptive execution reuses no exchange
+    * above a cached table, so over a shared-scan source the two sides
+    * would shuffle the same projection twice. */
+  private lazy val meshTreeShared: DataFrame =
+    persisted(meshTreeEdges(persisted(meshCodes)))
 
-  /** [[meshTree]] keyed by MSH's `sab_id` (`msab`), taken from the rows
-    * themselves: a key Catalyst cannot fold keeps the tree join on
-    * `(sab_id, code)`, co-partitioned with the class spine, and limited
-    * to MSH's classes. */
-  private def meshTreeKeyed: DataFrame = {
-    val conso = source.table("MRCONSO")
-    val msh = conso.filter(col("SAB") === "MSH" &&
-        col("CODE").startsWith("D"))
-      .select(keyed("m_sab", sabIdOf(col("SAB")))(col("CUI").as("m_cui"),
-        col("CODE").as("m_code")): _*)
+  /** MSH's distinct `(CUI, D-code)` pairs, as `(m_cui, m_code)`. */
+  private def meshCodes: DataFrame =
+    source.table("MRCONSO")
+      .filter(col("SAB") === "MSH" && col("CODE").startsWith("D"))
+      .select(col("CUI").as("m_cui"), col("CODE").as("m_code"))
       .distinct()
-    val chd = source.table("MRREL")
+
+  /** The tree's edges as class children, `(sab_id, code, parent)`: the
+    * child's D-code keyed by MSH's `sab_id`, `msh` resolving both CUIs.
+    * An edge may repeat; the class spine keeps each parent once. */
+  private def meshTreeEdges(msh: DataFrame): DataFrame =
+    source.table("MRREL")
       .filter(col("SAB") === "MSH" && col("REL") === "CHD")
       .select(col("CUI1"), col("CUI2"))
-    chd.join(msh.as("c1"), col("CUI1") === col("c1.m_cui"))
+      .join(msh.as("c1"), col("CUI1") === col("c1.m_cui"))
       .join(msh.as("c2"), col("CUI2") === col("c2.m_cui"))
-      .select(keyed("t_sab", col("c2.m_sab"))(col("c1.m_code").as("parent"),
-        col("c2.m_code").as("child")): _*)
-      .distinct()
-      .groupBy(sabKey(col("t_sab")).as("msab"), col("child"))
-      .agg(collect_set("parent").as("parents"))
-  }
+      .select(keyed("sab_id", lit(sabs.indexOf("MSH")))(
+        col("c2.m_code").as("code"), col("c1.m_code").as("parent")): _*)
 
   /** AUI → code of the `load_on_codes` SABs' atoms, keyed by `atom_sab`.
     * AUI is MRCONSO's primary key (one row per atom), so the projection is
@@ -264,7 +268,7 @@ class ConceptAssembler private (
     * every atom for nothing. (Code-ambiguity per AUI is separately
     * policed by [[auiCardinalityViolations]].) A `load_on_cuis` SAB needs
     * no such map: its class key is the CUI itself, so its rows meet their
-    * class at the `(sab_id, code)` join onto the grouped atoms. */
+    * class in the `(sab_id, code)` grouping of [[assembled]]. */
   private def atomIdCode: DataFrame = {
     val codesAtoms =
       if (mixed) atomsShared.filter(!cuisId(col("sab_id"))) else atomsShared
@@ -292,40 +296,44 @@ class ConceptAssembler private (
     kept.drop("r_sab", "r_aui")
   }
 
+  /** A1 atom rows: `(sab_id, code, atom)`. The atom struct carries only
+    * the fields finishing reads (prefLabel keys ispref/stt/tty,
+    * canonical-order keys aui/cui, the label). Field ORDER is
+    * load-bearing: `(aui, cui)` lead, so the canonical intra-class sort
+    * is a plain `array_sort` over the raw structs (struct comparison is
+    * field-by-field, and AUI is MRCONSO's primary key, so the prefix is
+    * already a total order). */
+  private def atomRows: DataFrame =
+    atomsShared.select(keyed("sab_id", col("sab_id"))(col("code"),
+      struct(col("AUI").as("aui"), col("CUI").as("cui"),
+        col("STT").as("stt"), col("ISPREF").as("ispref"),
+        col("TTY").as("tty"), col("STR").as("str")).as("atom")): _*)
+
   /** J3+J4: relations attached to their source class, with AUI→code
-    * endpoint resolution in codes mode (`umls2rdf.py:685-727`), in ONE
-    * pass: per-source-class grouped relation structs plus the F17 root
-    * flag — `(rsab, rcode, rels, is_root)`. Each rel takes its SAB's mode.
+    * endpoint resolution in codes mode (`umls2rdf.py:685-727`), each with
+    * its F17 root vote — `(sab_id, code, rel, root)`. Each rel takes its
+    * SAB's mode.
     *
     * Codes mode: attach by AUI2 (inner — a rel not anchored at a class
     * atom is invisible, as in the reference), resolve target by AUI1
     * (unresolved targets dropped, `:717`), drop self-maps (`:715-718`).
     * Both resolutions stay within the rel's own SAB.
-    * Cuis mode: attach by CUI2; endpoints are the CUIs, no filtering. The
-    * rels are grouped by `(rsab, CUI2)` as they are: a group whose CUI2 is
-    * no class of its SAB meets no class at the `(sab_id, code)` join in
+    * Cuis mode: attach by CUI2; endpoints are the CUIs, no filtering. A
+    * rel whose CUI2 is no class of its SAB meets no atom in
     * [[assembled]], so it is dropped there, its root vote with it.
     *
-    * The root flag is detected over the SAME attached-rels relation the
-    * grouped structs come from, so fusing both into one `groupBy` halves
-    * the rels⋈atoms join work (round 2 computed `attached` twice — once
-    * for rootFlags, once for the resolved rels — and the differing
-    * downstream shuffle keys kept ReusedExchange from sharing them) and
-    * drops one join from [[assembled]]. Target resolution is a LEFT join
-    * + in-aggregate filter: `collect_list` skips NULL `when()` branches,
-    * so unresolved/self-map rels vanish from the struct list (reference
-    * drops them, `umls2rdf.py:715-718`) while still voting for `is_root`
-    * exactly as the reference computes it over ALL attached rels.
-    *
-    * The collected structs leave out what the group key already holds —
-    * `codeSource` is `rcode`, and in cuis mode `codeTarget` is `cui1` —
-    * and [[graft.model.RelOut]]'s fields are rebuilt in the aggregate's
-    * result, so the shuffle carries each rel's own fields only. */
-  def relsGroupedWithRoots: DataFrame = {
-    val relSab = sabIdOf(col("SAB"))
+    * The root vote is taken over ALL attached rels, as the reference
+    * computes it: target resolution is a LEFT join, and an unresolved or
+    * self-map rel keeps its row with `rel` NULL so that it still votes. A
+    * row with neither a rel nor a root vote carries nothing and is not
+    * shuffled. The struct leaves out what the class key already holds —
+    * `codeSource` is the code, and in cuis mode `codeTarget` is `cui1` —
+    * and [[assembled]] rebuilds [[graft.model.RelOut]]'s fields. */
+  private def relRows: DataFrame = {
     val cuisRel = cuisSab(col("SAB"))
     val rootsCol = array_contains(
-      bySab(sabs.map(s => release.cuiRoots(s).toSeq.sorted), relSab),
+      bySab(sabs.map(s => release.cuiRoots(s).toSeq.sorted),
+        sabIdOf(col("SAB"))),
       col("CUI1"))
     val icd = sabs.indexOf("ICD10CM")
     val icdPatch =
@@ -340,57 +348,42 @@ class ConceptAssembler private (
     val relStruct = struct(Seq(col("REL").as("rel"), col("RELA").as("rela"),
       col("CUI1").as("cui1")) ++
       (if (hasCodes) Seq(col("codeTarget")) else Nil): _*)
-    resolved
-      .groupBy(relSab.as("rsab"),
-        byMode(cuisRel)(col("CUI2"), col("codeSource")).as("rcode"))
-      .agg(
-        // RelOut's fields, rebuilt from a collected struct inside the
-        // aggregate's own result projection.
-        transform(collect_list(byMode(cuisRel)(relStruct, when(
-          col("codeTarget").isNotNull &&
-            col("codeTarget") =!= col("codeSource"), relStruct))),
-          r => struct(
-            r.getField("rel").as("rel"), r.getField("rela").as("rela"),
-            r.getField("cui1").as("cui1"),
-            byMode(cuisId(col("rsab")))(r.getField("cui1"),
-              r.getField("codeTarget")).as("codeTarget"),
-            col("rcode").as("codeSource")))
-          .as("rels"),
-        max(byMode(cuisRel)(rootsCol,
-          (rootsCol && col("REL") === "CHD") || icdPatch)).as("is_root"))
+    resolved.select(keyed("sab_id", sabIdOf(col("SAB")))(
+        byMode(cuisRel)(col("CUI2"), col("codeSource")).as("code"),
+        byMode(cuisRel)(relStruct, when(col("codeTarget").isNotNull &&
+          col("codeTarget") =!= col("codeSource"), relStruct)).as("rel"),
+        byMode(cuisRel)(rootsCol,
+          (rootsCol && col("REL") === "CHD") || icdPatch).as("root")): _*)
+      .filter(col("rel").isNotNull || col("root"))
   }
 
   /** J5: definitions keyed by AUI (codes) / CUI (cuis)
-    * (`umls2rdf.py:632-637,728-730`), per SAB. Sorted distinct at
-    * assembly — the reference renders `sorted(set(defs))`
-    * (`umls2rdf.py:417-419`). */
-  def defsByCode: DataFrame = {
+    * (`umls2rdf.py:632-637,728-730`), per SAB — `(sab_id, code, def)`. */
+  private def defRows: DataFrame = {
     val d = source.table("MRDEF").filter(col("SAB").isin(sabs: _*))
     (if (hasCodes) resolveAui(d, "AUI", "atom_code", outer = false) else d)
-      .groupBy(sabIdOf(col("SAB")).as("dsab"),
-        byMode(cuisSab(col("SAB")))(col("CUI"), col("atom_code")).as("dcode"))
-      .agg(array_sort(collect_set("DEF")).as("defs"))
+      .select(keyed("sab_id", sabIdOf(col("SAB")))(
+        byMode(cuisSab(col("SAB")))(col("CUI"), col("atom_code")).as("code"),
+        col("DEF").as("def")): _*)
   }
 
   /** J6/F5: attributes keyed by CODE (codes) / CUI (cuis), per SAB
-    * (`umls2rdf.py:643-648,731`). */
-  def attsByCode: DataFrame = {
-    val a = source.table("MRSAT")
+    * (`umls2rdf.py:643-648,731`) — `(sab_id, code, att)`. */
+  private def attRows: DataFrame =
+    source.table("MRSAT")
       .filter(col("SAB").isin(sabs: _*) && col("CODE").isNotNull)
-    val key = byMode(cuisSab(col("SAB")))(col("CUI"), col("CODE"))
-    a.groupBy(sabIdOf(col("SAB")).as("asab"), key.as("acode"))
-      .agg(collect_list(struct(col("ATN").as("atn"), col("ATV").as("atv")))
-        .as("atts"))
-  }
+      .select(keyed("sab_id", sabIdOf(col("SAB")))(
+        byMode(cuisSab(col("SAB")))(col("CUI"), col("CODE")).as("code"),
+        struct(col("ATN").as("atn"), col("ATV").as("atv")).as("att")): _*)
 
-  /** J1+J7: semantic-type TUIs per class, via the class's CUIs
-    * (`umls2rdf.py:663-670,477-479`). */
-  def tuisByCode: DataFrame =
-    atomsShared.select(keyed("t_sab", col("sab_id"))(col("code").as("tcode"),
-        col("CUI")): _*).distinct()
+  /** J1+J7: semantic types via the class's atoms' CUIs
+    * (`umls2rdf.py:663-670,477-479`) — `(sab_id, code, tui)`, one row per
+    * atom and TUI; the class spine keeps each TUI once. */
+  private def tuiRows: DataFrame =
+    atomsShared
       .join(source.table("MRSTY").select(col("CUI"), col("TUI")), "CUI")
-      .groupBy(sabKey(col("t_sab")).as("tsab"), col("tcode"))
-      .agg(collect_set("TUI").as("tuis"))
+      .select(keyed("sab_id", col("sab_id"))(col("code"),
+        col("TUI").as("tui")): _*)
 
   /** MRRANK rank-by-TTY of a one-SAB group (tiny; entered into the
     * prefLabel map as a literal). Reference: `umls2rdf.py:654-658,320-326`. */
@@ -442,11 +435,8 @@ class ConceptAssembler private (
     * (`ConceptAssemblerSpec`). */
   def finishedTry(strict: Boolean = false): DataFrame = {
     val raw = assembled(strict)
-    val schema = raw.schema
-    def emptyLike(c: String) =
-      array().cast(schema(schema.fieldIndex(c)).dataType)
     // Canonical (aui, cui) order: the atom struct leads with those keys
-    // by construction (see [[groupCollectAtoms]]), so the sort runs on
+    // by construction (see [[atomRows]]), so the sort runs on
     // the raw structs — no per-atom key rebuild, no unwrap transform.
     val sortedAtoms = array_sort(col("atoms"))
     val withSorted = raw.withColumn("atoms_sorted", sortedAtoms)
@@ -512,54 +502,44 @@ class ConceptAssembler private (
         col("prefLabel"),
         array_sort(array_remove(array_distinct(strs), col("prefLabel")))
           .as("altLabels"),
-        coalesce(col("defs"), emptyLike("defs")).as("defs"),
+        col("defs"),
         array_sort(array_distinct(
           transform(atomsS, a => a.getField("cui")))).as("cuis"),
-        array_sort(coalesce(col("tuis"), emptyLike("tuis"))).as("tuis"),
-        coalesce(col("atts"), emptyLike("atts")).as("atts"),
-        coalesce(col("rels"), emptyLike("rels")).as("rels"),
+        array_sort(col("tuis")).as("tuis"),
+        col("atts"),
+        col("rels"),
         col("isRoot"),
-        array_sort(coalesce(col("treeParents"), emptyLike("treeParents")))
-          .as("treeParents"),
+        array_sort(col("treeParents")).as("treeParents"),
         errCol.as("__finish_err"))
   }
 
-  /** A1 per-class atom collection, optionally salted for skewed SABs.
+  /** `rows` — `(sab_id, code)` plus one column per child kind — collected
+    * per class into `children`, a list of one struct per row holding that
+    * row's kind columns. One aggregate for every kind: an aggregate per
+    * kind would make every partial row carry the other kinds' buffers.
     *
     * AQE splits skewed JOIN partitions but not skewed AGGREGATES, so a
-    * code holding a large share of a SAB's atoms (SURVEY §4 names the
+    * code holding a large share of a SAB's rows (SURVEY §4 names the
     * SNOMEDCT/LNC shape) funnels its whole `collect_list` fan-in through
     * one reduce task. With `saltBuckets > 1` the collection runs in two
-    * stages: stage one groups by `(code, hash(AUI) % saltBuckets)` so the
-    * hot code's atoms build partial arrays on `saltBuckets` parallel
-    * tasks; stage two concatenates those pre-built arrays — the hot
-    * reducer now receives `saltBuckets` rows instead of one row per atom.
-    * Value-identical to the unsalted path because finishing canonically
-    * re-sorts the atom array ([[finishedTry]]); equality is
-    * spec-pinned.
-    *
-    * The atom struct carries only the fields finishing reads (prefLabel
-    * keys ispref/stt/tty, canonical-order keys aui/cui, the label); the
-    * grouping key rides the group key, not each atom. Field ORDER is
-    * load-bearing: `(aui, cui)` lead, so the canonical intra-class sort
-    * is a plain `array_sort` over the raw structs (struct comparison is
-    * field-by-field, and AUI is MRCONSO's primary key, so the prefix is
-    * already a total order). */
-  private def groupCollectAtoms(a: DataFrame): DataFrame = {
-    val atomStruct = struct(
-      col("AUI").as("aui"), col("CUI").as("cui"),
-      col("STT").as("stt"), col("ISPREF").as("ispref"),
-      col("TTY").as("tty"), col("STR").as("str"))
+    * stages: stage one groups by `(code, hash(row) % saltBuckets)` so the
+    * hot code's rows build partial lists on `saltBuckets` parallel tasks;
+    * stage two concatenates those pre-built lists — the hot reducer now
+    * receives `saltBuckets` rows instead of one row per child.
+    * Value-identical to the unsalted path because every consumer of the
+    * lists sorts or deduplicates them; equality is spec-pinned. */
+  private def collectByClass(rows: DataFrame): DataFrame = {
+    val row = struct(rows.columns.filterNot(Set("sab_id", "code"))
+      .map(col).toSeq: _*)
+    def key = Seq(sabKey(col("sab_id")).as("sab_id"), col("code"))
     if (saltBuckets <= 1)
-      a.groupBy(atomSab.as("sab_id"), col("code"))
-        .agg(collect_list(atomStruct).as("atoms"))
+      rows.groupBy(key: _*).agg(collect_list(row).as("children"))
     else
-      a.withColumn("__graft_salt",
-          pmod(xxhash64(col("AUI")), lit(saltBuckets)))
-        .groupBy(atomSab.as("sab_id"), col("code"), col("__graft_salt"))
-        .agg(collect_list(atomStruct).as("partial"))
-        .groupBy(atomSab.as("sab_id"), col("code"))
-        .agg(flatten(collect_list(col("partial"))).as("atoms"))
+      rows.withColumn("__graft_salt", pmod(xxhash64(row), lit(saltBuckets)))
+        .groupBy(key :+ col("__graft_salt"): _*)
+        .agg(collect_list(row).as("partial"))
+        .groupBy(key: _*)
+        .agg(flatten(collect_list(col("partial"))).as("children"))
   }
 
   /** The first SAB of the group (in group order) whose rows of `counts`
@@ -569,10 +549,15 @@ class ConceptAssembler private (
       .filter(_._2 > 0).sortBy(_._1).headOption
       .map { case (id, n) => (sabs(id), n) }
 
-  /** The grouped-and-joined shape BEFORE per-class finishing: one row per
-    * class (A1) — `sab_id`, `code`, `atoms`, `rels`, `defs`, `atts`,
-    * `tuis`, `isRoot`, `treeParents`, with every child collection joined
-    * in on `(sab_id, code)`.
+  /** The grouped shape BEFORE per-class finishing: one row per class
+    * (A1) — `sab_id`, `code`, `atoms`, `rels`, `defs`, `atts`, `tuis`,
+    * `isRoot`, `treeParents` — from ONE `(sab_id, code)` grouping of the
+    * union of every child's rows ([[collectByClass]]), with no join above
+    * it. The grouping's result splits the collected list by kind: defs
+    * sorted distinct (the reference renders `sorted(set(defs))`,
+    * `umls2rdf.py:417-419`), TUIs and tree parents distinct, `isRoot`
+    * whether any rel voted root. A group with no atom is no class (a
+    * rel, definition or attribute whose key names none) and is dropped.
     *
     * @param strict reproduce the reference's hard asserts: fail if any atom
     *   has an empty CODE (`umls2rdf.py:142-147`) or any AUI resolves to >1
@@ -591,37 +576,31 @@ class ConceptAssembler private (
         .foreach { case (sab, n) => throw new IllegalStateException(
           s"$n atom ids resolve to more than one code in SAB $sab") }
     }
-    val relsGrouped = relsGroupedWithRoots
-    val atomsGrouped = groupCollectAtoms(atomsShared)
-    val tree =
-      if (sabs.contains("MSH")) meshTreeShared
-      else spark.emptyDataFrame
-        .withColumn("msab", lit(0))
-        .withColumn("child", lit(null).cast("string"))
-        .withColumn("parents", lit(null).cast("array<string>"))
-        .select("msab", "child", "parents")
-    def on(sab: String, code: String): Column =
-      sameSab(col("sab_id"), col(sab)) && col("code") === col(code)
-
-    val joined = atomsGrouped
-      .join(relsGrouped, on("rsab", "rcode"), "left")
-      .join(defsByCode, on("dsab", "dcode"), "left")
-      .join(attsByCode, on("asab", "acode"), "left")
-      .join(tuisByCode, on("tsab", "tcode"), "left")
-      .join(tree, on("msab", "child"), "left")
-
-    // Left joins leave absent child collections NULL; finishing treats
-    // NULL arrays as empty.
-    joined.select(
-      sabKey(col("sab_id")).as("sab_id"),
-      col("code"),
-      col("atoms"),
-      col("rels"),
-      col("defs"),
-      col("atts"),
-      col("tuis"),
-      coalesce(col("is_root"), lit(false)).as("isRoot"),
-      col("parents").as("treeParents"))
+    val hasTree = sabs.contains("MSH")
+    val rows = (Seq(atomRows, relRows, defRows, attRows, tuiRows) ++
+      (if (hasTree) Seq(meshTreeShared) else Nil))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val children = col("children")
+    def kind(name: String): Column = transform(
+      filter(children, c => c.getField(name).isNotNull), c => c.getField(name))
+    collectByClass(rows)
+      .filter(exists(children, c => c.getField("atom").isNotNull))
+      .select(
+        col("sab_id"),
+        col("code"),
+        kind("atom").as("atoms"),
+        transform(kind("rel"), r => struct(
+          r.getField("rel").as("rel"), r.getField("rela").as("rela"),
+          r.getField("cui1").as("cui1"),
+          byMode(cuisId(sabKey(col("sab_id"))))(r.getField("cui1"),
+            r.getField("codeTarget")).as("codeTarget"),
+          col("code").as("codeSource"))).as("rels"),
+        array_sort(array_distinct(kind("def"))).as("defs"),
+        kind("att").as("atts"),
+        array_distinct(kind("tui")).as("tuis"),
+        exists(children, c => c.getField("root") <=> true).as("isRoot"),
+        (if (hasTree) array_distinct(kind("parent"))
+          else array().cast("array<string>")).as("treeParents"))
   }
 }
 

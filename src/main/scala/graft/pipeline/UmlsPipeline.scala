@@ -58,11 +58,12 @@ final case class PipelineConfig(
     /** Ignored: a manifest exports as one plan. Kept only for callers
       * built against the earlier option. */
     parallelism: Int = 1,
-    /** Scan each fat table ONCE for the whole manifest
-      * ([[graft.sources.UmlsSource.sharedScan]]) instead of once per SAB
-      * — the win for many-small-SAB manifests, where N lake scans
-      * dominate the per-SAB assembly work. Output bytes are identical
-      * either way (spec-asserted). */
+    /** Scan each fat table ONCE for the whole run
+      * ([[graft.sources.UmlsSource.sharedScan]]) and cache it, instead
+      * of once per read: the export plan reads MRCONSO and MRREL several
+      * times (atoms, AUI resolution, the MeSH tree) and the run's lookups
+      * read them too. Output bytes are identical either way
+      * (spec-asserted). */
     sharedScan: Boolean = false)
 
 /** The run-once export pipeline (`umls2rdf.py:828-896` +

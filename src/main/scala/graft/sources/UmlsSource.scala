@@ -100,13 +100,14 @@ object UmlsSource {
 
   /** Shared-scan source for many-small-SAB manifests: each FAT table
     * (MRCONSO/MRREL/MRDEF/MRSAT) is scanned ONCE, filtered to the union
-    * of the manifest's SABs, and persisted; the export then filters the
-    * cached frame instead of issuing N lake scans — with a 20-SAB
-    * manifest the biggest tables are read once, not 20×, and the
-    * export's `SAB IN (...)` predicates run against in-memory columnar
-    * batches. MRCONSO/MRREL keep "SRC" (root detection reads the
-    * `V-<sab>` atoms, `umls2rdf.py:612-614`) and "MSH" (tree-mode
-    * edges) alongside the manifest SABs; every export predicate is a
+    * of the manifest's SABs, and persisted; every read of the table —
+    * the export plan reads MRCONSO and MRREL several times, the run's
+    * lookups once more — then filters the cached frame instead of
+    * scanning the lake, and the export's `SAB IN (...)` predicates run
+    * against in-memory columnar batches. MRCONSO/MRREL keep "SRC" (root
+    * detection reads the `V-<sab>` atoms, `umls2rdf.py:612-614`)
+    * alongside the manifest SABs; the MeSH tree's rows are MSH's own,
+    * kept only when the manifest lists MSH. Every export predicate is a
     * subset of the union filter, so export inputs — and therefore
     * exported bytes — are identical to the direct source
     * (spec-asserted). Small metadata tables pass through uncached.
@@ -121,7 +122,7 @@ object UmlsSource {
   final class SharedScanSource private[sources] (inner: UmlsSource,
       sabs: Seq[String]) extends UmlsSource {
     private val manifest = sabs.distinct
-    private val withAux = (manifest ++ Seq("SRC", "MSH")).distinct
+    private val withAux = (manifest :+ "SRC").distinct
     private val fatSabs = Map(
       "MRCONSO" -> withAux, "MRREL" -> withAux,
       "MRDEF" -> manifest, "MRSAT" -> manifest)

@@ -36,20 +36,19 @@ object TypedFinish {
     * sorted altLabels (A3/F16), sorted distinct CUIs/TUIs (A5/A6). */
   def finish(raw: AssembledRaw, rankByTty: Map[String, Int],
       loadOnCuis: Boolean): UmlsConceptRow = {
-    def orEmpty[T](xs: Seq[T]): Seq[T] = if (xs == null) Nil else xs
     val atomsSorted = raw.atoms.sortBy(a => (a.aui, a.cui))
     val pref = PrefLabel.select(atomsSorted, rankByTty, loadOnCuis)
     UmlsConceptRow(
       code = raw.code,
       prefLabel = pref,
       altLabels = atomsSorted.map(_.str).distinct.filter(_ != pref).sorted,
-      defs = orEmpty(raw.defs),
+      defs = raw.defs,
       cuis = atomsSorted.map(_.cui).distinct.sorted,
-      tuis = orEmpty(raw.tuis).sorted,
-      atts = orEmpty(raw.atts),
-      rels = orEmpty(raw.rels),
+      tuis = raw.tuis.sorted,
+      atts = raw.atts,
+      rels = raw.rels,
       isRoot = raw.isRoot,
-      treeParents = orEmpty(raw.treeParents).sorted)
+      treeParents = raw.treeParents.sorted)
   }
 
   /** The typed twin of `conceptsColumns`: raises on a failing term. */

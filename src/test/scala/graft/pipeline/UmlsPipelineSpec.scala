@@ -603,6 +603,98 @@ class UmlsPipelineSpec extends AnyFunSuite {
       === Seq("parts"), writes)
   }
 
+  test("one keyed pass: the write plan has exactly one class-keyed " +
+    "exchange and no join above it") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val out = Files.createTempDirectory("pipe-keyed-pass").toString
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.toString.contains(s"$out/.state/parts")) {
+          plans.add(qe.executedPlan); ()
+        }
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try exportTo(out, Seq(job("KA"), job("CA", cuis = true), job("MSH"),
+      job("ICD10CM"), job("KC")))
+    finally {
+      org.apache.spark.sql.GraftSqlShims.waitForListeners(spark)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(plans.size === 1)
+    val plan = plans.poll()
+    val helper = new AdaptiveSparkPlanHelper {}
+    // Keyed by class: hash-partitioned on `(sab_id, code)`.
+    def classKeyed(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      helper.collect(p) {
+        case e @ ShuffleExchangeExec(h: HashPartitioning, _, _, _)
+            if h.expressions.collect { case a: AttributeReference => a.name }
+              .toSet == Set("sab_id", "code") => e
+      }
+    assert(classKeyed(plan).size === 1, plan)
+    assert(helper.collect(plan) { case j: BaseJoinExec => j }
+      .forall(j => classKeyed(j).isEmpty), plan)
+  }
+
+  test("the MeSH tree's D-code projection is shuffled once under the " +
+    "shared scan") {
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerStageCompleted}
+    // Count the stages that shuffle rows during one shared-scan export.
+    val out = Files.createTempDirectory("pipe-tree-stages").toString
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          stages.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftSqlShims.waitForListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try new UmlsPipeline(spark, groupSource(), Seq(job("MSH"), job("KA")),
+      PipelineConfig(out, s"$out/.state",
+        UmlsExportConfig(umlsVersion = "2025AB"), sharedScan = true)).run()
+    finally {
+      org.apache.spark.sql.GraftSqlShims.waitForListeners(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    // Adaptive execution reuses no exchange above a cached table: were
+    // the D-codes not cached, each side of the tree's self-join would
+    // shuffle them, one stage more.
+    assert(stages.get() === 5)
+  }
+
+  test("a shared-scan manifest without MSH caches no MSH row, and its " +
+    "files equal the direct source's") {
+    import org.apache.spark.sql.functions.col
+    def mshRows(sabs: Seq[String]): Seq[Long] = {
+      val shared = graft.sources.UmlsSource.sharedScan(groupSource(), sabs)
+      try Seq("MRCONSO", "MRREL").map(t =>
+        shared.table(t).filter(col("SAB") === "MSH").count())
+      finally shared.release()
+    }
+    assert(mshRows(Seq("KA", "CA")) === Seq(0L, 0L))
+    assert(mshRows(Seq("KA", "MSH")) === Seq(2L, 1L))
+    val jobs = Seq(job("KA"), job("CA", cuis = true), job("ICD10CM"))
+    def export(shared: Boolean): String = {
+      val out = Files.createTempDirectory("pipe-shared-no-msh").toString
+      new UmlsPipeline(spark, groupSource(), jobs, PipelineConfig(out,
+        s"$out/.state", UmlsExportConfig(umlsVersion = "2025AB"),
+        sharedScan = shared)).run()
+      out
+    }
+    val (direct, shared) = (export(shared = false), export(shared = true))
+    for (f <- jobs.map(_.outFile) :+ "umls_semantictypes.ttl")
+      assert(bytes(s"$shared/$f") === bytes(s"$direct/$f"), f)
+  }
+
   test("one plan: a manifest mixing load modes writes each file as its " +
     "one-SAB manifest does") {
     val (out, reports) = assertGroupedEqualsSingles(Seq(job("KA"),

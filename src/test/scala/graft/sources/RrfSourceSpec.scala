@@ -21,18 +21,18 @@ class RrfSourceSpec extends AnyFunSuite {
   /** Write the in-memory fixture rows as `<dir>/<NAME>.RRF` — fields
     * joined with '|' plus the trailing '|', nulls as empty fields (the RRF
     * on-disk convention). */
-  private def writeRrf(dir: String): Unit = {
+  private def writeRrf(dir: String): Unit =
     UmlsFixtureGen.tables.foreach { case (name, rows) =>
-      val text = rows.map { r =>
-        (0 until r.length).map { i =>
-          val v = r.get(i)
-          if (v == null) "" else v.toString
-        }.mkString("", "|", "|")
-      }.mkString("", "\n", "\n")
-      Files.write(Paths.get(s"$dir/$name.RRF"),
-        text.getBytes(StandardCharsets.UTF_8))
+      Files.write(Paths.get(s"$dir/$name.RRF"), rrfText(rows))
     }
-  }
+
+  private def rrfText(rows: Seq[org.apache.spark.sql.Row]): Array[Byte] =
+    rows.map { r =>
+      (0 until r.length).map { i =>
+        val v = r.get(i)
+        if (v == null) "" else v.toString
+      }.mkString("", "|", "|\n")
+    }.mkString.getBytes(StandardCharsets.UTF_8)
 
   private def runPipeline(source: UmlsSource, outDir: String): Unit = {
     val jobs = Seq(
@@ -86,6 +86,31 @@ class RrfSourceSpec extends AnyFunSuite {
     assert(read(s"$outRrf/cfx.ttl") === read(s"$outPq/cfx.ttl"))
     assert(read(s"$outRrf/umls_semantictypes.ttl") ===
       read(s"$outPq/umls_semantictypes.ttl"))
+  }
+
+  test("row order and partitioning do not change the exported bytes") {
+    // Every table's rows reversed and dealt round-robin over three files,
+    // so each table reads as several partitions and neighbouring rows
+    // land in different files.
+    val shuffled = Files.createTempDirectory("graft-rrf-shuffled").toString
+    UmlsFixtureGen.tables.foreach { case (name, rows) =>
+      val table = Files.createDirectory(Paths.get(s"$shuffled/$name.RRF"))
+      val dealt = rows.reverse.zipWithIndex
+      for (k <- 0 until 3)
+        Files.write(table.resolve(s"part-$k.rrf"),
+          rrfText(dealt.collect { case (r, i) if i % 3 == k => r }))
+    }
+    assert(UmlsSource.rrf(spark, shuffled).table("MRCONSO")
+      .rdd.getNumPartitions > 1)
+    val inOrder = Files.createTempDirectory("graft-rrf-in-order").toString
+    writeRrf(inOrder)
+    val outA = Files.createTempDirectory("graft-out-in-order").toString
+    val outB = Files.createTempDirectory("graft-out-shuffled").toString
+    runPipeline(UmlsSource.rrf(spark, inOrder), outA)
+    runPipeline(UmlsSource.rrf(spark, shuffled), outB)
+    for (f <- Seq("fix.ttl", "cfx.ttl", "msh.ttl", "umls_semantictypes.ttl"))
+      assert(Files.readAllBytes(Paths.get(s"$outB/$f")).toSeq ===
+        Files.readAllBytes(Paths.get(s"$outA/$f")).toSeq, f)
   }
 
   test("parallel per-SAB export is byte-identical to sequential") {
